@@ -5,7 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Core harness: session factory + fixture-table loaders (SURVEY §7.1 step 1).
   *
   * Scale design: all loaders return plain parquet scans so Catalyst keeps
-  * pushdown/pruning; nothing is cached or collected here. Shuffle partitions
+  * pushdown/pruning; nothing is cached or collected here. Their schema comes
+  * from one footer read on the Spark driver ([[parquet]]), so a table read
+  * schedules no Spark job; the scan itself is planned and run by the
+  * query that uses it. Shuffle partitions
   * are sized by the caller (`Verify`/`Bench` set them from SPARK_GRAFT_CPUS);
   * on a real cluster the same code runs with AQE coalescing partitions.
   */
@@ -73,8 +76,63 @@ object Engine {
     * [[eventsBetween]] and PlanShapeSpec). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     defensiveConfs(spark)
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(raw) else raw
+  }
+
+  /** `spark.read.parquet(paths)` with the schema taken from one footer read
+    * on the Spark driver, so building the DataFrame schedules no Spark job.
+    *
+    * Without a schema, Spark infers one by listing the files and reading a
+    * footer inside a one-task job (`SchemaMergeUtils.mergeSchemasInParallel`
+    * always runs `parallelize(...).collect()`), a fixed cost of tens of
+    * milliseconds per read that short queries and per-batch sinks pay on
+    * every call. This reads the footer Spark's non-merging inference would
+    * pick (`_common_metadata`, else `_metadata`, else the first data file in
+    * path order), converts it with Spark's own `readSchemaFromFooter` and a
+    * converter built from the session conf (so `nanosAsLong`, NTZ inference
+    * and binary-as-string apply as they would), and hands the result to
+    * `spark.read.schema`. Anything else is left to Spark unchanged: a
+    * missing path, a directory without a data file at its top level (empty,
+    * or partitioned into subdirectories) or `mergeSchema` all fall back to
+    * `spark.read.parquet`, with Spark's own errors. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = spark.sessionState.newHadoopConf()
+    def hidden(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    }
+    // a path's top-level files, or None where Spark must decide alone
+    def leaves(p: String): Option[Seq[FileStatus]] = {
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(conf)
+      if (!fs.exists(hp)) None
+      else {
+        val st = fs.getFileStatus(hp)
+        val entries = if (st.isFile) Seq(st) else fs.listStatus(hp).toSeq
+        if (entries.exists(e => e.isDirectory && !hidden(e))) None
+        else Some(entries.filter(_.isFile))
+      }
+    }
+    val perPath = paths.map(leaves)
+    val sorted =
+      if (perPath.contains(None)) Nil else perPath.flatten.flatten.sortBy(_.getPath.toString)
+    def named(n: String) = sorted.find(_.getPath.getName == n)
+    val data = sorted.filterNot(hidden)
+    if (data.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled)
+      spark.read.parquet(paths: _*)
+    else {
+      val src = named("_common_metadata").orElse(named("_metadata")).getOrElse(data.head)
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(src, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(src.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(paths: _*)
+    }
   }
 
   /** The two session confs the loaders depend on, set defensively for
@@ -123,7 +181,7 @@ object Engine {
     def micros(day: String): Long =
       java.time.LocalDate.parse(day).atStartOfDay
         .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val tsType = raw.schema.fields.find(_.name == "ts").map(_.dataType).getOrElse {
       throw new IllegalStateException(
         "events.ts fixture encoding shifted again: column `ts` is absent from " +

@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Returns null for texts with fewer than 3 tokens — exactly the docs the
   * composed pipeline drops (no shingles → no group), so downstream
-  * banding filters nulls instead of silently hashing empties.
+  * banding drops null signatures instead of silently hashing empties.
   */
 case class MinhashSigExpr(child: Expression) extends UnaryExpression {
 
@@ -63,7 +63,8 @@ object MinhashSigExpr {
     * `split(text, ' ')` keeps trailing empties (java split limit -1),
     * shingles are 3 consecutive tokens joined by ' ', each md5'd as UTF-8
     * bytes, and the 6 signature values are the lexicographic mins of the
-    * hex digest's disjoint 5-char slices. */
+    * hex digest's disjoint 5-char slices. `digest` resets the digest
+    * after each shingle, so there is no separate `reset`. */
   def compute(u: UTF8String): ArrayData = {
     val toks = u.toString.split(" ", -1)
     if (toks.length < 3) return null
@@ -72,7 +73,6 @@ object MinhashSigExpr {
     var i = 0
     while (i + 2 < toks.length) {
       val shingle = toks(i) + " " + toks(i + 1) + " " + toks(i + 2)
-      md.reset()
       val dig = md.digest(shingle.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val hex = new Array[Char](32)
       var b = 0

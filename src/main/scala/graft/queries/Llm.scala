@@ -25,7 +25,8 @@ object Llm {
   case class Doc(doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
 
   /** Dedup candidate set: every document plus a same-text copy under a
-    * shifted id — gives the exact-dedup operator real duplicates to kill. */
+    * shifted id — gives the exact-dedup operators real duplicates to kill
+    * (l1 builds the same multiset in one scan). */
   private def dupCandidates(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val d = documents(spark, dir).select($"doc_id", $"text", $"source")
@@ -33,11 +34,17 @@ object Llm {
   }
 
   /** L1: exact dedup — group by content hash, keep min id (hash-groupBy;
-    * at scale this is one shuffle on the 128-bit digest). */
+    * at scale this is one shuffle on the 128-bit digest). The candidate set
+    * is [[dupCandidates]]'s multiset built in one scan: each document's
+    * digest is computed once and carries both of its ids, so the corpus is
+    * read and hashed once instead of once per union branch. */
   def l1ExactDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    dupCandidates(spark, dir)
-      .groupBy(md5($"text".cast("binary")).as("content_key"))
+    documents(spark, dir)
+      .select(md5($"text".cast("binary")).as("content_key"),
+        array($"doc_id", $"doc_id" + 1000000).as("ids"))
+      .select($"content_key", explode($"ids").as("doc_id"))
+      .groupBy($"content_key")
       .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_copies"))
       .select($"keeper", $"n_copies")
   }
@@ -74,40 +81,43 @@ object Llm {
     // one digest per shingle; the 6 minhash functions are its 6 disjoint
     // 5-hex-char slices (standard cheap-family trick: 6x fewer hashes)
     val sh = sh0.withColumn("d", md5($"shingle".cast("binary")))
-    def h(i: Int): Column =
-      min(substring($"d", 1 + (i - 1) * 5, 5)).as(s"h$i")
-    bandedPairs(sh.groupBy($"id").agg(h(1), h(2), h(3), h(4), h(5), h(6)))
+    def h(i: Int): Column = min(substring($"d", 1 + (i - 1) * 5, 5))
+    bandedPairs(sh.groupBy($"id").agg(array((1 to 6).map(h): _*).as("sig")))
   }
 
   /** L2c: the same banded near-dedup with the signature phase fused into
-    * [[graft.functions.MinhashSigExpr]] — ONE map-only pass per document
-    * instead of a corpus-sized shingle explode plus a corpus-sized
-    * groupBy shuffle. Signatures are byte-identical to l2's, so the pairs
-    * hash-match the SAME oracle; MinhashExprSpec pins the equivalence
-    * per document and the plan test pins that the signature phase carries
-    * no Generate and no extra exchange. */
+    * [[graft.functions.MinhashSigExpr]]: a map-only projection instead of
+    * l2's corpus-sized shingle explode and corpus-sized groupBy shuffle.
+    * The plan scans the corpus once per candidate branch (originals and
+    * perturbed copies) on each side of the band join, 4 scans in all, and
+    * evaluates each candidate's signature once per scan. Signatures are
+    * byte-identical to l2's, so the pairs hash-match the SAME oracle;
+    * MinhashExprSpec pins the equivalence per document and the plan test
+    * pins that no Generate sits below the signature projection, that the
+    * signature is evaluated at most 4 times, and that it needs fewer
+    * exchanges than l2. */
   def l2cMinhashNative(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sigs = nearDupCandidates(spark, dir)
+    bandedPairs(nearDupCandidates(spark, dir)
       .filter($"id" % 5 === 0)
       .select($"id",
-        graft.functions.MinhashSigExpr.minhashSigNative(spark, $"text").as("sig"))
-      .filter($"sig".isNotNull)
-      .select($"id", element_at($"sig", 1).as("h1"), element_at($"sig", 2).as("h2"),
-        element_at($"sig", 3).as("h3"), element_at($"sig", 4).as("h4"),
-        element_at($"sig", 5).as("h5"), element_at($"sig", 6).as("h6"))
-    bandedPairs(sigs)
+        graft.functions.MinhashSigExpr.minhashSigNative(spark, $"text").as("sig")))
   }
 
-  /** Banded candidate pairing over per-doc signatures (id, h1..h6):
-    * 2 bands x 3 rows, pairs only within a band bucket — the
-    * 100 TB-safe shape (no all-pairs join). */
+  /** Banded candidate pairing over per-doc signatures (id, sig), `sig` the
+    * 6 minhash values: 2 bands x 3 rows, pairs only within a band bucket —
+    * the 100 TB-safe shape (no all-pairs join). Both band rows of a
+    * document come from one explode of a 2-element band array, so each
+    * side of the join reads the signature rows once (a union of one select
+    * per band would plan the whole signature subtree twice per side). A
+    * null signature (a text under 3 tokens in l2c) explodes to no rows. */
   private def bandedPairs(sigs: DataFrame): DataFrame = {
     import sigs.sparkSession.implicits._
-    val bands = sigs.select($"id",
-        md5(concat_ws("|", $"h1", $"h2", $"h3").cast("binary")).as("band"), lit(1).as("bi"))
-      .unionByName(sigs.select($"id",
-        md5(concat_ws("|", $"h4", $"h5", $"h6").cast("binary")).as("band"), lit(2).as("bi")))
+    def band(from: Int): Column =
+      md5(concat_ws("|", slice($"sig", from, 3)).cast("binary"))
+    val bands = sigs
+      .select($"id", posexplode(when($"sig".isNotNull, array(band(1), band(4)))))
+      .select($"id", $"col".as("band"), ($"pos" + 1).as("bi"))
     val b2 = bands.select($"id".as("b_id"), $"band", $"bi")
     bands.join(b2, Seq("band", "bi")).filter($"id" < $"b_id")
       .groupBy($"id".as("a_id"), $"b_id")
@@ -833,18 +843,20 @@ object Llm {
         expr("bit_count(bit_or(mask))").cast("long").as("n_slots"))
   }
 
-  /** L6: quality filtering — predicate stack over the L4 metrics. */
+  /** L6: quality filtering — the predicate stack over l4's token metrics,
+    * computed in one projection over one documents scan (no self-join back
+    * to documents for `lang` and `n_chars`). */
   def l6QualityFilter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    l4TextMetrics(spark, dir)
-      .join(documents(spark, dir).select($"doc_id", $"lang", $"n_chars"), Seq("doc_id"))
-      .withColumn("q_score",
+    val t = split($"text", " ")
+    documents(spark, dir)
+      .select($"doc_id",
         (when($"n_chars".between(100, 2000), 1L).otherwise(0L) +
-          when($"n_tokens" >= 10, 1L).otherwise(0L) +
-          when($"uniq_ratio" > 0.2, 1L).otherwise(0L) +
-          when($"lang".isInCollection(Seq("en", "de", "es", "fr")), 1L).otherwise(0L)))
+          when(size(t) >= 10, 1L).otherwise(0L) +
+          when(size(array_distinct(t)).cast("double") / size(t) > 0.2, 1L).otherwise(0L) +
+          when($"lang".isInCollection(Seq("en", "de", "es", "fr")), 1L).otherwise(0L))
+          .as("q_score"))
       .filter($"q_score" >= 3)
-      .select($"doc_id", $"q_score")
   }
 
   /** L18: repetition metrics — the Gopher-rule family of quality signals

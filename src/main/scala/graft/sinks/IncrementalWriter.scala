@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Engine
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,20 +74,22 @@ class IncrementalWriter(spark: SparkSession, path: String, keys: Seq[String],
       sys.error(s"could not commit key-index marker $markerFile")
   }
 
-  /** Distinct sink keys read the cheapest way available: the sidecar when
-    * it is provably in sync, else the key-projected sink scan (rebuilding
-    * the sidecar as a side effect when indexing is on). */
+  /** Sink keys read the cheapest way available: the sidecar when it is
+    * provably in sync, else the key-projected sink scan (rebuilding the
+    * sidecar as a side effect when indexing is on). The scan is not
+    * de-duplicated: it only feeds the build side of a left-anti join, whose
+    * result duplicates cannot change, and a `distinct()` would add a
+    * shuffle stage to every append. */
   private def probeKeys(): DataFrame = {
-    val sinkKeys = () =>
-      spark.read.parquet(path).select(keys.map(col): _*).distinct()
+    val sinkKeys = () => Engine.parquet(spark, path).select(keys.map(col): _*)
+    val indexKeys = () => Engine.parquet(spark, indexPath).select(keys.map(col): _*)
     if (!keyIndex) sinkKeys()
-    else if (readMarker().contains(dataFileCount))
-      spark.read.parquet(indexPath).select(keys.map(col): _*)
+    else if (readMarker().contains(dataFileCount)) indexKeys()
     else {
       // marker missing or behind (first use, or a crash between the data
       // write and the index write): rebuild from the source of truth
-      writeIndex(sinkKeys(), SaveMode.Overwrite)
-      spark.read.parquet(indexPath).select(keys.map(col): _*)
+      writeIndex(sinkKeys().distinct(), SaveMode.Overwrite)
+      indexKeys()
     }
   }
 
@@ -143,7 +146,7 @@ class IncrementalWriter(spark: SparkSession, path: String, keys: Seq[String],
         // doc). The index reads back ONLY the files this append moved —
         // |batch|-sized, never |sink|-sized.
         if (keyIndex) writeIndex(
-          spark.read.parquet(moved.toIndexedSeq: _*)
+          Engine.parquet(spark, moved.toIndexedSeq: _*)
             .select(keys.map(col): _*).distinct(),
           SaveMode.Append)
       }
@@ -163,7 +166,7 @@ object VerifiedWriter {
       keyCol: String, contentCol: String): (Long, Long, Long) = {
     df.write.mode(SaveMode.Overwrite).parquet(path)
     val src = df.select(col(keyCol), md5(col(contentCol).cast("binary")).as("md5_src"))
-    val snk = spark.read.parquet(path)
+    val snk = Engine.parquet(spark, path)
       .select(col(keyCol), md5(col(contentCol).cast("binary")).as("md5_sink"))
     val joined = src.join(snk, Seq(keyCol), "full_outer")
       .select(when(col("md5_src") === col("md5_sink"), 1L).otherwise(0L).as("ok"))

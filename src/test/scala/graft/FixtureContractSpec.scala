@@ -15,55 +15,7 @@ import org.apache.spark.sql.types.TimestampType
   * fails HERE, loudly, instead of downstream in whatever query happens to
   * externalize a timestamp first.
   */
-class FixtureContractSpec extends SparkSpec {
-
-  // Known instants (micros since epoch, UTC): 2024-01-10 00:00:00 and
-  // 2024-01-11 06:30:00.123456 — the second carries sub-second micros so a
-  // precision-losing normalization (e.g. a seconds round-trip) is caught.
-  private val us1 = 1704844800000000L
-  private val us2 = 1704954600123456L
-
-  private def writeDir(suffix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"fixture_$suffix").toString
-    d
-  }
-
-  /** events.parquet with ts as TIMESTAMP_NTZ (the current driver encoding:
-    * parquet TIMESTAMP(MICROS), isAdjustedToUTC=false). */
-  private def ntzDir: String = {
-    import spark.implicits._
-    val d = writeDir("ntz")
-    Seq((1L, us1, 10L), (2L, us2, 20L)).toDF("event_id", "us", "user_id")
-      .select($"event_id", timestamp_micros($"us").cast("timestamp_ntz").as("ts"), $"user_id")
-      .write.parquet(s"$d/events.parquet")
-    d
-  }
-
-  /** events.parquet with ts as TIMESTAMP (micros, adjusted to UTC). */
-  private def ltzDir: String = {
-    import spark.implicits._
-    val d = writeDir("ltz")
-    withConfs("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
-      Seq((1L, us1, 10L), (2L, us2, 20L)).toDF("event_id", "us", "user_id")
-        .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id")
-        .write.parquet(s"$d/events.parquet")
-    }
-    d
-  }
-
-  /** events.parquet with ts as a raw nano long. Spark cannot WRITE parquet
-    * TIMESTAMP(NANOS); under the session's nanosAsLong conf a NANOS column
-    * and a plain INT64 column are indistinguishable at read time (both
-    * arrive as LongType), so a plain long column exercises exactly the
-    * loader path the legacy encoding hits. */
-  private def nanosDir: String = {
-    import spark.implicits._
-    val d = writeDir("nanos")
-    Seq((1L, us1 * 1000L, 10L), (2L, us2 * 1000L, 20L))
-      .toDF("event_id", "ts", "user_id")
-      .write.parquet(s"$d/events.parquet")
-    d
-  }
+class FixtureContractSpec extends SparkSpec with EventsTsEncodings {
 
   private def loaded(dir: String): DataFrame = Engine.table(spark, dir, "events")
 
@@ -191,5 +143,58 @@ class FixtureContractSpec extends SparkSpec {
       .write.parquet(s"$d/events.parquet")
     val e = intercept[IllegalStateException](loaded(d).schema)
     assert(e.getMessage.contains("fixture encoding shifted"), e.getMessage)
+  }
+}
+
+/** A tiny events table in each `events.ts` parquet encoding the loader
+  * accepts, shared by the specs that pin the loader's contract. */
+trait EventsTsEncodings { this: SparkSpec =>
+
+  // Known instants (micros since epoch, UTC): 2024-01-10 00:00:00 and
+  // 2024-01-11 06:30:00.123456 — the second carries sub-second micros so a
+  // precision-losing normalization (e.g. a seconds round-trip) is caught.
+  val us1 = 1704844800000000L
+  val us2 = 1704954600123456L
+
+  def writeDir(suffix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"fixture_$suffix").toString
+    d
+  }
+
+  /** events.parquet with ts as TIMESTAMP_NTZ (the current testdata encoding:
+    * parquet TIMESTAMP(MICROS), isAdjustedToUTC=false). */
+  def ntzDir: String = {
+    import spark.implicits._
+    val d = writeDir("ntz")
+    Seq((1L, us1, 10L), (2L, us2, 20L)).toDF("event_id", "us", "user_id")
+      .select($"event_id", timestamp_micros($"us").cast("timestamp_ntz").as("ts"), $"user_id")
+      .write.parquet(s"$d/events.parquet")
+    d
+  }
+
+  /** events.parquet with ts as TIMESTAMP (micros, adjusted to UTC). */
+  def ltzDir: String = {
+    import spark.implicits._
+    val d = writeDir("ltz")
+    withConfs("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      Seq((1L, us1, 10L), (2L, us2, 20L)).toDF("event_id", "us", "user_id")
+        .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id")
+        .write.parquet(s"$d/events.parquet")
+    }
+    d
+  }
+
+  /** events.parquet with ts as a raw nano long. Spark cannot WRITE parquet
+    * TIMESTAMP(NANOS); under the session's nanosAsLong conf a NANOS column
+    * and a plain INT64 column are indistinguishable at read time (both
+    * arrive as LongType), so a plain long column exercises exactly the
+    * loader path the legacy encoding hits. */
+  def nanosDir: String = {
+    import spark.implicits._
+    val d = writeDir("nanos")
+    Seq((1L, us1 * 1000L, 10L), (2L, us2 * 1000L, 20L))
+      .toDF("event_id", "ts", "user_id")
+      .write.parquet(s"$d/events.parquet")
+    d
   }
 }

@@ -432,9 +432,34 @@ class PlanShapeSpec extends SparkSpec {
     // composed pays a shingle explode (Generate) + a signature groupBy
     // shuffle before banding; fused streams signatures out of the scan
     assert(composed.contains("Generate"), composed.take(3000))
-    assert(!fused.contains("Generate"), fused.take(3000))
+    // the only Generate allowed is the 2-row band explode ABOVE the
+    // signature projection; none may sit below it (no shingle explode)
+    val physical = graft.queries.Llm.l2cMinhashNative(spark, sfDir).queryExecution.sparkPlan
+    val computesSig = (p: org.apache.spark.sql.execution.SparkPlan) =>
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.MinhashSigExpr]))
+    val sigNodes = physical.collect { case p if computesSig(p) => p }
+    assert(sigNodes.nonEmpty, fused.take(3000))
+    for (n <- sigNodes)
+      assert(n.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }.isEmpty,
+        fused.take(3000))
+    // one evaluation per candidate branch per join side: 2 x 2 (the
+    // union-of-bands spelling planned 16, plus 8 echoes in scan filters)
+    val sigs = "minhash_sig_native\\(".r.findAllIn(fused).size
+    assert(sigs <= 4, s"$sigs signature evaluations:\n${fused.take(4000)}")
     val ex = (p: String) => "Exchange".r.findAllIn(p).size
     assert(ex(fused) < ex(composed), s"fused ${ex(fused)} vs composed ${ex(composed)}")
+  }
+
+  test("L6: quality filter is one projection over one documents scan, no join") {
+    val plan = planOf(Llm.l6QualityFilter(spark, sfDir))
+    assert("FileScan parquet".r.findAllIn(plan).size == 1, plan.take(3000))
+    assert(!plan.contains("Join"), plan.take(3000))
+  }
+
+  test("L1: exact dedup reads and hashes the corpus in one scan") {
+    val plan = planOf(Llm.l1ExactDedup(spark, sfDir))
+    assert("FileScan parquet".r.findAllIn(plan).size == 1, plan.take(3000))
+    assert("md5\\(".r.findAllIn(plan).size == 1, plan.take(3000))
   }
 
   test("L31: chunking is map-only — zero exchanges") {
