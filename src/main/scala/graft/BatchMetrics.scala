@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-job / per-stage wall breakdown for the batch queries whose recorded
@@ -34,19 +33,7 @@ object BatchMetrics {
       "j10_bloom_runtime_filter", "j11_salted_join",
       "g7_bfs_reachability", "g4_pagerank"))
     val samplesPerQuery = 3
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")  // pinned, see Engine.session
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.kb", classOf[graft.sources.KbCatalog].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     // one-time staging, untimed (mirrors Bench)
     queries.Relational.stageBucketedTables(spark, sfDir)

@@ -91,44 +91,38 @@ object Bench {
   private val wideWatchlist = Set("g4_pagerank", "l25_ranked_retrieval",
     "g7_bfs_reachability")
 
+  /** Untimed preparation of one fixture dir, shared with [[ScaleBench]]: a
+    * warm-up, so JVM/codegen/parquet-reader startup does not land on
+    * whichever query happens to sort first, then the one-time
+    * layout/staging costs. At production scale these are paid at ingest
+    * and amortized over every later query, so folding them into a single
+    * query's wall time would misstate steady-state cost. */
+  def prepare(spark: SparkSession, dir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id) AS s")
+      .write.format("noop").mode("overwrite").save()
+    queries.Relational.stageBucketedTables(spark, dir)
+    streaming.Streams.stageEvents(spark, dir, 4): Unit
+    queries.StreamingQ.stageSt7b(spark, dir): Unit
+    queries.StreamingQ.stageSt15(spark, dir): Unit
+    queries.Sources.stageDayPartitionedEvents(spark, dir): Unit
+    queries.Sources.stageFragmentedEvents(spark, dir): Unit
+    queries.StreamingQ.stageSt19(spark, dir): Unit
+    queries.Sources.stageBloomEvents(spark, dir): Unit
+  }
+
   def main(args: Array[String]): Unit = {
     // args override env (env vars don't reach a forked runMain through the
     // sbt client): [sfDir] [comma-separated query subset]
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     // the bench contract is local[32]-shaped (one executor thread per core);
-    // default to the machine's cores rather than a hard-coded count so the
-    // same main is honest on smaller boxes
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")  // pinned, see Engine.session
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.kb", classOf[graft.sources.KbCatalog].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // untimed warmup: JVM/codegen/parquet-reader startup otherwise lands on
-    // whichever query happens to sort first
-    spark.range(1000000).selectExpr("sum(id) AS s")
-      .write.format("noop").mode("overwrite").save()
+    // Engine.session defaults to the machine's cores, so the same main is
+    // honest on smaller boxes, and the bench runs on the session the specs
+    // check
+    val spark = Engine.session()
+    val cpus = spark.sparkContext.defaultParallelism
+    prepare(spark, sfDir)
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // untimed one-time layout/staging costs: at production scale these are
-    // paid at ingest and amortized over every later query, so folding them
-    // into a single query's wall time would misstate steady-state cost
-    queries.Relational.stageBucketedTables(spark, sfDir)
-    streaming.Streams.stageEvents(spark, sfDir, 4): Unit
-    queries.StreamingQ.stageSt7b(spark, sfDir): Unit
-    queries.StreamingQ.stageSt15(spark, sfDir): Unit
-    queries.Sources.stageDayPartitionedEvents(spark, sfDir): Unit
-    queries.Sources.stageFragmentedEvents(spark, sfDir): Unit
-    queries.StreamingQ.stageSt19(spark, sfDir): Unit
-    queries.Sources.stageBloomEvents(spark, sfDir): Unit
 
     // Best-of-N per query: a single timed run is vulnerable to one-off
     // JIT/GC/page-cache noise landing on whichever query runs at the wrong
@@ -264,10 +258,13 @@ object Bench {
   }
 }
 
-/** Shared JSON-emission helpers for the bench mains (Bench, ScaleBench):
-  * hand-rolled because the record format is a stable committed artifact and
-  * the build deliberately has no JSON library dependency. */
+/** Shared JSON-emission helpers for the tool mains (Bench, ScaleBench,
+  * Verify): hand-rolled because the record format is a stable committed
+  * artifact and the build deliberately has no JSON library dependency. */
 private[graft] object Jfmt {
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in an oracle SQL string would otherwise make
+    * Verify's `oracle_sql.json` unparseable. */
   def q(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"

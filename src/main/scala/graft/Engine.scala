@@ -8,24 +8,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown/pruning; nothing is cached or collected here. Their schema comes
   * from one footer read on the Spark driver ([[parquet]]), so a table read
   * schedules no Spark job; the scan itself is planned and run by the
-  * query that uses it. Shuffle partitions
-  * are sized by the caller (`Verify`/`Bench` set them from SPARK_GRAFT_CPUS);
-  * on a real cluster the same code runs with AQE coalescing partitions.
+  * query that uses it. Shuffle partitions default to the session's width
+  * ([[session]]); on a real cluster the same code runs with AQE coalescing
+  * partitions.
   */
 object Engine {
 
-  /** Local session with the settings every entry point shares.
+  /** Local session with the settings every entry point shares: the specs,
+    * `Verify`, `Bench` and every other main except the SpillProbe and
+    * ChaosRetry subprocess harnesses build their session here, so the
+    * bench measures the engine the specs check. `cpus` is the
+    * local width and the shuffle-partition count; it defaults to
+    * `SPARK_GRAFT_CPUS`, else the machine's available processors.
     *
     * EXPLICIT SESSION CONTRACT: `spark.sql.legacy.parquet.nanosAsLong=true`
     * is part of this engine's session configuration — a graft session reads
     * parquet TIMESTAMP(NANOS) columns as raw nano longs instead of failing
-    * (Spark has no native nanos type). [[table]] and [[eventsBetween]] also
-    * set it defensively for sessions built elsewhere. The fixture
+    * (Spark has no native nanos type). The fixture
     * `events.ts` column has shipped in several encodings over time (nanos,
     * micros-NTZ); [[table]] normalizes ALL of them to one session-visible
     * type — see its contract. The session timezone is pinned to UTC, which
-    * makes NTZ→LTZ casts instant-preserving. */
-  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+    * makes NTZ→LTZ casts instant-preserving; [[table]] and
+    * [[eventsBetween]] refuse a session whose timezone is not UTC. */
+  def session(cpus: String = sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -75,7 +81,7 @@ object Engine {
     * Catalyst still pushes `ts` range predicates to the scan (see
     * [[eventsBetween]] and PlanShapeSpec). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    defensiveConfs(spark)
+    requireUtc(spark)
     val raw = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(raw) else raw
   }
@@ -135,15 +141,22 @@ object Engine {
     }
   }
 
-  /** The two session confs the loaders depend on, set defensively for
-    * sessions built outside [[session]]. UTC matters for correctness, not
-    * just pushdown: [[normalizeEventTs]]'s NTZ→LTZ cast and
-    * [[eventsBetween]]'s cast literal are instant-preserving ONLY when the
-    * session timezone is UTC — a non-UTC external session would silently
-    * shift `events.ts` instants and the prune window by the TZ offset. */
-  private def defensiveConfs(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+  /** Refuses a session whose timezone is not UTC, and leaves the session
+    * as it is. UTC matters for correctness, not just pushdown:
+    * [[normalizeEventTs]]'s NTZ→LTZ cast and [[eventsBetween]]'s cast
+    * literal are instant-preserving ONLY when the session timezone is UTC —
+    * a non-UTC session would silently shift `events.ts` instants and the
+    * prune window by the TZ offset. Any zone that is always UTC (`UTC`,
+    * `Etc/UTC`, `Z`) passes. `nanosAsLong` needs no check: without it Spark
+    * fails loudly on a TIMESTAMP(NANOS) column. */
+  private def requireUtc(spark: SparkSession): Unit = {
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val zone = org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(tz)
+    if (zone.normalized() != java.time.ZoneOffset.UTC)
+      throw new IllegalStateException(
+        s"spark.sql.session.timeZone is '$tz', but the fixture loaders need " +
+          "UTC to keep events.ts instants and prune windows exact; build the " +
+          "session with Engine.session or set the conf to UTC")
   }
 
   /** The ONE normalization point for `events.ts` — shared by [[table]] and
@@ -177,7 +190,7 @@ object Engine {
     * come through here (or through a day-partitioned layout, see
     * Sources.s5PartitionPrunedRead). Bounds are UTC dates, [start, end). */
   def eventsBetween(spark: SparkSession, dir: String, startDay: String, endDay: String): DataFrame = {
-    defensiveConfs(spark)
+    requireUtc(spark)
     def micros(day: String): Long =
       java.time.LocalDate.parse(day).atStartOfDay
         .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L

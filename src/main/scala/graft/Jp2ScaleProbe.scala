@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.jp2.Jp2Codec
 
 /** Tile-parallel speedup of the ACTUAL l5h pipeline (streamed
@@ -41,13 +39,7 @@ object Jp2ScaleProbe {
     // single-thread whole-file decode (the per-file-parallel-only shape)
     val oneThread = best3 { Jp2Codec.decode(bytes): Unit }
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("jp2-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session("32")
     try {
       val distributed = best3 {
         graft.queries.Sources.jp2TiledChannelSums(spark, dir).collect(): Unit

@@ -18,9 +18,7 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
     Files.createDirectories(outDir)
-    val spark = Engine.session(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors.toString))
+    val spark = Engine.session()
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, dir)

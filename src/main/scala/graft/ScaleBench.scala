@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Paired scaling benchmark: measures the 10x-scaling query set at BOTH
   * sf0.1 and the ScaleUp (10x) dataset in ONE JVM with an IDENTICAL
   * per-side sampling policy — one untimed warm-up + three timed samples
@@ -65,35 +63,11 @@ object ScaleBench {
     val scaledDir = args.lift(1).getOrElse("/tmp/sf1")
     val outPath = args.lift(2).getOrElse("bench_sf1_paired.json")
     val only = args.lift(3).filter(_.trim.nonEmpty).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")  // pinned, see Engine.session
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.kb", classOf[graft.sources.KbCatalog].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Global untimed warm-up (JVM/codegen/parquet reader) + the one-time
-    // staging costs, paid for BOTH dirs before any measurement — same
-    // rationale as Bench: at production scale these are ingest-time costs.
-    spark.range(1000000).selectExpr("sum(id) AS s")
-      .write.format("noop").mode("overwrite").save()
-    for (dir <- Seq(baseDir, scaledDir)) {
-      queries.Relational.stageBucketedTables(spark, dir)
-      streaming.Streams.stageEvents(spark, dir, 4): Unit
-      queries.StreamingQ.stageSt7b(spark, dir): Unit
-      queries.StreamingQ.stageSt15(spark, dir): Unit
-      queries.Sources.stageDayPartitionedEvents(spark, dir): Unit
-      queries.Sources.stageFragmentedEvents(spark, dir): Unit
-      queries.StreamingQ.stageSt19(spark, dir): Unit
-      queries.Sources.stageBloomEvents(spark, dir): Unit
-    }
+    val spark = Engine.session()
+    val cpus = spark.sparkContext.defaultParallelism
+    // Bench's untimed warm-up and one-time staging, paid for BOTH dirs
+    // before any measurement
+    for (dir <- Seq(baseDir, scaledDir)) Bench.prepare(spark, dir)
 
     val fns = SparkEntry.queries
     var base = Vector.empty[(String, Seq[Double])]

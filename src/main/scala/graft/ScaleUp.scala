@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Materializes an sf1-SCALE benchmark dataset (10× sf0.1) for the scaling
@@ -44,17 +44,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(Copies)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "true")  // pinned, see Engine.session
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     import spark.implicits._
 
     def replicate(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 
@@ -34,19 +33,7 @@ object StreamMetrics {
       "st3_foreachbatch_idempotent", "st12_statestore_read",
       "st13_transform_with_state", "st15_streaming_curation",
       "st19_outer_join"))
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")  // pinned, see Engine.session
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.kb", classOf[graft.sources.KbCatalog].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     // listener sees every stream the session starts, including the ones a
     // query runs internally; progress arrives asynchronously on the

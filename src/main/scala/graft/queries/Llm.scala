@@ -425,8 +425,7 @@ object Llm {
     val build = graft.queries.Nested.aqeOffSession(spark)
     import build.implicits._
     build.conf.set("spark.sql.shuffle.partitions",
-      graft.queries.Nested.derivedParts(
-        build, dir, Seq("documents"), "SPARK_GRAFT_CC_PARTS").toString)
+      graft.queries.Nested.derivedParts(build, dir, Seq("documents")).toString)
     // r20 (guide §4.1): consume the pairs through the FUSED native
     // signature path — MinhashExprSpec pins l2c's signatures byte-identical
     // to l2's, so the pair set (and thus the clustering) is unchanged while

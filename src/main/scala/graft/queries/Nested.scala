@@ -139,6 +139,53 @@ object Nested {
       b
     })
 
+  /** Shuffle width for the AQE-off g4 build, derived from the source
+    * footprint (guide §2: make partitioning scale-adaptive — derive it
+    * from input size — instead of a constant tuned for either local mode
+    * or the cluster). The static build deliberately runs without AQE, so
+    * nothing coalesces its exchanges at runtime: inheriting the session's
+    * core-count layout (32 at the bench) makes every one of the ~6
+    * bounded-round exchanges a 32-task scatter of a few-MB edge set —
+    * pure scheduling windows, the r20 driver measured g4 at 3.6-11.2 s
+    * under load at 32c vs 1.6 s at 8c on identical code. One partition
+    * per 4 MB of source parquet (the bounded-round build makes ~6 passes
+    * over the per-round edge shuffle, so the sweet spot sits well below
+    * the usual scan-sized 64-128 MB target: an r21 quiet-host sweep
+    * measured width 4 and 16 tied at ~2.0-3.0 s and width 32 worst at
+    * 3.3-4.9 s, same methodology, two interleaved reps), with the
+    * session's configured parallelism as the ceiling: a production
+    * deployment raises spark.sql.shuffle.partitions and the derivation
+    * follows the data up to that ceiling; the fixture derives 4 and stops
+    * paying 32-way task scatter per round. Integer ranks are
+    * order-independent sums, so the width never changes the result (g4
+    * stays oracle-hash-green). */
+  private def buildParts(build: SparkSession, dir: String): Int =
+    derivedParts(build, dir, Seq("orders", "lineitem"))
+
+  /** The g4 derivation, generalized (r21) so the other AQE-off iterative
+    * builds (l17/l49's pair-graph loops) size their static shuffles
+    * from THEIR source footprint: one partition per 4 MB of the named
+    * source parquet. The parallelism ceiling
+    * reads the [[ceilingKey]] the child session recorded at creation —
+    * never the child's live shuffle.partitions, which every build
+    * overwrites (using it would clamp g4 to whatever width the previous
+    * pair-graph build derived; caught via a width-1 g4 plan dump when
+    * l17 ran first in one JVM). A session without the key falls back to
+    * its own conf. */
+  private[graft] def derivedParts(build: SparkSession, dir: String,
+      tables: Seq[String]): Int = {
+    val hconf = build.sparkContext.hadoopConfiguration
+    val bytes = tables.map { t =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
+      val fs = p.getFileSystem(hconf)
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    }.sum
+    val ceiling = build.conf.getOption(ceilingKey).map(_.toInt)
+      .getOrElse(build.sessionState.conf.numShufflePartitions)
+    math.max(1, math.min(ceiling,
+      math.ceil(bytes / (4.0 * 1024 * 1024)).toInt))
+  }
+
   /** Parameterized body of G4: a deep run (rounds >= 4) exercises the
     * every-4th-round localCheckpoint cadence that the registered 3-round
     * query intentionally never pays (see GraphDepthSpec). */
@@ -174,80 +221,12 @@ object Nested {
     // call). The returned frame stays on the child session — its final
     // TakeOrderedAndProject is AQE-indifferent, and callers only write/
     // collect it.
-    pageRankOn(aqeOffSession(spark), dir, rounds)
-  }
-
-  /** pageRank body with the AQE-off build session injected — split out so
-    * [[graft.G4Compare]] can A/B the cached-child-session scope against the
-    * rejected r12 session-global toggle in ONE JVM with interleaved runs
-    * (same JIT/page-cache state for both variants). Production path is
-    * always [[pageRank]] → [[aqeOffSession]]. */
-  /** Shuffle width for the AQE-off g4 build, derived from the source
-    * footprint (guide §2: make partitioning scale-adaptive — derive it
-    * from input size — instead of a constant tuned for either local mode
-    * or the cluster). The static build deliberately runs without AQE, so
-    * nothing coalesces its exchanges at runtime: inheriting the session's
-    * core-count layout (32 at the bench) makes every one of the ~6
-    * bounded-round exchanges a 32-task scatter of a few-MB edge set —
-    * pure scheduling windows, the r20 driver measured g4 at 3.6-11.2 s
-    * under load at 32c vs 1.6 s at 8c on identical code. One partition
-    * per 4 MB of source parquet (the bounded-round build makes ~6 passes
-    * over the per-round edge shuffle, so the sweet spot sits well below
-    * the usual scan-sized 64-128 MB target: an r21 quiet-host sweep
-    * measured width 4 and 16 tied at ~2.0-3.0 s and width 32 worst at
-    * 3.3-4.9 s, same methodology, two interleaved reps), with the
-    * session's configured parallelism as the ceiling: a production
-    * deployment raises spark.sql.shuffle.partitions and the derivation
-    * follows the data up to that ceiling; the fixture derives 4 and stops
-    * paying 32-way task scatter per round. Integer ranks are
-    * order-independent sums, so the width never changes the result (g4
-    * stays oracle-hash-green). `SPARK_GRAFT_G4_PARTS` overrides for
-    * sweeps, failing fast on invalid values like the stateParts knob.
-    */
-  private def buildParts(build: SparkSession, dir: String): Int =
-    derivedParts(build, dir, Seq("orders", "lineitem"), "SPARK_GRAFT_G4_PARTS")
-
-  /** The g4 derivation, generalized (r21) so the other AQE-off iterative
-    * builds (l17/l49's pair-graph loops) size their static shuffles
-    * from THEIR source footprint: one partition per 4 MB of the named
-    * source parquet, `envVar` overriding for sweeps (fail-fast on
-    * invalid values, the stateParts contract). The parallelism ceiling
-    * reads the [[ceilingKey]] the child session recorded at creation —
-    * never the child's live shuffle.partitions, which every build
-    * overwrites (using it would clamp g4 to whatever width the previous
-    * pair-graph build derived; caught via a width-1 g4 plan dump when
-    * l17 ran first in one JVM). Sessions without the key (specs,
-    * G4Compare's scope variants) fall back to their own conf, which
-    * nothing mutates there. */
-  private[graft] def derivedParts(build: SparkSession, dir: String,
-      tables: Seq[String], envVar: String): Int = {
-    sys.env.get(envVar).map(_.trim).filter(_.nonEmpty) match {
-      case Some(s) => // sweep override, same contract as SPARK_GRAFT_STATE_PARTS
-        val n = scala.util.Try(s.toInt).getOrElse(-1)
-        require(n > 0,
-          s"$envVar must be a positive integer, got '$s'")
-        n
-      case None =>
-        val hconf = build.sparkContext.hadoopConfiguration
-        val bytes = tables.map { t =>
-          val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-          val fs = p.getFileSystem(hconf)
-          if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-        }.sum
-        val ceiling = build.conf.getOption(ceilingKey).map(_.toInt)
-          .getOrElse(build.sessionState.conf.numShufflePartitions)
-        math.max(1, math.min(ceiling,
-          math.ceil(bytes / (4.0 * 1024 * 1024)).toInt))
-    }
-  }
-
-  private[graft] def pageRankOn(
-      build: SparkSession, dir: String, rounds: Int): DataFrame = {
+    val build = aqeOffSession(spark)
     import build.implicits._
-    // Sized per build; the child session is g4-dedicated, so the setting
-    // simply stays until the next build re-derives it (concurrent builds
-    // against DIFFERENT dirs could race the conf — none exist: bench,
-    // Verify and the specs all build sequentially per session).
+    // Sized per build on the child session that g4, l17 and l49 share, so
+    // the setting stays until the next build re-derives it: builds on one
+    // child must run sequentially (bench, Verify and the specs do), or one
+    // build's width leaks into another's plan.
     build.conf.set("spark.sql.shuffle.partitions",
       buildParts(build, dir).toString)
     val pr = {
@@ -410,7 +389,7 @@ object Nested {
       // tiers): the edge set is the query's big frame and is re-read only
       // once per round, sequentially — page cache makes the re-reads free,
       // so sf0.1 steady state is equal-or-better (2.8-3.4 vs 3.2-3.6 s in
-      // the RepeatProbe A/B), while at sf10 keeping ~GBs of edge rows out
+      // the r14 same-JVM A/B, BATCH_METRICS_r14.md), while at sf10 keeping ~GBs of edge rows out
       // of the heap cuts per-run GC from 1.2-6.9 s to 0.2-0.7 s — GC that
       // would otherwise stall every other query sharing the executors.
       // The tiny per-round frontiers stay at the in-memory default.

@@ -296,8 +296,7 @@ object StreamingQ {
     // retunes partitions to real key cardinality (the store-commit vs
     // addBatch-parallelism tradeoff flips once batches carry real data —
     // st19's measured optimum is 4 for exactly that reason).
-    Streams.withStateProvider(spark, "hdfs") {
-    Streams.withShufflePartitions(spark, Streams.stateParts(2)) {
+    Streams.withShufflePartitions(spark, 2) {
       val q = purchases.join(clicks,
           $"user_id" === $"c_user" &&
             $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts")
@@ -312,7 +311,7 @@ object StreamingQ {
         }
         .start()
       q.awaitTermination()
-    } }
+    }
     spark.read.parquet(out)
   }
 
@@ -416,11 +415,8 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st13_out").toString
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try Streams.withShufflePartitions(spark, 4) {
+    Streams.withRocksDbStateStore(spark) {
+    Streams.withShufflePartitions(spark, 4) {
       // a RocksDB instance per state partition per batch, and each instance
       // costs an open/commit cycle (~0.5 s of native setup at any data
       // size): size to the key cardinality (~100 users at fixture SF), not
@@ -444,10 +440,7 @@ object StreamingQ {
         }
         .start()
       q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    } }
     spark.read.parquet(out).groupBy($"user_id")
       .agg(max($"n_events").as("n_events"), max($"max_value").as("max_value"))
   }
@@ -684,7 +677,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = stageSt21(spark, dir)
     val sink = java.nio.file.Files.createTempDirectory("st21_sink").toString
-    Streams.withShufflePartitions(spark, Streams.stateParts(8)) {
+    Streams.withShufflePartitions(spark, 8) {
       val q = spark.readStream
         .schema(spark.read.parquet(staged).schema)
         .option("maxFilesPerTrigger", 1)
@@ -892,11 +885,8 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st18_out").toString
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try Streams.withShufflePartitions(spark, 4) {
+    Streams.withRocksDbStateStore(spark) {
+    Streams.withShufflePartitions(spark, 4) {
       val q = Streams.eventsStream(spark, staged, schema, 2)
         .select(($"user_id" % 4).cast("long").as("shard"),
           $"user_id".cast("long").as("item"))
@@ -920,10 +910,7 @@ object StreamingQ {
         }
         .start()
       q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    } }
     // final sketch PER SHARD = that shard's latest emission: a shard with
     // no input rows in the final micro-batch emits nothing there, so
     // filtering to the global max batch_id would silently drop its entire
@@ -1019,8 +1006,7 @@ object StreamingQ {
     // Measured both directions in r9: 2 partitions is SLOWER (3.8 s vs
     // 2.4 s best-of — commit savings lose to halved addBatch parallelism),
     // so 4 is the measured optimum, not just a guess.
-    Streams.withStateProvider(spark, "hdfs") {
-    Streams.withShufflePartitions(spark, Streams.stateParts(4)) {
+    Streams.withShufflePartitions(spark, 4) {
       val q = purchases.join(clicks,
           $"user_id" === $"c_user" &&
             $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
@@ -1036,7 +1022,7 @@ object StreamingQ {
         }
         .start()
       q.awaitTermination()
-    } }
+    }
     spark.read.parquet(out).filter($"user_id" < 999999000L)
   }
 
@@ -1068,8 +1054,7 @@ object StreamingQ {
     val out = java.nio.file.Files.createTempDirectory("st22_out").toString
     // 4 state partitions — the st19 sizing rationale (four store commits
     // per partition per micro-batch on an interval join)
-    Streams.withStateProvider(spark, "hdfs") {
-    Streams.withShufflePartitions(spark, Streams.stateParts(4)) {
+    Streams.withShufflePartitions(spark, 4) {
       val q = purchases.join(clicks,
           $"user_id" === $"c_user" &&
             $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
@@ -1085,7 +1070,7 @@ object StreamingQ {
         }
         .start()
       q.awaitTermination()
-    } }
+    }
     spark.read.parquet(out).filter($"uid" < 999999000L)
   }
 

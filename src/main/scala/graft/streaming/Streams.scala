@@ -130,53 +130,18 @@ object Streams {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(staged)
 
-  /** State-partition count for a stateful streaming query: `default` is
-    * the committed fixture-scale MEASURED optimum (each query documents its
-    * own sweep), `SPARK_GRAFT_STATE_PARTS` overrides it for sweeps and for
-    * production-sized key spaces where the commit-cost/parallelism tradeoff
-    * flips — the r20 optimization-round knob that keeps the scale-dependent
-    * setting parameterised instead of hard-coded to either environment.
-    * Any set-but-invalid value (non-numeric, zero, negative) fails fast
-    * with a message naming the env var — a mistyped sweep must never
-    * silently run at the default and read as a measured data point. */
-  def stateParts(default: Int): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.trim).filter(_.nonEmpty) match {
-      case None => default
-      case Some(s) =>
-        val n = scala.util.Try(s.toInt).getOrElse(-1)
-        require(n > 0,
-          s"SPARK_GRAFT_STATE_PARTS must be a positive integer, got '$s'")
-        n
-    }
-
-  /** Run `f` with the state-store provider for any stream started inside
-    * overridden, then restore. `default` is the query's committed
-    * fixture-scale measured choice ("hdfs" | "rocksdb" |
-    * "rocksdb-changelog" — RocksDB with changelog checkpointing, where a
-    * per-batch commit writes only the batch's change set and snapshot
-    * upload moves to the background maintenance thread);
-    * `SPARK_GRAFT_STATE_PROVIDER` overrides it for sweeps and for
-    * production deployments whose state volume flips the tradeoff — the
-    * same parameterisation contract as [[stateParts]], including fail-fast
-    * on an unknown value. */
-  def withStateProvider[T](spark: SparkSession, default: String)(f: => T): T = {
-    val choice = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map(_.trim)
-      .filter(_.nonEmpty).getOrElse(default)
-    val confs: Map[String, String] = choice match {
-      case "hdfs" => Map.empty
-      case "rocksdb" | "rocksdb-changelog" => Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          (choice == "rocksdb-changelog").toString)
-      case other => throw new IllegalArgumentException(
-        s"unknown state-store provider '$other' (hdfs | rocksdb | rocksdb-changelog)")
-    }
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+  /** Run `f` with streams started inside it on the RocksDB state store,
+    * then restore the provider the session had (unset if it had none).
+    * The `transformWithState` queries need it: their typed state lives on
+    * RocksDB. */
+  def withRocksDbStateStore[T](spark: SparkSession)(f: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 

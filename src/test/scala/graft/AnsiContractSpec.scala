@@ -6,7 +6,8 @@ package graft
   * DuckDB, which has ANSI error semantics: bigint overflow, integer
   * division by zero, and malformed casts ERROR rather than wrapping or
   * yielding NULL. The engine therefore pins `spark.sql.ansi.enabled=true`
-  * in every session builder (Engine.session and the tool mains) instead of
+  * in Engine.session, which every spec and tool main builds its session
+  * through (and in the SpillProbe/ChaosRetry harness builders), instead of
   * inheriting Spark 4's default — a future Spark default flip, or an
   * ambient spark-defaults.conf on a real cluster, must not silently swap
   * those errors for non-ANSI wrap/NULL semantics and open a silent

@@ -59,29 +59,28 @@ class FixtureContractSpec extends SparkSpec with EventsTsEncodings {
     }
   }
 
-  test("a non-UTC session is repinned to UTC, so instants never shift") {
+  test("a non-UTC session is refused, so instants never shift") {
     // The NTZ->LTZ normalization cast and eventsBetween's cast literal are
     // instant-preserving ONLY under a UTC session timezone. A session built
     // OUTSIDE Engine.session (e.g. a user's own builder) may carry any
-    // zone; table/eventsBetween must defensively repin it, or every
-    // events.ts instant and prune window silently shifts by the offset.
+    // zone; table/eventsBetween must refuse it, naming the conf, and must
+    // not rewrite the caller's session to get round it.
     val tzConf = "spark.sql.session.timeZone"
     val prev = spark.conf.get(tzConf)
     try {
       for ((d, tag) <- Seq(ntzDir -> "ntz", ltzDir -> "ltz", nanosDir -> "nanos")) {
         spark.conf.set(tzConf, "America/New_York")
-        val got = loaded(d)
-          .select(col("event_id"), unix_micros(col("ts")).as("us"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(got == Map(1L -> us1, 2L -> us2),
-          s"events.ts instants shifted under a non-UTC session ($tag): $got")
-        assert(spark.conf.get(tzConf) == "UTC",
-          "Engine.table must repin the session timezone to UTC")
-        spark.conf.set(tzConf, "America/New_York")
-        val ids = Engine.eventsBetween(spark, d, "2024-01-10", "2024-01-11")
-          .select("event_id").collect().map(_.getLong(0)).toSet
-        assert(ids == Set(1L),
-          s"eventsBetween mispruned under a non-UTC session ($tag): $ids")
+        val loads = Seq[(String, () => Any)](
+          "Engine.table" -> (() => loaded(d)),
+          "Engine.eventsBetween" ->
+            (() => Engine.eventsBetween(spark, d, "2024-01-10", "2024-01-11")))
+        for ((loader, load) <- loads) {
+          val e = intercept[IllegalStateException](load())
+          assert(e.getMessage.contains(tzConf),
+            s"$loader ($tag) must name $tzConf: ${e.getMessage}")
+          assert(spark.conf.get(tzConf) == "America/New_York",
+            s"$loader ($tag) must leave the session timezone as it found it")
+        }
       }
     } finally spark.conf.set(tzConf, prev)
   }
