@@ -1,5 +1,6 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Core harness: session factory + fixture-table loaders (SURVEY §7.1 step 1).
@@ -10,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * schedules no Spark job; the scan itself is planned and run by the
   * query that uses it. Shuffle partitions default to the session's width
   * ([[session]]); on a real cluster the same code runs with AQE coalescing
-  * partitions.
+  * partitions. A query that needs other settings runs on a child session
+  * from [[scoped]]; no query changes the session it is given.
   */
 object Engine {
 
@@ -54,6 +56,33 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A child session of `spark` carrying `settings`, for a query that needs
+    * its own planner settings (a stream's state width, an AQE-off build)
+    * without touching the caller's session. The child is made with
+    * `newSession()` and configured before anyone else can see it, and it
+    * is never changed afterwards; this loop is the only place in the
+    * engine that writes a session's config at runtime.
+    *
+    * Children are cached, weakly keyed on the parent and then keyed by the
+    * settings, so a repeated query reuses its child (a throwaway
+    * `newSession()` per call made g4 about 45% slower) and a discarded
+    * parent does not pin its children. A child shares the parent's
+    * SparkContext, but its SQL config is built from the SparkConf, not
+    * from the parent's runtime config: what [[session]] pins (ANSI, UTC,
+    * `nanosAsLong`, the `kb` catalog) rides the SparkConf and reaches the
+    * child, while a runtime `conf.set` on the parent does not. */
+  def scoped(spark: SparkSession, settings: (String, String)*): SparkSession =
+    children
+      .computeIfAbsent(spark, _ => new ConcurrentHashMap[Map[String, String], SparkSession]())
+      .computeIfAbsent(settings.toMap, { s =>
+        val child = spark.newSession()
+        s.foreach { case (k, v) => child.conf.set(k, v) }
+        child
+      })
+
+  private val children = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Map[String, String], SparkSession]]())
 
   /** Parquet scan for one fixture table under `dir` (see TESTDATA.md).
     *

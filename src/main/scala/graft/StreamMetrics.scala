@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 
@@ -35,56 +36,58 @@ object StreamMetrics {
       "st19_outer_join"))
     val spark = Engine.session()
 
-    // listener sees every stream the session starts, including the ones a
-    // query runs internally; progress arrives asynchronously on the
-    // listener bus, so events are attributed to a run by runId (recorded at
-    // onQueryStarted) and a phase drains by WAITING for each of its runIds'
-    // terminated event — the bus delivers in post order, so once terminated
-    // arrives every progress event of that run is already in. This replaces
-    // the earlier fixed sleep, which on a loaded machine could attribute
-    // late warm-up events to the measured run or drop trailing ones.
+    // Stateful queries start their streams on child sessions
+    // (`Streams.stateSession`), and a listener added with
+    // `spark.streams.addListener` hears only the caller session's own
+    // queries. Every session's streaming events are also posted to the
+    // SparkContext's listener bus, so one SparkListener there sees every
+    // stream a query starts, on any session. Events arrive asynchronously
+    // and are attributed to a run by runId; a phase drains once the
+    // listener has seen the end of a sentinel job submitted after the
+    // query returned: the bus delivers in post order, and each stream
+    // posts its terminated event before `awaitTermination` returns, so by
+    // then every event of the phase's runs is in.
     val lock = new Object
     val started = mutable.LinkedHashSet.empty[java.util.UUID]
     val progressByRun = mutable.Map.empty[java.util.UUID, mutable.ArrayBuffer[String]]
-    val terminated = mutable.Set.empty[java.util.UUID]
-    // runIds whose phase already drained: late events from a query that
-    // blew the 30 s drain deadline must not re-create a buffer entry that
-    // no future phase will ever read (a slow leak attributed to no one)
-    val retired = mutable.Set.empty[java.util.UUID]
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        lock.synchronized { started += e.runId; () }
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        lock.synchronized {
-          if (!retired.contains(e.progress.runId)) {
-            progressByRun.getOrElseUpdate(e.progress.runId,
-              mutable.ArrayBuffer.empty[String]) += e.progress.json
+    val flushGroup = "stream-metrics-flush"
+    val flushJobs = mutable.Set.empty[Int]
+    var flushed = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: StreamingQueryListener.QueryStartedEvent =>
+          lock.synchronized { started += s.runId; () }
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          lock.synchronized {
+            progressByRun.getOrElseUpdate(p.progress.runId,
+              mutable.ArrayBuffer.empty[String]) += p.progress.json
+            ()
           }
-          ()
-        }
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == flushGroup)
+          lock.synchronized { flushJobs += e.jobId; () }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         lock.synchronized {
-          if (retired.contains(e.runId)) retired -= e.runId // late finisher: done
-          else terminated += e.runId
-          lock.notifyAll()
+          if (flushJobs.remove(e.jobId)) { flushed = true; lock.notifyAll() }
         }
     }
-    spark.streams.addListener(listener)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
 
-    def drain(): Seq[String] = lock.synchronized {
-      val phaseRuns = started.toList
-      val deadlineNs = System.nanoTime() + 30L * 1000000000L
-      while (!phaseRuns.forall(terminated.contains) && System.nanoTime() < deadlineNs)
-        lock.wait(200)
-      val out = phaseRuns.flatMap(r => progressByRun.getOrElse(r, Nil))
-      started.clear()
-      phaseRuns.foreach { r =>
-        progressByRun -= r
-        // a run that hasn't terminated by the deadline is retired: its
-        // late events are dropped at the listener instead of accumulating
-        if (!terminated.remove(r)) retired += r
+    def drain(): Seq[String] = {
+      sc.setJobGroup(flushGroup, "listener flush", false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      lock.synchronized {
+        val deadlineNs = System.nanoTime() + 30L * 1000000000L
+        while (!flushed && System.nanoTime() < deadlineNs) lock.wait(200)
+        val out = started.toList.flatMap(r => progressByRun.getOrElse(r, Nil))
+        started.clear()
+        progressByRun.clear()
+        flushed = false
+        out
       }
-      out
     }
 
     val sections = names.map { name =>

@@ -417,15 +417,15 @@ object Llm {
     * so plans don't grow unboundedly — the standard Pregel-style loop at
     * any scale. Oracle: DuckDB recursive CTE over the same pairs. */
   def l17DedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // r21 (guide §1.2/§2): run the whole pair-graph build on the shared
-    // AQE-off child session at a source-derived width — the g4 design
+    // r21 (guide §1.2/§2): run the whole pair-graph build on an AQE-off
+    // child session at a width derived from `documents` — the g4 design
     // (see g8's note; measured before: 45 AQE stage-submission jobs,
-    // 1.3 s driver gap at sf0.1). Min-label propagation is integer min
-    // algebra: width never changes the labels (oracle-green).
-    val build = graft.queries.Nested.aqeOffSession(spark)
+    // 1.3 s driver gap at sf0.1). The child is configured once, when it is
+    // created, so the returned labels plan at that width whenever the
+    // caller acts on them. Min-label propagation is integer min algebra:
+    // width never changes the labels (oracle-green).
+    val build = graft.queries.Nested.staticBuild(spark, dir, Seq("documents"))
     import build.implicits._
-    build.conf.set("spark.sql.shuffle.partitions",
-      graft.queries.Nested.derivedParts(build, dir, Seq("documents")).toString)
     // r20 (guide §4.1): consume the pairs through the FUSED native
     // signature path — MinhashExprSpec pins l2c's signatures byte-identical
     // to l2's, so the pair set (and thus the clustering) is unchanged while
@@ -1569,9 +1569,9 @@ object Llm {
   def l49ClusterCanonical(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val clusters = l17DedupClusters(spark, dir) // (doc_id, cluster_id)
-    // r21: l17 returns a child-session frame (its AQE-off build, see
-    // l17's note); the scoring pass and the windows join against it, so
-    // they build on the SAME session — never a cross-session plan mix
+    // r21: l17 returns a frame on its AQE-off child session (see l17's
+    // note); the scoring pass and the windows join against it, so they
+    // build on the SAME child, at its width — never a cross-session plan mix
     val quality = nearDupCandidates(clusters.sparkSession, dir)
       .select($"id",
         size(array_distinct(Text.tokens($"text"))).cast("long").as("n_uniq"))

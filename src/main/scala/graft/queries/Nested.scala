@@ -109,42 +109,22 @@ object Nested {
   def g4PageRank(spark: SparkSession, dir: String): DataFrame =
     pageRank(spark, dir, rounds = 3)
 
-  /** One AQE-off child session per caller session, created lazily and
-    * reused across pageRank calls (see the scope discussion in
-    * [[pageRank]]). Keyed WEAKLY on the caller (r13 ADVICE) so a
-    * discarded caller session — e.g. per-test sessions in a long-lived
-    * service JVM — doesn't pin its child SessionState forever; the child
-    * shares the SparkContext and holds no reference back to the caller,
-    * so the weak key is actually collectible. `synchronizedMap`'s
-    * `computeIfAbsent` is atomic, matching the old ConcurrentHashMap
-    * contract. Note the child's SQLConf is built FRESH from the shared
-    * SparkConf (`newSession()` copies no runtime SessionState): runtime
-    * `conf.set` on the caller — whether before or after the first
-    * pageRank call — never propagates to g4 builds. Fine for this repo's
-    * tools, which fix conf at builder time, and pinned semantics (ANSI
-    * etc.) ride the SparkConf, which the child always inherits. */
-  private val buildSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-  /** The caller's parallelism, pinned on the child at creation so every
-    * [[derivedParts]] call sees the same ceiling no matter which build
-    * mutated the child's live shuffle.partitions last. */
-  private[graft] val ceilingKey = "graft.build.parallelismCeiling"
-  private[graft] def aqeOffSession(spark: SparkSession): SparkSession =
-    buildSessions.computeIfAbsent(spark, s => {
-      val b = s.newSession()
-      b.conf.set("spark.sql.adaptive.enabled", "false")
-      b.conf.set(ceilingKey,
-        s.sessionState.conf.numShufflePartitions.toString)
-      b
-    })
+  /** The session an iterative build plans on: a child of `spark` (see
+    * [[graft.Engine.scoped]]) with AQE off and the shuffle width
+    * [[derivedParts]] derives from `tables`. g4 and l17 (and l49 through
+    * l17) build on it; see [[pageRank]] for why AQE is off. */
+  private[graft] def staticBuild(spark: SparkSession, dir: String,
+      tables: Seq[String]): SparkSession =
+    graft.Engine.scoped(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> derivedParts(spark, dir, tables).toString)
 
-  /** Shuffle width for the AQE-off g4 build, derived from the source
-    * footprint (guide §2: make partitioning scale-adaptive — derive it
-    * from input size — instead of a constant tuned for either local mode
-    * or the cluster). The static build deliberately runs without AQE, so
-    * nothing coalesces its exchanges at runtime: inheriting the session's
-    * core-count layout (32 at the bench) makes every one of the ~6
+  /** Shuffle width for an AQE-off iterative build (g4, and l17/l49's
+    * pair-graph loops), derived from the footprint of its source tables
+    * (guide §2: make partitioning scale-adaptive — derive it from input
+    * size — instead of a constant tuned for either local mode or the
+    * cluster). The static build deliberately runs without AQE, so nothing
+    * coalesces its exchanges at runtime: inheriting the session's
+    * core-count layout (32 at the bench) makes every one of g4's ~6
     * bounded-round exchanges a 32-task scatter of a few-MB edge set —
     * pure scheduling windows, the r20 driver measured g4 at 3.6-11.2 s
     * under load at 32c vs 1.6 s at 8c on identical code. One partition
@@ -153,36 +133,21 @@ object Nested {
     * the usual scan-sized 64-128 MB target: an r21 quiet-host sweep
     * measured width 4 and 16 tied at ~2.0-3.0 s and width 32 worst at
     * 3.3-4.9 s, same methodology, two interleaved reps), with the
-    * session's configured parallelism as the ceiling: a production
-    * deployment raises spark.sql.shuffle.partitions and the derivation
-    * follows the data up to that ceiling; the fixture derives 4 and stops
-    * paying 32-way task scatter per round. Integer ranks are
-    * order-independent sums, so the width never changes the result (g4
-    * stays oracle-hash-green). */
-  private def buildParts(build: SparkSession, dir: String): Int =
-    derivedParts(build, dir, Seq("orders", "lineitem"))
-
-  /** The g4 derivation, generalized (r21) so the other AQE-off iterative
-    * builds (l17/l49's pair-graph loops) size their static shuffles
-    * from THEIR source footprint: one partition per 4 MB of the named
-    * source parquet. The parallelism ceiling
-    * reads the [[ceilingKey]] the child session recorded at creation —
-    * never the child's live shuffle.partitions, which every build
-    * overwrites (using it would clamp g4 to whatever width the previous
-    * pair-graph build derived; caught via a width-1 g4 plan dump when
-    * l17 ran first in one JVM). A session without the key falls back to
-    * its own conf. */
-  private[graft] def derivedParts(build: SparkSession, dir: String,
+    * caller's own shuffle width as the ceiling: a production deployment
+    * raises spark.sql.shuffle.partitions and the derivation follows the
+    * data up to that ceiling; the fixture derives 4 for g4 and stops
+    * paying 32-way task scatter per round. Integer ranks and min labels
+    * are order-independent, so the width never changes a result (g4 and
+    * l17 stay oracle-hash-green). */
+  private[graft] def derivedParts(spark: SparkSession, dir: String,
       tables: Seq[String]): Int = {
-    val hconf = build.sparkContext.hadoopConfiguration
+    val hconf = spark.sparkContext.hadoopConfiguration
     val bytes = tables.map { t =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
       val fs = p.getFileSystem(hconf)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }.sum
-    val ceiling = build.conf.getOption(ceilingKey).map(_.toInt)
-      .getOrElse(build.sessionState.conf.numShufflePartitions)
-    math.max(1, math.min(ceiling,
+    math.max(1, math.min(spark.sessionState.conf.numShufflePartitions,
       math.ceil(bytes / (4.0 * 1024 * 1024)).toInt))
   }
 
@@ -191,7 +156,7 @@ object Nested {
     * query intentionally never pays (see GraphDepthSpec). */
   def pageRank(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
     // The whole bounded-round loop plans STATICALLY and materializes in
-    // ONE job: AQE is scoped off for the build (thread-locally, see below),
+    // ONE job: AQE is off for the build (on a child session, see below),
     // because its per-stage sync barriers turn 3 unrolled rounds into
     // ~17 serial stage-submission jobs — each a scheduling window for
     // ambient load to land in (the r11 driver re-run put g4's spread at
@@ -204,31 +169,22 @@ object Nested {
     // per-round `nodes` subtrees dedupe via ReuseExchange — a rule AQE
     // mode would apply per-stage anyway. Skewed in-degree at 100 TB is
     // handled the j11 way (salt the dst agg), not by re-enabling AQE.
-    // The AQE-off scope is a CACHED CHILD SESSION (one `newSession()` per
-    // caller session, lazily created, reused for every pageRank call): the
-    // r12 ADVICE note — a session-global toggle with a finally-restore
-    // isn't concurrency-safe if another query plans on the same session
-    // mid-build, and the restore wrote the conf even when previously
-    // unset. The child shares the SparkContext but owns its SQLConf with
-    // AQE permanently off, so nothing is ever toggled on ANY session and
-    // concurrent planning on the caller's session is untouched. Two
-    // cheaper-looking scopes were tried and rejected with measurements:
-    // a thread-local SQLConf.withExistingConf snapshot does NOT survive
-    // into Dataset actions (SQLExecution re-propagates the session conf
-    // to the thread, so the build planned with AQE on — 18 jobs, the
-    // GraphDepthSpec pin caught it), and a per-call throwaway
-    // newSession() was ~45% slower on g4 (SessionState construction per
-    // call). The returned frame stays on the child session — its final
-    // TakeOrderedAndProject is AQE-indifferent, and callers only write/
-    // collect it.
-    val build = aqeOffSession(spark)
+    // The AQE-off scope is a CHILD SESSION ([[staticBuild]]): it shares
+    // the SparkContext but owns its SQL config, with AQE off and the
+    // derived width set once when it is created, so nothing is ever
+    // toggled on ANY session and concurrent planning on the caller's
+    // session is untouched. The returned frame stays on the child, so it
+    // plans at the child's width whenever the caller acts on it; its
+    // final TakeOrderedAndProject is AQE-indifferent. Two cheaper-looking
+    // scopes were tried and rejected with measurements: a thread-local
+    // SQLConf.withExistingConf snapshot does NOT survive into Dataset
+    // actions (SQLExecution re-propagates the session conf to the thread,
+    // so the build planned with AQE on — 18 jobs, the GraphDepthSpec pin
+    // caught it), and a per-call throwaway newSession() was ~45% slower
+    // on g4 (SessionState construction per call), which is why
+    // `Engine.scoped` caches its children.
+    val build = staticBuild(spark, dir, Seq("orders", "lineitem"))
     import build.implicits._
-    // Sized per build on the child session that g4, l17 and l49 share, so
-    // the setting stays until the next build re-derives it: builds on one
-    // child must run sequentially (bench, Verify and the specs do), or one
-    // build's width leaks into another's plan.
-    build.conf.set("spark.sql.shuffle.partitions",
-      buildParts(build, dir).toString)
     val pr = {
         // Out-degree is attached to each edge by a window count over src
         // in the SAME materialization as the edge build — one eager

@@ -38,17 +38,14 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     // 2 files per trigger → 2 micro-batches: enough to prove checkpointed
-    // cross-batch aggregation while halving state-store commit rounds
-    val agg = Streams.eventsStream(spark, staged, schema, 2)
+    // cross-batch aggregation while halving state-store commit rounds.
+    // ~30 day windows of state: 8 state partitions (= 16 store commits over
+    // 2 batches), not the batch default's 64 — same sizing rule as st12/st13
+    val agg = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .groupBy(window($"ts", "1 day").as("w"))
       .agg(count(lit(1)).as("n"))
       .select($"w.start".as("w_start"), $"n")
-    // ~30 day windows of state: 8 state partitions (= 16 store commits over
-    // 2 batches), not the batch default's 64 — same sizing rule as st12/st13
-    val out = Streams.withShufflePartitions(spark, 8) {
-      Streams.runCompleteToParquet(agg, "st2")
-    }
-    spark.read.parquet(out)
+    spark.read.parquet(Streams.runCompleteToParquet(agg, "st2"))
   }
 
   /** ST3: exactly-once-style sink — streaming foreachBatch into the
@@ -197,23 +194,21 @@ object StreamingQ {
     val out = java.nio.file.Files.createTempDirectory("st7b_out").toString
     // dedup state is ~(users × types) keys at fixture SF: 8 state
     // partitions instead of the batch default's 32 — the st2/st8/st13 rule
-    Streams.withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select($"user_id", $"event_type")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st7b").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(SaveMode.Append).parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    val q = Streams.stateSession(spark, 8).readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(staged)
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("user_id", "event_type")
+      .select($"user_id", $"event_type")
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st7b").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(SaveMode.Append).parquet(out)
+      }
+      .start()
+    q.awaitTermination()
     spark.read.parquet(out)
   }
 
@@ -232,10 +227,8 @@ object StreamingQ {
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st8_out").toString
     // ~100 distinct users at fixture SF: 8 state partitions, not the batch
-    // default (conf must stay overridden until the AvailableNow drain ends —
-    // state partition count locks in when the first batch plans)
-    Streams.withShufflePartitions(spark, 8) {
-      val q = Streams.eventsStream(spark, staged, schema, 2)
+    // default (the state partition count locks in when the first batch plans)
+    val q = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .select($"user_id").as[Long]
       .groupByKey(identity)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
@@ -255,8 +248,7 @@ object StreamingQ {
           .write.mode(SaveMode.Append).parquet(out)
       }
       .start()
-      q.awaitTermination()
-    }
+    q.awaitTermination()
     val w = Window.partitionBy($"user_id").orderBy($"batch_id".desc)
     spark.read.parquet(out)
       .withColumn("rn", row_number().over(w))
@@ -276,17 +268,6 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    // bounded key subset (user_id % 4 = 0): join-state size, not semantics —
-    // proportional at any SF, and the oracle applies the same predicate
-    val purchases = Streams.eventsStream(spark, staged, schema, 2)
-      .filter($"event_type" === "purchase" && $"user_id" % 4 === 0)
-      .select($"user_id", $"event_id".as("p_id"), $"ts".as("p_ts"))
-      .withWatermark("p_ts", "40 days")
-    val clicks = Streams.eventsStream(spark, staged, schema, 2)
-      .filter($"event_type" === "click" && $"user_id" % 4 === 0)
-      .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
-      .withWatermark("c_ts", "40 days")
-    val out = java.nio.file.Files.createTempDirectory("st9_out").toString
     // 2 state partitions — MEASURED optimum, not a guess (r10 sweep at
     // sf0.1, min of 2 samples: 2→2.83-2.88 s, 4→3.13-3.25, 8→3.84,
     // 16→4.35; 2 still wins at the 10x sf1 dataset, 2.63 vs 2.86): each
@@ -296,22 +277,32 @@ object StreamingQ {
     // retunes partitions to real key cardinality (the store-commit vs
     // addBatch-parallelism tradeoff flips once batches carry real data —
     // st19's measured optimum is 4 for exactly that reason).
-    Streams.withShufflePartitions(spark, 2) {
-      val q = purchases.join(clicks,
-          $"user_id" === $"c_user" &&
-            $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts")
-        .select($"user_id", $"p_id", $"c_id")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st9").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(SaveMode.Append).parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    val ss = Streams.stateSession(spark, 2)
+    // bounded key subset (user_id % 4 = 0): join-state size, not semantics —
+    // proportional at any SF, and the oracle applies the same predicate
+    val purchases = Streams.eventsStream(ss, staged, schema, 2)
+      .filter($"event_type" === "purchase" && $"user_id" % 4 === 0)
+      .select($"user_id", $"event_id".as("p_id"), $"ts".as("p_ts"))
+      .withWatermark("p_ts", "40 days")
+    val clicks = Streams.eventsStream(ss, staged, schema, 2)
+      .filter($"event_type" === "click" && $"user_id" % 4 === 0)
+      .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
+      .withWatermark("c_ts", "40 days")
+    val out = java.nio.file.Files.createTempDirectory("st9_out").toString
+    val q = purchases.join(clicks,
+        $"user_id" === $"c_user" &&
+          $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts")
+      .select($"user_id", $"p_id", $"c_id")
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st9").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(SaveMode.Append).parquet(out)
+      }
+      .start()
+    q.awaitTermination()
     spark.read.parquet(out)
   }
 
@@ -392,14 +383,12 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val agg = Streams.eventsStream(spark, staged, schema, 2)
-      .groupBy(window($"ts", "1 day").as("w"))
-      .agg(count(lit(1)).as("n"))
     // ~90 distinct day windows: 8 state partitions, not the batch default
     // (each partition is a state-store instance committed per batch)
-    val (_, ck) = Streams.withShufflePartitions(spark, 8) {
-      Streams.runCompleteToParquetCk(agg, "st12")
-    }
+    val agg = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
+      .groupBy(window($"ts", "1 day").as("w"))
+      .agg(count(lit(1)).as("n"))
+    val (_, ck) = Streams.runCompleteToParquetCk(agg, "st12")
     spark.read.format("statestore").load(ck)
       .select($"key.window.start".as("w_start"), $"value.count".as("n"))
   }
@@ -415,32 +404,30 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st13_out").toString
-    Streams.withRocksDbStateStore(spark) {
-    Streams.withShufflePartitions(spark, 4) {
-      // a RocksDB instance per state partition per batch, and each instance
-      // costs an open/commit cycle (~0.5 s of native setup at any data
-      // size): size to the key cardinality (~100 users at fixture SF), not
-      // the batch default — 32 partitions × 2 batches = 64 cycles, 4 ⇒ 8,
-      // with 25 keys per store. A 100 TB deployment inverts the math (keys
-      // ≫ cycle overhead) and sizes partitions UP for state volume.
-      val q = Streams.eventsStream(spark, staged, schema, 2)
-        .select($"user_id".as[Long], $"value".as[Double])
-        .groupByKey(_._1)
-        .transformWithState(new graft.streaming.CountMaxProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF("user_id", "n_events", "max_value")
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st13").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(SaveMode.Append).parquet(out): Unit
-        }
-        .start()
-      q.awaitTermination()
-    } }
+    // a RocksDB instance per state partition per batch, and each instance
+    // costs an open/commit cycle (~0.5 s of native setup at any data
+    // size): size to the key cardinality (~100 users at fixture SF), not
+    // the batch default — 32 partitions × 2 batches = 64 cycles, 4 ⇒ 8,
+    // with 25 keys per store. A 100 TB deployment inverts the math (keys
+    // ≫ cycle overhead) and sizes partitions UP for state volume.
+    val q = Streams.eventsStream(
+        Streams.stateSession(spark, 4, rocksDb = true), staged, schema, 2)
+      .select($"user_id".as[Long], $"value".as[Double])
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.CountMaxProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF("user_id", "n_events", "max_value")
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st13").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(SaveMode.Append).parquet(out): Unit
+      }
+      .start()
+    q.awaitTermination()
     spark.read.parquet(out).groupBy($"user_id")
       .agg(max($"n_events").as("n_events"), max($"max_value").as("max_value"))
   }
@@ -677,20 +664,21 @@ object StreamingQ {
     import spark.implicits._
     val staged = stageSt21(spark, dir)
     val sink = java.nio.file.Files.createTempDirectory("st21_sink").toString
-    Streams.withShufflePartitions(spark, 8) {
-      val q = spark.readStream
-        .schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st21").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(scd2MergeBatch(spark, sink, nBuckets = 8) _)
-        .start()
-      q.awaitTermination()
-    }
+    // each batch's merge reads and joins the sink on the stream's session,
+    // so its joins run at the stream's width of 8 as well
+    val ss = Streams.stateSession(spark, 8)
+    val q = ss.readStream
+      .schema(spark.read.parquet(staged).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(staged)
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st21").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(scd2MergeBatch(ss, sink, nBuckets = 8) _)
+      .start()
+    q.awaitTermination()
     spark.read.parquet(sink)
       .select($"user_id", $"event_type", $"valid_from_us", $"valid_to_us",
         $"valid_to_us".isNull.as("is_current"), $"n_events")
@@ -877,40 +865,40 @@ object StreamingQ {
     * merge by summation, preserving the MG bound: counts underestimate by
     * at most n/(k+1) and every key above that frequency is guaranteed
     * present (both asserted in StreamingSpec). Counter values depend on
-    * arrival order (inherent to MG; rows-only in the driver by design);
-    * the BOUNDS hold for every order. Final sketch = the last batch's
-    * update-mode emission, read back from its batch_id directory. */
+    * arrival order (inherent to MG; rows-only in the driver by design),
+    * so each batch is applied in event_id order and a rerun returns the
+    * same sketch; the BOUNDS hold for every order. Final sketch = the
+    * last batch's update-mode emission, read back from its batch_id
+    * directory. */
   def st18StreamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st18_out").toString
-    Streams.withRocksDbStateStore(spark) {
-    Streams.withShufflePartitions(spark, 4) {
-      val q = Streams.eventsStream(spark, staged, schema, 2)
-        .select(($"user_id" % 4).cast("long").as("shard"),
-          $"user_id".cast("long").as("item"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new graft.streaming.MisraGriesProcessor(16),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF("shard", "user_id", "est_in_shard")
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st18").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // each batch re-emits the FULL sketch of every shard it touched,
-          // so a shard's latest batch directory is its final state (the
-          // read-back ranks per shard; Overwrite fencing keeps replays
-          // idempotent, st16-style)
-          batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
-        }
-        .start()
-      q.awaitTermination()
-    } }
+    val q = Streams.eventsStream(
+        Streams.stateSession(spark, 4, rocksDb = true), staged, schema, 2)
+      .select(($"user_id" % 4).cast("long").as("shard"),
+        $"user_id".cast("long").as("item"), $"event_id".cast("long"))
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.MisraGriesProcessor(16),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF("shard", "user_id", "est_in_shard")
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st18").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // each batch re-emits the FULL sketch of every shard it touched,
+        // so a shard's latest batch directory is its final state (the
+        // read-back ranks per shard; Overwrite fencing keeps replays
+        // idempotent, st16-style)
+        batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
+      }
+      .start()
+    q.awaitTermination()
     // final sketch PER SHARD = that shard's latest emission: a shard with
     // no input rows in the final micro-batch emits nothing there, so
     // filtering to the global max batch_id would silently drop its entire
@@ -991,38 +979,37 @@ object StreamingQ {
     import spark.implicits._
     val staged = stageSt19(spark, dir)
     val schema = Streams.eventsSchema(spark, dir)
-    val purchases = Streams.eventsStream(spark, staged, schema, 2)
-      .filter($"event_type" === "purchase" && $"user_id" % 4 === 0)
-      .select($"user_id", $"event_id".as("p_id"), $"ts".as("p_ts"))
-      .withWatermark("p_ts", "40 days")
-    val clicks = Streams.eventsStream(spark, staged, schema, 2)
-      .filter($"event_type" === "click" && $"user_id" % 4 === 0)
-      .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
-      .withWatermark("c_ts", "40 days")
-    val out = java.nio.file.Files.createTempDirectory("st19_out").toString
     // 4 state partitions: an interval join commits FOUR stores per
     // partition per micro-batch (keyToNumValues + keyWithIndexToValue on
     // each side), so partition count is the dominant fixture-scale cost.
     // Measured both directions in r9: 2 partitions is SLOWER (3.8 s vs
     // 2.4 s best-of — commit savings lose to halved addBatch parallelism),
     // so 4 is the measured optimum, not just a guess.
-    Streams.withShufflePartitions(spark, 4) {
-      val q = purchases.join(clicks,
-          $"user_id" === $"c_user" &&
-            $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
-          "left_outer")
-        .select($"user_id", $"p_id", $"c_id")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st19").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(SaveMode.Append).parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    val ss = Streams.stateSession(spark, 4)
+    val purchases = Streams.eventsStream(ss, staged, schema, 2)
+      .filter($"event_type" === "purchase" && $"user_id" % 4 === 0)
+      .select($"user_id", $"event_id".as("p_id"), $"ts".as("p_ts"))
+      .withWatermark("p_ts", "40 days")
+    val clicks = Streams.eventsStream(ss, staged, schema, 2)
+      .filter($"event_type" === "click" && $"user_id" % 4 === 0)
+      .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
+      .withWatermark("c_ts", "40 days")
+    val out = java.nio.file.Files.createTempDirectory("st19_out").toString
+    val q = purchases.join(clicks,
+        $"user_id" === $"c_user" &&
+          $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
+        "left_outer")
+      .select($"user_id", $"p_id", $"c_id")
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st19").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(SaveMode.Append).parquet(out)
+      }
+      .start()
+    q.awaitTermination()
     spark.read.parquet(out).filter($"user_id" < 999999000L)
   }
 
@@ -1043,34 +1030,33 @@ object StreamingQ {
     import spark.implicits._
     val staged = stageSt19(spark, dir)
     val schema = Streams.eventsSchema(spark, dir)
-    val purchases = Streams.eventsStream(spark, staged, schema, 2)
+    // 4 state partitions — the st19 sizing rationale (four store commits
+    // per partition per micro-batch on an interval join)
+    val ss = Streams.stateSession(spark, 4)
+    val purchases = Streams.eventsStream(ss, staged, schema, 2)
       .filter($"event_type" === "purchase" && $"user_id" % 4 === 0)
       .select($"user_id", $"event_id".as("p_id"), $"ts".as("p_ts"))
       .withWatermark("p_ts", "40 days")
-    val clicks = Streams.eventsStream(spark, staged, schema, 2)
+    val clicks = Streams.eventsStream(ss, staged, schema, 2)
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
     val out = java.nio.file.Files.createTempDirectory("st22_out").toString
-    // 4 state partitions — the st19 sizing rationale (four store commits
-    // per partition per micro-batch on an interval join)
-    Streams.withShufflePartitions(spark, 4) {
-      val q = purchases.join(clicks,
-          $"user_id" === $"c_user" &&
-            $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
-          "full_outer")
-        .select(coalesce($"user_id", $"c_user").as("uid"), $"p_id", $"c_id")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st22").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(SaveMode.Append).parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    val q = purchases.join(clicks,
+        $"user_id" === $"c_user" &&
+          $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
+        "full_outer")
+      .select(coalesce($"user_id", $"c_user").as("uid"), $"p_id", $"c_id")
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st22").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(SaveMode.Append).parquet(out)
+      }
+      .start()
+    q.awaitTermination()
     spark.read.parquet(out).filter($"uid" < 999999000L)
   }
 
@@ -1105,30 +1091,28 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st23_out").toString
-    Streams.withShufflePartitions(spark, 4) {
-      val q = Streams.eventsStream(spark, staged, schema, 2)
-        .observe("gate",
-          count(lit(1)).as("n_rows"),
-          sum(floor($"value" * 100).cast("long")).as("sum_cents"),
-          sum(($"value" > 100).cast("long")).as("n_big"))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st23").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // the REAL job the metrics ride along with (o12 discipline)
-          batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
-        }
-        .start()
-      q.awaitTermination()
-      // recentProgress is synchronous after termination — no listener
-      // race; batches with no data report no "gate" entry
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.observedMetrics.get("gate")))
-        .map(row => (row.getAs[Long]("n_rows"),
-          row.getAs[Long]("sum_cents"), row.getAs[Long]("n_big")))
-    }
+    val q = Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
+      .observe("gate",
+        count(lit(1)).as("n_rows"),
+        sum(floor($"value" * 100).cast("long")).as("sum_cents"),
+        sum(($"value" > 100).cast("long")).as("n_big"))
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st23").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // the REAL job the metrics ride along with (o12 discipline)
+        batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
+      }
+      .start()
+    q.awaitTermination()
+    // recentProgress is synchronous after termination — no listener
+    // race; batches with no data report no "gate" entry
+    q.recentProgress.toSeq
+      .flatMap(p => Option(p.observedMetrics.get("gate")))
+      .map(row => (row.getAs[Long]("n_rows"),
+        row.getAs[Long]("sum_cents"), row.getAs[Long]("n_big")))
   }
 
   /** ST20: sessions finalized by EVENT-TIME TIMEOUT — the semantics none
@@ -1175,49 +1159,47 @@ object StreamingQ {
     val schema = Streams.eventsSchema(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("st20_out").toString
     val gapUs = 30L * 60 * 1000 * 1000
-    Streams.withShufflePartitions(spark, 8) {
-      val q = Streams.eventsStream(spark, staged, schema, 2)
-        .filter($"user_id" % 4 === 0) // sentinel user also passes → flush
-        .select($"user_id", $"ts", unix_micros($"ts").as("us"))
-        .withWatermark("ts", "0 seconds")
-        .as[(Long, java.sql.Timestamp, Long)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState[List[(Long, Long, Long)], (Long, Long, Long, Long)](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-          (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-           state: GroupState[List[(Long, Long, Long)]]) =>
-            if (state.hasTimedOut) {
-              // close out: every open segment is a finished session (the
-              // state may hold several only when the watermark jumped past
-              // multiple gaps at once); emit chronologically
-              val segs = state.get
-              state.remove()
-              segs.sortBy(_._1).iterator.map { case (s, e, n) => (user, s, e, n) }
-            } else {
-              // merge each event into the gap-padded segments it touches;
-              // an event landing between two segments within gap of both
-              // BRIDGES them into one (same components as the sorted
-              // consecutive-difference split — see the query doc)
-              var segs = state.getOption.getOrElse(Nil)
-              rows.foreach { r => segs = mergeSegment(segs, r._3, gapUs) }
-              state.update(segs)
-              // fire once the watermark passes the newest event + gap
-              state.setTimeoutTimestamp(segs.map(_._2).max / 1000 + gapUs / 1000)
-              Iterator.empty
-            }
-        }
-        .toDF("user_id", "start_us", "end_us", "n_events")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st20").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(SaveMode.Append).parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    val q = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
+      .filter($"user_id" % 4 === 0) // sentinel user also passes → flush
+      .select($"user_id", $"ts", unix_micros($"ts").as("us"))
+      .withWatermark("ts", "0 seconds")
+      .as[(Long, java.sql.Timestamp, Long)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[List[(Long, Long, Long)], (Long, Long, Long, Long)](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
+         state: GroupState[List[(Long, Long, Long)]]) =>
+          if (state.hasTimedOut) {
+            // close out: every open segment is a finished session (the
+            // state may hold several only when the watermark jumped past
+            // multiple gaps at once); emit chronologically
+            val segs = state.get
+            state.remove()
+            segs.sortBy(_._1).iterator.map { case (s, e, n) => (user, s, e, n) }
+          } else {
+            // merge each event into the gap-padded segments it touches;
+            // an event landing between two segments within gap of both
+            // BRIDGES them into one (same components as the sorted
+            // consecutive-difference split — see the query doc)
+            var segs = state.getOption.getOrElse(Nil)
+            rows.foreach { r => segs = mergeSegment(segs, r._3, gapUs) }
+            state.update(segs)
+            // fire once the watermark passes the newest event + gap
+            state.setTimeoutTimestamp(segs.map(_._2).max / 1000 + gapUs / 1000)
+            Iterator.empty
+          }
+      }
+      .toDF("user_id", "start_us", "end_us", "n_events")
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ck_st20").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(SaveMode.Append).parquet(out)
+      }
+      .start()
+    q.awaitTermination()
     spark.read.parquet(out).filter($"user_id" < 999999000L)
   }
 
@@ -1246,15 +1228,12 @@ object StreamingQ {
       .groupBy($"bucket").agg(count(lit(1)).as("ref_n"))
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val candCounts = Streams.withShufflePartitions(spark, 4) {
-      val out = Streams.runCompleteToParquet(
-        Streams.eventsStream(spark, staged, schema, 2)
-          .filter($"ts" >= split)
-          .select(bucket($"value").as("bucket"))
-          .groupBy($"bucket").agg(count(lit(1)).as("cand_n")),
-        "st24")
-      spark.read.parquet(out)
-    }
+    val candCounts = spark.read.parquet(Streams.runCompleteToParquet(
+      Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
+        .filter($"ts" >= split)
+        .select(bucket($"value").as("bucket"))
+        .groupBy($"bucket").agg(count(lit(1)).as("cand_n")),
+      "st24"))
     Llm.driftFromCounts(
       refCounts.join(candCounts, Seq("bucket"), "full_outer")
         .select($"bucket",
@@ -1286,14 +1265,11 @@ object StreamingQ {
     val baseline = graft.queries.Relational.seasonalCore(
       graft.queries.Relational.dailyCounts(spark, dir))
       .select($"event_type", $"dow", $"med2").distinct()
-    val agg = Streams.eventsStream(spark, staged, schema, 2)
+    val agg = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .groupBy($"event_type", window($"ts", "1 day").as("w"))
       .agg(count(lit(1)).as("cnt"))
       .select($"event_type", $"w.start".cast("date").as("day"), $"cnt")
-    val out = Streams.withShufflePartitions(spark, 8) {
-      Streams.runCompleteToParquet(agg, "st25")
-    }
-    spark.read.parquet(out)
+    spark.read.parquet(Streams.runCompleteToParquet(agg, "st25"))
       .withColumn("dow", (expr("weekday(day)") + 1).cast("long"))
       .join(broadcast(baseline), Seq("event_type", "dow"))
       .withColumn("dev2", lit(2) * $"cnt" - $"med2")

@@ -51,10 +51,14 @@ class CountMaxProcessor
   * summing, preserving the bound (asserted in StreamingSpec); every item
   * with true frequency above the bound is guaranteed to survive. Emits
   * the shard's full sketch each batch (update semantics — the final
-  * batch's emission IS the final sketch). */
+  * batch's emission IS the final sketch). Rows are `(shard, item,
+  * event_id)`: which counters survive depends on the order items arrive
+  * in, so each batch's rows are applied in `event_id` order, not in the
+  * order the shuffle happened to deliver them, and a rerun over the same
+  * batches yields the same sketch. */
 class MisraGriesProcessor(k: Int)
     extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Long), (Long, Long, Long)] {
+      Long, (Long, Long, Long), (Long, Long, Long)] {
   import org.apache.spark.sql.streaming.{MapState, OutputMode, TimeMode, TTLConfig}
 
   @transient private var sketch: MapState[Long, Long] = _
@@ -67,7 +71,7 @@ class MisraGriesProcessor(k: Int)
 
   override def handleInputRows(
       key: Long,
-      rows: Iterator[(Long, Long)],
+      rows: Iterator[(Long, Long, Long)],
       timerValues: org.apache.spark.sql.streaming.TimerValues)
       : Iterator[(Long, Long, Long)] = {
     // State-store discipline: the sketch is loaded into a (bounded, ≤ k
@@ -78,7 +82,7 @@ class MisraGriesProcessor(k: Int)
     // 35 s at sf0.1 — per-batch state I/O must be O(k), never O(rows).
     val local = scala.collection.mutable.HashMap.empty[Long, Long]
     sketch.iterator().foreach { case (it, c) => local(it) = c }
-    rows.foreach { case (_, item) =>
+    rows.toArray.sortBy(r => (r._3, r._2)).foreach { case (_, item, _) =>
       local.get(item) match {
         case Some(c) => local(item) = c + 1L
         case None if local.size < k => local(item) = 1L
@@ -101,7 +105,9 @@ class MisraGriesProcessor(k: Int)
   * checkpointed micro-batch stream over the date axis
   * (main.yml:70-95 + scraper_state.json) — here expressed as real
   * `readStream` pipelines run to completion with Trigger.AvailableNow so
-  * results are deterministic and oracle-checkable.
+  * results are deterministic and oracle-checkable. A stream with state
+  * runs on its own [[stateSession]], so streams that run at once, and the
+  * caller's batch queries, never see each other's width.
   */
 object Streams {
 
@@ -110,12 +116,21 @@ object Streams {
   /** Stage the events table as `n` parquet files so maxFilesPerTrigger can
     * drive a deterministic number of micro-batches (the per-day batch
     * pacing of main.yml:77-95). Staged once per (source, n) per JVM — the
-    * streaming queries share the copy instead of re-writing it. */
+    * streaming queries share the copy instead of re-writing it. The file
+    * source admits files in modification-time order, and files written by
+    * parallel tasks get their times in whatever order the tasks finish, so
+    * the times are pinned in part-number order: every run puts the same
+    * files, and so the same rows, in each micro-batch. */
   def stageEvents(spark: SparkSession, dir: String, n: Int): String =
     stagedCache.computeIfAbsent((dir, n), { _ =>
       val out = java.nio.file.Files.createTempDirectory("events_staged").toString
       Engine.events(spark, dir).repartition(n)
         .write.mode(SaveMode.Overwrite).parquet(out)
+      new java.io.File(out).listFiles.filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
+          java.nio.file.Files.setLastModifiedTime(f.toPath,
+            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L)): Unit
+        }
       out
     })
 
@@ -130,32 +145,24 @@ object Streams {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(staged)
 
-  /** Run `f` with streams started inside it on the RocksDB state store,
-    * then restore the provider the session had (unset if it had none).
-    * The `transformWithState` queries need it: their typed state lives on
-    * RocksDB. */
-  def withRocksDbStateStore[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
+  /** The session a stream with its own width starts on: a child of
+    * `spark` (see [[Engine.scoped]]) whose shuffle-partition count is
+    * `parts` (a stateful stream's state width), and whose state store is
+    * RocksDB when `rocksDb` is set (the `transformWithState` queries keep
+    * their typed state there). Build the stream on this session; read its
+    * sink back on `spark`.
+    *
+    * A stateful query fixes its state-partition count at the first
+    * checkpoint, and every partition is a state-store instance with
+    * per-batch commit overhead, so state-heavy operators size this to key
+    * cardinality and data volume rather than inherit the batch default
+    * (tiny fixtures → fewer, a 100 TB deployment → more; either way an
+    * explicit choice, which is the point). */
+  def stateSession(spark: SparkSession, parts: Int, rocksDb: Boolean = false): SparkSession = {
+    val width = "spark.sql.shuffle.partitions" -> parts.toString
+    if (!rocksDb) Engine.scoped(spark, width)
+    else Engine.scoped(spark, width, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Run `f` with the session's shuffle-partition count overridden, then
-    * restore. Stateful streaming queries fix their state-partition count at
-    * the first checkpoint, and every partition is a state-store instance
-    * with per-batch commit overhead — so state-heavy operators should size
-    * this to key cardinality/data volume rather than inherit the batch
-    * default (tiny fixtures → fewer, a 100 TB deployment → more; either
-    * way an explicit choice, which is the point). */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", old)
   }
 
   /** Run a streaming aggregation to completion, materializing each complete

@@ -3,10 +3,14 @@
 run each oracle SQL in DuckDB over the sf tables, read the engine's
 Verify parquet dump, sort columns by name, sort rows, compare values.
 
+Queries that Verify lists as failed in failures.json count as FAIL,
+with or without an oracle entry.
+
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -47,9 +51,18 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    failures_path = f"{out_dir}/failures.json"
+    errors = {}
+    if os.path.exists(failures_path):
+        errors = json.load(open(failures_path))["errors"]
     n_pass = n_fail = n_skip = 0
-    for name in sorted(oracle):
+    for name in sorted(errors):
         if only and name not in only:
+            continue
+        print(f"FAIL {name}: Verify failed: {errors[name][:200]}")
+        n_fail += 1
+    for name in sorted(oracle):
+        if (only and name not in only) or name in errors:
             continue
         sql = oracle[name]
         try:
