@@ -23,74 +23,6 @@ import org.apache.spark.sql.SparkSession
   * should read the file, not the scrape.
   */
 object Bench {
-  /** Queries whose recorded cost has moved 3-6x with machine load across
-    * rounds (r9 verdict's weak set). They always get >= 3 samples and their
-    * spread is carried on the canonical metric line so one loaded run can
-    * never move their grade silently. */
-  private val watchlist = Set(
-    "g4_pagerank", "g7_bfs_reachability",
-    "j10_bloom_runtime_filter", "j11_salted_join",
-    // r10 verdict item 5: every query whose committed BENCH_r10 spread
-    // exceeded 2x joins the watchlist. All are sub-second queries whose
-    // first execution pays a 2-8x JIT/codegen cost; the untimed warm-up
-    // excludes that one-time cost so the committed spread reads as load,
-    // not first-execution, noise.
-    "f_string", "s33_schema_evolution", "o16_cached_reuse",
-    "j6_bucketed_join", "o11_orc_roundtrip", "a17_histogram_merge",
-    "a3_typed_aggregator", "o10_xml_roundtrip", "l2c_minhash_native",
-    "sq5_recursive_backoff", "l20_mixture_plan", "j4_full_outer_reconcile",
-    // r11 verdict item 3: l61's 1.2-2.5 s round-over-round swing is its
-    // first execution running 2.5x steady state (JIT of the shingle-HOF
-    // codegen; BATCH_METRICS_r12.md decomposes it — steady-state samples
-    // sit within 1.07x with a stable ~0.2 s driver gap). The adaptive
-    // warm-up rule only catches it when the ratio crosses 2x; watchlist
-    // membership makes the untimed warm-up deterministic.
-    "l61_cross_source_overlap",
-    // r12 verdict item 3: the two 1.95x driver-spread queries.
-    // BATCH_METRICS_r13.md decomposes both: l25 carries the g4/l61
-    // two-execution JIT signature (first TIMED run 1.47 s vs 0.97-1.0 s
-    // steady even after an untimed warm-up — it also joins wideWatchlist
-    // below); o17's 2.4x first-execution cost dies in the untimed
-    // warm-up and steady state sits within 1.12x, so its residual spread
-    // is ambient scheduling on a 0.25 s query — more samples, not code.
-    "l25_ranked_retrieval", "o17_partition_stats",
-    // r13 verdict item 5: st1's 1.62x driver-vs-committed ratio was the
-    // round's worst — on a ~0.1 s query, where a single scheduling window
-    // is most of the wall (the o17 shape: no code-level fix for scheduler
-    // exposure on a sub-second query; more samples bound the committed
-    // spread instead).
-    "st1_tumbling",
-    // r14 verdict item 5: l63's driver spread hit [29.5, 59.0] inside a
-    // host-stall window (quiet steady state is 1.9-3.0 s — the judge
-    // re-ran it); it has a BATCH_METRICS decomposition (under-parallelism
-    // at sf0.1 amortizing at sf1, nothing super-linear) but not the
-    // deterministic-warm-up + >=3-samples policy that bounds the
-    // committed spread for the rest of this set.
-    "l63_lsh_calibration")
-
-  /** g4_pagerank's committed driver spread was 1.53x in r10 against a
-    * 1.5x bar; its decomposition (BATCH_METRICS_r10.md) shows the residual
-    * is job-submission latency under load — a sampling problem, not a plan
-    * problem. Five timed samples instead of three tighten the committed
-    * [min,max] by giving the minimum more chances to land between load
-    * spikes. r12 folded the per-round AQE stage submissions into one
-    * static job (17 -> 6 jobs, see the pageRank doc), after which the only
-    * remaining outlier is the FIRST timed sample at ~1.5x steady state —
-    * the two-execution JIT signature of the big unrolled codegen class
-    * (C1 on the warm-up, C2 kicking in during the next run). Hence TWO
-    * untimed warm-ups here where the plain watchlist takes one.
-    * l25 joins in r13 with the same signature: BATCH_METRICS_r13.md shows
-    * its first timed sample at ~1.5x steady state after one warm-up
-    * (1.467 vs 0.97-1.0 s), the source of its 1.95x r12 driver spread.
-    * g7 joins in r18 (r17 verdict ask #2): its quiet record drifted
-    * 2.50 -> 3.09 s across r14-r17 on untouched code while the r17
-    * driver's contended re-run hit 23.0 s with spread to 53.6 — the
-    * same load-dominated iterative-graph profile as g4, so one
-    * contended sample must not be able to dominate a committed record
-    * again (2 untimed warm-ups + best-of-5). */
-  private val wideWatchlist = Set("g4_pagerank", "l25_ranked_retrieval",
-    "g7_bfs_reachability")
-
   /** Untimed preparation of one fixture dir, shared with [[ScaleBench]]: a
     * warm-up, so JVM/codegen/parquet-reader startup does not land on
     * whichever query happens to sort first, then the one-time
@@ -124,19 +56,12 @@ object Bench {
     prepare(spark, sfDir)
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
-    // Best-of-N per query: a single timed run is vulnerable to one-off
-    // JIT/GC/page-cache noise landing on whichever query runs at the wrong
-    // moment (r3 saw 5.0 s driver-run vs 0.54 s local; r6 saw j2 at 7.5 s
-    // driver vs 1.0 s local even under best-of-2). Two samples always; a
-    // slow FIRST sample (>2x the second — the JIT signature) is
-    // retroactively treated as an untimed warm-up and three timed samples
-    // replace it; a slow SECOND sample (mid-run pause) gets a tie-breaking
-    // third so one pause can never dominate both kept numbers. The headline
-    // value per query is the minimum (steady-state cost — the regression
-    // axis); all raw samples — including adaptive warm-ups — are emitted so
-    // a future round can tell noise from a real plan change without
-    // re-running. Queries are side-effect-safe to re-run: every sink query
-    // writes to a fresh temp dir per invocation.
+    // Every query is sampled by the one policy in [[Measure]]; its headline
+    // value is the minimum of the timed runs (steady-state cost, the
+    // regression axis). Every timed sample and every untimed warm-up time
+    // are written, so a later reader can tell noise from a plan change
+    // without re-running. Queries are side-effect-safe to re-run: every
+    // sink query writes to a fresh temp dir per invocation.
     var times = Vector.empty[(String, Double)]
     var samples = Vector.empty[(String, Seq[Double])]
     var warmups = Vector.empty[(String, Double)]
@@ -149,39 +74,14 @@ object Bench {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
       try {
-        // Watchlist queries (historically load-sensitive, see
-        // BATCH_METRICS_r10.md) get one UNTIMED warm-up + three timed
-        // samples: their first execution in a JVM is ~2.3x steady state
-        // from codegen/JIT compilation of their generated code (measured,
-        // reproducible across JVMs with a warm page cache), and folding
-        // that one-time cost into the committed spread would make the
-        // spread read as load noise. Same philosophy as the global untimed
-        // warm-up above. Other queries: two samples, plus a tie-breaking
-        // third when they disagree >2x.
-        val runs =
-          if (wideWatchlist(name)) { once(): Unit; once(): Unit; Seq.fill(5)(once()) }
-          else if (watchlist(name)) { once(): Unit; Seq(once(), once(), once()) }
-          else {
-            val s1 = once(); val s2 = once()
-            if (s1 > 2 * s2) {
-              // Adaptive warm-up (r10 verdict item 5, self-extending): a
-              // first sample >2x the second is the first-execution JIT
-              // signature, not load — retroactively treat it as the untimed
-              // warm-up and take three timed samples, so a newly-noisy query
-              // gets the watchlist treatment THIS bench instead of waiting a
-              // round for a hand-curated list update. The warm-up value is
-              // still committed (warmups map) so nothing is hidden.
-              warmups :+= name -> s1
-              Seq(s2, once(), once())
-            } else if (s2 > 2 * s1 && s1 > 0.25) Seq(s1, s2, once())
-            else Seq(s1, s2)
-          }
+        var warmup = Option.empty[Double]
+        val runs = Measure.sample {
+          val t = Measure.once(spark, fn, sfDir)
+          if (warmup.isEmpty) warmup = Some(t)
+          t
+        }
+        warmups :+= name -> warmup.get
         times :+= name -> runs.min
         samples :+= name -> runs
       } catch {
@@ -202,7 +102,7 @@ object Bench {
     val warmupsJson = jmap(warmups.map { case (k, v) => k -> r3(v) })
     val detailLine =
       s"""{"detail":$timesJson,"samples":$samplesJson,""" +
-        s""""adaptive_warmups":$warmupsJson,"errors":$errs}"""
+        s""""warmups":$warmupsJson,"errors":$errs}"""
     println(detailLine)
     // canonical line, kept under ~1500 chars: total + the 40 slowest.
     // value = sum of per-query minima (steady state); value_median = sum of
@@ -214,20 +114,13 @@ object Bench {
     }
     val totalMedian = samples.map { case (_, vs) => median(vs) }.sum
     val slowest = times.sortBy(-_._2).take(40).sortBy(_._1)
-    // per-query spread, kept compact: the four core (historically
-    // load-sensitive) watchlist queries always, plus any query whose TIMED
-    // samples still disagree >1.5x at non-trivial cost, capped at 20
-    // entries. [min,max] of the timed samples — untimed warm-ups are in
-    // adaptive_warmups / the watchlist's discarded first run, so the
-    // committed spread now reads as load noise, not first-execution JIT.
-    // Full samples map in bench_out.json / the detail line for the rest.
-    val coreWatch = Set(
-      "g4_pagerank", "g7_bfs_reachability",
-      "j10_bloom_runtime_filter", "j11_salted_join")
+    // per-query spread, kept compact: every query whose timed samples
+    // disagree >1.5x at non-trivial cost, the widest 20, as [min,max] of the
+    // timed samples (warm-ups are in "warmups"). The full samples map is in
+    // bench_out.json and on the detail line.
     val spread = samples
-      .filter { case (k, vs) =>
-        coreWatch(k) || (vs.max > 1.5 * vs.min && vs.max > 0.25) }
-      .sortBy { case (k, vs) => (!coreWatch(k), -(vs.max / vs.min)) }
+      .filter { case (_, vs) => vs.max > 1.5 * vs.min && vs.max > 0.25 }
+      .sortBy { case (_, vs) => -(vs.max / vs.min) }
       .take(20)
       .sortBy(_._1)
       .map { case (k, vs) => k -> s"[${r3(vs.min)},${r3(vs.max)}]" }
@@ -238,7 +131,7 @@ object Bench {
     val metricLine =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${times.size},""" +
         s""""value_median":${r3(totalMedian)},""" +
-        s""""runs":"best-of-2-or-3 + adaptive warmup; watchlist: untimed-warmup + best-of-3 (g4/g7/l25: 2 untimed + best-of-5)",""" +
+        s""""runs":${q(Measure.policy)},""" +
         s""""cpus":$cpus,"loadavg":$loadavg,""" +
         s""""queries":${jmap(slowest.map { case (k, v) => k -> r3(v) })},""" +
         s""""spread":${jmap(spread)},"errors":$errs,"sf":"$sfDir"}"""
@@ -251,14 +144,14 @@ object Bench {
       .getOrElse("bench_out.json")
     val fileJson =
       s"""{"summary":$metricLine,"queries_all":$timesJson,""" +
-        s""""samples":$samplesJson,"adaptive_warmups":$warmupsJson}"""
+        s""""samples":$samplesJson,"warmups":$warmupsJson}"""
     Jfmt.writeAtomic(outPath, fileJson)
     println(s"bench record written to ${java.nio.file.Paths.get(outPath).toAbsolutePath}")
     spark.stop()
   }
 }
 
-/** Shared JSON-emission helpers for the tool mains (Bench, ScaleBench,
+/** Shared JSON-emission helpers for the tool mains (Bench, ScaleBench, Profile,
   * Verify): hand-rolled because the record format is a stable committed
   * artifact and the build deliberately has no JSON library dependency. */
 private[graft] object Jfmt {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -70,7 +68,7 @@ object ChaosRetry {
       .filter(_.startsWith("_staging")).toSeq
 
   def main(args: Array[String]): Unit = {
-    val dimDir = Files.createTempDirectory("chaos_dim").toString
+    val dimDir = Engine.tempDir("chaos_dim")
     val spark = SparkSession.builder()
       .master("local[4, 2]") // maxFailures=2: each task gets ONE retry
       .appName("graft-chaos")
@@ -108,7 +106,7 @@ object ChaosRetry {
   private def archiveScenario(spark: SparkSession): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("chaos_archive").toString
+    val out = Engine.tempDir("chaos_archive")
     val n = 200L
     val df = spark.range(n)
       .select(concat(lit("k"), $"id").as("key"),
@@ -149,7 +147,7 @@ object ChaosRetry {
   private def streamScenario(spark: SparkSession): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val src = Files.createTempDirectory("chaos_stream_src").toString
+    val src = Engine.tempDir("chaos_stream_src")
     // two single-file micro-batches (maxFilesPerTrigger=1); 40 rows each
     (0 until 2).foreach { b =>
       spark.range(b * 40L, b * 40L + 40L)
@@ -157,7 +155,7 @@ object ChaosRetry {
           concat(lit("p"), $"id").as("payload"))
         .coalesce(1).write.mode("append").parquet(src)
     }
-    val out = Files.createTempDirectory("chaos_stream_archive").toString
+    val out = Engine.tempDir("chaos_stream_archive")
     val (_, injected) = armed(3) {
       val q = spark.readStream
         .schema(spark.read.parquet(src).schema)
@@ -168,7 +166,7 @@ object ChaosRetry {
         .format(classOf[graft.sources.KbArchiveSink].getName)
         .option("path", out)
         .option("checkpointLocation",
-          Files.createTempDirectory("chaos_stream_ck").toString)
+          Engine.tempDir("chaos_stream_ck"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()

@@ -84,6 +84,18 @@ object Engine {
   private val children = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Map[String, String], SparkSession]]())
 
+  /** A new directory under `java.io.tmpdir` whose name starts with
+    * `prefix`, deleted with everything in it when the JVM exits. Every
+    * checkpoint, sink and staging directory the engine makes comes from
+    * here, so a long-lived JVM's runs do not pile up on the temp disk.
+    * The delete runs from Spark's own shutdown hook, after the
+    * SparkContext has stopped (see `GraftBridge.deleteAtExit`). */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    org.apache.spark.sql.GraftBridge.deleteAtExit(dir)
+    dir.toString
+  }
+
   /** Parquet scan for one fixture table under `dir` (see TESTDATA.md).
     *
     * Timestamp storage differs per table: lineitem/orders use parquet

@@ -22,22 +22,9 @@ object Jp2Probe {
     val comps = Array.tabulate(3) { c =>
       Array.tabulate(w * h)(j => ((j % w) * (7 + 2 * c) + (j / w) * 11 + c * 29) % 256)
     }
-    var t0 = System.nanoTime()
+    val t0 = System.nanoTime()
     val cs = Jp2Codec.encode(w, h, comps, levels = 3, tileSize = tile, layers = layers)
     val encodeS = (System.nanoTime() - t0) / 1e9
-
-    def timed[A](f: => A): (A, Double) = {
-      // min of 3 after one warm-up: these are sub-10 s single-thread runs
-      f: Unit
-      var best = Double.MaxValue
-      var out: A = null.asInstanceOf[A]
-      for (_ <- 1 to 3) {
-        val s = System.nanoTime()
-        out = f
-        best = math.min(best, (System.nanoTime() - s) / 1e9)
-      }
-      (out, best)
-    }
 
     // split walk bytes (l5h contract)
     val inFull = new Jp2Codec.CountingInput(new Jp2Codec.BytesInput(cs))
@@ -51,9 +38,11 @@ object Jp2Probe {
     val (hdr, qParts) = Jp2Codec.tilePartsQuality(inQ, 1)
     val qBytes = qParts.map(_.fetchBytes).sum
 
-    val (_, fullS) = timed(Jp2Codec.decode(cs))
-    val (_, redS) = timed(Jp2Codec.decodeReduced(cs, 2))
-    val (_, qS) = timed {
+    // sub-10 s single-thread runs, sampled like every other measurement
+    def best(f: => Any): Double = Measure.sample(Measure.seconds(f)).min
+    val fullS = best(Jp2Codec.decode(cs))
+    val redS = best(Jp2Codec.decodeReduced(cs, 2))
+    val qS = best {
       for (part <- qParts) yield {
         val slice = new java.io.ByteArrayOutputStream()
         for ((from, until) <- part.ranges) slice.write(cs, from.toInt, (until - from).toInt)

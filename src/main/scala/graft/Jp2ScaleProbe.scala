@@ -20,7 +20,7 @@ object Jp2ScaleProbe {
     val h = args.lift(1).map(_.toInt).getOrElse(1664)
     val layers = args.lift(2).map(_.toInt).getOrElse(2)
 
-    val dir = java.nio.file.Files.createTempDirectory("jp2scale").toString
+    val dir = Engine.tempDir("jp2scale")
     val comps = Array.tabulate(3) { c =>
       Array.tabulate(w * h)(j => ((j % w) * (7 + 2 * c) + (j / w) * 11 + c * 29) % 256)
     }
@@ -29,21 +29,14 @@ object Jp2ScaleProbe {
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/page_0.jp2"), bytes)
     val tiles = Jp2Codec.tileParts(bytes).length
 
-    def best3(f: => Unit): Double = {
-      f // warm-up
-      (1 to 3).map { _ =>
-        val s = System.nanoTime(); f; (System.nanoTime() - s) / 1e9
-      }.min
-    }
+    def best(f: => Any): Double = Measure.sample(Measure.seconds(f)).min
 
     // single-thread whole-file decode (the per-file-parallel-only shape)
-    val oneThread = best3 { Jp2Codec.decode(bytes): Unit }
+    val oneThread = best(Jp2Codec.decode(bytes))
 
     val spark = Engine.session("32")
     try {
-      val distributed = best3 {
-        graft.queries.Sources.jp2TiledChannelSums(spark, dir).collect(): Unit
-      }
+      val distributed = best(graft.queries.Sources.jp2TiledChannelSums(spark, dir).collect())
       def r3(v: Double) = math.round(v * 1000) / 1000.0
       println(
         s"""{"scan":"${w}x$h","tiles":$tiles,"layers":$layers,"bytes":${bytes.length},""" +

@@ -1,10 +1,9 @@
 package graft
 
 /** Paired scaling benchmark: measures the 10x-scaling query set at BOTH
-  * sf0.1 and the ScaleUp (10x) dataset in ONE JVM with an IDENTICAL
-  * per-side sampling policy — one untimed warm-up + three timed samples
-  * per query per side, query-by-query interleaved so machine-load drift
-  * hits both sides of a pair alike.
+  * sf0.1 and the ScaleUp (10x) dataset in ONE JVM, each side sampled by
+  * [[Measure]]'s one policy (untimed warm-up + best of 3), query-by-query
+  * interleaved so machine-load drift hits both sides of a pair alike.
   *
   * This replaces the r10 methodology the verdict flagged as asymmetric
   * (sf1 best-of-accumulated-runs vs a single uniform sf0.1 run): here
@@ -77,16 +76,9 @@ object ScaleBench {
       fns.get(name) match {
         case None => errors :+= name -> "not registered in SparkEntry.queries"
         case Some(fn) =>
-          def once(dir: String): Double = {
-            val t0 = System.nanoTime()
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
           try {
-            once(baseDir): Unit // untimed per-query warm-up, base side
-            val b = Seq(once(baseDir), once(baseDir), once(baseDir))
-            once(scaledDir): Unit // identical warm-up, scaled side
-            val s = Seq(once(scaledDir), once(scaledDir), once(scaledDir))
+            val b = Measure.sample(Measure.once(spark, fn, baseDir))
+            val s = Measure.sample(Measure.once(spark, fn, scaledDir))
             base :+= name -> b
             scaled :+= name -> s
             println(f"paired $name%-28s sf0.1 ${b.min}%7.3f  sf1 ${s.min}%7.3f  ratio ${s.min / b.min}%5.2f")
@@ -107,12 +99,12 @@ object ScaleBench {
         k -> f"${s.min / b.min}%.2f" }
     }
     val note = "paired same-session scaling run: one JVM, query-by-query " +
-      "interleave, identical per-side policy (untimed warm-up + best-of-3 " +
+      s"interleave, identical per-side policy (${Measure.policy} " +
       "at BOTH sf0.1 and 10x) — replaces the r10 best-of-accumulated vs " +
       "single-run asymmetry; minima are steady-state, all raw samples kept"
     val json =
       s"""{"note":${q(note)},"loadavg":${Jfmt.loadavg()},""" +
-        s""""methodology":"paired-one-jvm; warmup+best-of-3 per side","cpus":$cpus,""" +
+        s""""methodology":${q("paired-one-jvm; " + Measure.policy + " per side")},"cpus":$cpus,""" +
         s""""sf0_1":${minMap(base)},"sf1":${minMap(scaled)},""" +
         s""""ratio_sf1_over_sf0_1":${jmap(ratios)},""" +
         s""""samples_sf0_1":${sampleMap(base)},"samples_sf1":${sampleMap(scaled)},""" +

@@ -178,7 +178,7 @@ object Relational {
           !spark.catalog.tableExists("graft_b_orders") ||
           !spark.catalog.tableExists("graft_b_lineitem")) {
         import spark.implicits._
-        val wh = java.nio.file.Files.createTempDirectory("bucketed").toString
+        val wh = tempDir("bucketed")
         spark.sql("DROP TABLE IF EXISTS graft_b_orders")
         spark.sql("DROP TABLE IF EXISTS graft_b_lineitem")
         // DROP TABLE detaches the catalog entry only; reclaim the previous

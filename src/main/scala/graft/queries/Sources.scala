@@ -29,9 +29,6 @@ object Sources {
     }
   }
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** S1: parquet scan with the predicate pushed to the source (reference
     * encodes the date range into the search URL, :482-491). */
   def s1PushdownScan(spark: SparkSession, dir: String): DataFrame = {
@@ -77,7 +74,7 @@ object Sources {
     * (title/date layout, reference :441-442, README.md:92-106). */
   def s5PartitionedSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s5_part")
+    val out = tempDir("s5_part")
     orders(spark, dir).write.mode(SaveMode.Overwrite)
       .partitionBy("o_orderstatus").parquet(out)
     spark.read.parquet(out)
@@ -88,7 +85,7 @@ object Sources {
     * (skip-if-exists, reference :181-188,:462-465). */
   def s6IncrementalSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s6_incr")
+    val out = tempDir("s6_incr")
     val writer = new IncrementalWriter(spark, out, Seq("o_orderkey"))
     val batch = orders(spark, dir)
     val first = writer.append(batch)
@@ -100,7 +97,7 @@ object Sources {
   def s7VerifiedWrite(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (n, ok, bad) = VerifiedWriter.writeVerified(
-      spark, documents(spark, dir), tmp("s7_verified"), "doc_id", "text")
+      spark, documents(spark, dir), tempDir("s7_verified"), "doc_id", "text")
     Seq((n, ok, bad)).toDF("n_written", "n_verified", "n_mismatch")
   }
 
@@ -109,7 +106,7 @@ object Sources {
     * (reference get_or_create_drive_folder :135-160). */
   def s8GetOrCreateDirs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s8_dirs")
+    val out = tempDir("s8_dirs")
     val docs = documents(spark, dir)
     docs.write.mode(SaveMode.Append).partitionBy("lang").parquet(out)
     docs.write.mode(SaveMode.Append).partitionBy("lang").parquet(out)
@@ -120,7 +117,7 @@ object Sources {
     * write fully replaces the first (reference delete-after-load :474). */
   def s9OverwriteCommit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s9_overwrite")
+    val out = tempDir("s9_overwrite")
     val docs = documents(spark, dir)
     docs.write.mode(SaveMode.Overwrite).parquet(out)
     docs.filter($"n_chars" > 500).write.mode(SaveMode.Overwrite).parquet(out)
@@ -131,7 +128,7 @@ object Sources {
     * lands the complete set exactly once (:357-359 + task retry). */
   def s11ResumableLoad(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s11_resume")
+    val out = tempDir("s11_resume")
     val writer = new IncrementalWriter(spark, out, Seq("o_orderkey"))
     val all = orders(spark, dir)
     val partial = writer.append(all.filter($"o_orderkey" % 7 === 0))
@@ -147,7 +144,7 @@ object Sources {
   private val bloomStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def stageBloomEvents(spark: SparkSession, dir: String): String =
     bloomStaged.computeIfAbsent(dir, { _ =>
-      val out = tmp("s27_bloom")
+      val out = tempDir("s27_bloom")
       events(spark, dir)
         .write.mode(SaveMode.Overwrite)
         .option("parquet.bloom.filter.enabled#user_id", "true")
@@ -180,7 +177,7 @@ object Sources {
   private[graft] def stageDayPartitionedEvents(spark: SparkSession, dir: String): String =
     dayLayoutStaged.computeIfAbsent(dir, { _ =>
       import spark.implicits._
-      val out = tmp("s5b_days")
+      val out = tempDir("s5b_days")
       events(spark, dir)
         .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
         .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(out)
@@ -220,7 +217,7 @@ object Sources {
   private[graft] def stageFragmentedEvents(spark: SparkSession, dir: String): String =
     fragStaged.computeIfAbsent(dir, { _ =>
       import spark.implicits._
-      val frag = tmp("s20_frag")
+      val frag = tempDir("s20_frag")
       events(spark, dir)
         .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
         .repartition(8) // simulate 8 ingest writers => ~8 files per day dir
@@ -231,7 +228,7 @@ object Sources {
   private[graft] def compactLayout(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
     val frag = stageFragmentedEvents(spark, dir)
-    val compacted = tmp("s20_compact")
+    val compacted = tempDir("s20_compact")
     spark.read.parquet(frag)
       .repartition($"day")
       .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(compacted)
@@ -261,7 +258,7 @@ object Sources {
     * extra footer pass.) */
   def o13MergeSchema(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("o13_evolve")
+    val out = tempDir("o13_evolve")
     val docs = documents(spark, dir)
     docs.select($"doc_id", $"lang")
       .write.mode(SaveMode.Overwrite).parquet(s"$out/batch=1")
@@ -299,7 +296,7 @@ object Sources {
     * the physical files the query read. */
   private[graft] def rangeLayoutWrite(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val out = tmp("s28_range")
+    val out = tempDir("s28_range")
     events(spark, dir)
       .select($"event_id", $"user_id", $"value")
       .repartitionByRange(8, $"user_id", $"event_id")
@@ -339,7 +336,7 @@ object Sources {
     * doubled value, all other days the original. */
   def s22DynamicOverwrite(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s22_dyn")
+    val out = tempDir("s22_dyn")
     val base = events(spark, dir)
       .select($"event_id", $"value", date_format($"ts", "yyyy-MM-dd").as("day"))
     base.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(out)
@@ -372,7 +369,7 @@ object Sources {
     * PlanShapeSpec. */
   def s26RebalanceWrite(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s26_rebal")
+    val out = tempDir("s26_rebal")
     events(spark, dir)
       .select($"event_id", $"event_type", $"value")
       .hint("rebalance")
@@ -390,7 +387,7 @@ object Sources {
     * explicit schema (no inferSchema: a second full pass at 100 TB). */
   def o9CsvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("o9_csv")
+    val out = tempDir("o9_csv")
     orders(spark, dir)
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice",
         date_format($"o_orderdate", "yyyy-MM-dd").as("day"))
@@ -520,7 +517,7 @@ object Sources {
     * the two agreeing is the sink's whole contract. */
   def s16Dsv2ArchiveWrite(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("s16_archive")
+    val out = tempDir("s16_archive")
     def slice(r: Int): DataFrame =
       orders(spark, dir).filter($"o_orderkey" % 3 === r)
         .select($"o_orderkey".cast("string").as("key"),
@@ -548,7 +545,7 @@ object Sources {
   def o12ObservedMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val obs = new org.apache.spark.sql.Observation("o12")
-    val out = tmp("o12_sink")
+    val out = tempDir("o12_sink")
     orders(spark, dir)
       .observe(obs,
         count(lit(1)).as("n_rows"),
@@ -882,7 +879,7 @@ object Sources {
     * it). Declared schema on read, aggregate proves value fidelity. */
   def o10XmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("o10_xml")
+    val out = tempDir("o10_xml")
     documents(spark, dir).select($"doc_id", $"lang", $"n_chars")
       .write.mode(SaveMode.Overwrite).option("rowTag", "doc").format("xml").save(out)
     spark.read.schema("doc_id BIGINT, lang STRING, n_chars BIGINT")
@@ -895,7 +892,7 @@ object Sources {
     * interchangeably with parquet (same predicate/pruning machinery). */
   def o11OrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("o11_orc")
+    val out = tempDir("o11_orc")
     part(spark, dir).select($"p_partkey", $"p_brand", $"p_retailprice")
       .write.mode(SaveMode.Overwrite).orc(out)
     spark.read.orc(out)
@@ -915,7 +912,7 @@ object Sources {
     * economics made explicit. */
   def o14TextRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = tmp("o14_text")
+    val out = tempDir("o14_text")
     documents(spark, dir)
       .select(concat($"doc_id", lit("|"), $"lang", lit("|"), $"n_chars").as("value"))
       .write.mode(SaveMode.Overwrite).text(out)
@@ -1024,7 +1021,7 @@ object Sources {
     * no byte literal fixtures, no external codec. */
   private[graft] def stageJpegs(): String =
     jpegStaged.computeIfAbsent("jpegs", { _ =>
-      val dir = tmp("l5c_jpegs")
+      val dir = tempDir("l5c_jpegs")
       (0 until 8).foreach { i =>
         val w = 40 + (17 * i) % 113
         val h = 30 + (23 * i) % 89
@@ -1088,7 +1085,7 @@ object Sources {
     * DuckDB-oracle-checkable. */
   private[graft] def stageJp2s(): String =
     jp2Staged.computeIfAbsent("jp2s", { _ =>
-      val dir = tmp("l5g_jp2")
+      val dir = tempDir("l5g_jp2")
       (0 until 11).foreach { i =>
         val w = 40 + (17 * i) % 113
         val h = 30 + (23 * i) % 89
@@ -1253,7 +1250,7 @@ object Sources {
     * Pixel values are pure coordinate arithmetic for the DuckDB oracle. */
   private[graft] def stageBigJp2(): String =
     bigJp2Staged.computeIfAbsent("big", { _ =>
-      val dir = tmp("l5h_jp2")
+      val dir = tempDir("l5h_jp2")
       // h = 192, NOT 256: with a full 256-row sweep the per-row offsets
       // complete the mod-256 cycle and every channel's pixel sum comes out
       // identical no matter the multipliers — a channel-swap bug would
@@ -1285,7 +1282,7 @@ object Sources {
     * query's header carrier instead of guarded away. */
   private[graft] def stagePocBigJp2(): String =
     bigJp2Staged.computeIfAbsent("poc", { _ =>
-      val dir = tmp("l5k_poc_jp2")
+      val dir = tempDir("l5k_poc_jp2")
       val (w, h) = (384, 192)
       val comps = Array.tabulate(3) { c =>
         Array.tabulate(w * h)(j => ((j % w) * (9 + 4 * c) + (j / w) * 17 + c * 37) % 256)
@@ -1745,7 +1742,7 @@ object Sources {
     * Pixel formulas are the l5h/l5j family so the oracle is closed-form. */
   private[graft] def stagePrecinctJp2(): String =
     precinctJp2Staged.computeIfAbsent("prec", { _ =>
-      val dir = tmp("l5n_jp2")
+      val dir = tempDir("l5n_jp2")
       val (w, h) = (768, 384)
       // page_0: the r17 profile (auto RLCP); page_1 (r18): the SAME
       // random-access shape in RPCL — the resolution-major position
@@ -1900,7 +1897,7 @@ object Sources {
     * (hand fixture Y pins the missing-tail boundary). */
   private[graft] def stageLossyJp2s(): (String, Map[String, Long]) =
     lossyJp2Staged.computeIfAbsent("lossy", { _ =>
-      val dir = tmp("l5m_jp2")
+      val dir = tempDir("l5m_jp2")
       val sizes = (0 until 11).map { i =>
         val (w, h) = (64 + (17 * i) % 97, 48 + (23 * i) % 89)
         val comps = lossyJp2Comps(w, h, i)
@@ -2039,7 +2036,7 @@ object Sources {
     * and index-determined, so decoded features are oracle arithmetic. */
   private[graft] def stageWavs(): String =
     wavStaged.computeIfAbsent("wavs", { _ =>
-      val dir = tmp("l5d_wavs")
+      val dir = tempDir("l5d_wavs")
       (0 until 4).foreach { i =>
         val n = 4000 + i * 1000
         val pcm = new Array[Byte](n * 2)
@@ -2155,7 +2152,7 @@ object Sources {
     * and perceptual hashing must catch. */
   private[graft] def stagePhashJpegs(): String =
     phashStaged.computeIfAbsent("phash", { _ =>
-      val dir = tmp("l5e_phash")
+      val dir = tempDir("l5e_phash")
       (0 until 8).foreach { i =>
         val (w, h) = (96 + 8 * i, 80 + 8 * ((i * 3) % 5))
         val img = new java.awt.image.BufferedImage(
@@ -2262,7 +2259,7 @@ object Sources {
   private[graft] def stageEvolvedDocs(spark: SparkSession, dir: String): String =
     evoStaged.computeIfAbsent(dir, { _ =>
       import spark.implicits._
-      val out = tmp("s33_evo")
+      val out = tempDir("s33_evo")
       val d = documents(spark, dir)
       d.filter($"doc_id" % 2 === 0).select($"doc_id", $"text", $"lang")
         .write.mode(SaveMode.Overwrite).parquet(s"$out/gen=v1")
@@ -2334,7 +2331,7 @@ object Sources {
     import spark.implicits._
     val src = lineitem(spark, dir)
       .select($"l_orderkey", $"l_partkey", $"l_quantity", $"l_shipdate")
-    val root = tmp("s34_codec")
+    val root = tempDir("s34_codec")
     // r20 (guide §2.6 "overlap independent jobs"): the per-codec writes are
     // independent single-pass jobs over the same projection writing to
     // disjoint directories — submitted from one thread each so the second

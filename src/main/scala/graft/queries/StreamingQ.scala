@@ -55,7 +55,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val sink = java.nio.file.Files.createTempDirectory("st3_sink").toString
+    val sink = tempDir("st3_sink")
     val writer = new IncrementalWriter(spark, sink, Seq("event_id"))
     val appended = new java.util.concurrent.atomic.AtomicLong(0L)
     def runOnce(): Long = {
@@ -64,7 +64,7 @@ object StreamingQ {
         .writeStream
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_st3").toString)
+          tempDir("ck_st3"))
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           appended.addAndGet(writer.append(batch)): Unit
@@ -103,7 +103,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st5").toString)
+        tempDir("ck_st5"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches.incrementAndGet()
@@ -160,9 +160,9 @@ object StreamingQ {
       val lateDup = keyed.orderBy($"user_id", $"event_type").limit(1)
         .select($"user_id", $"event_type",
           to_timestamp(lit("2024-01-01 00:00:00")).as("ts"))
-      val out = java.nio.file.Files.createTempDirectory("st7b_src")
+      val out = java.nio.file.Paths.get(tempDir("st7b_src"))
       def stageOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory(s"st7b_$name").toString
+        val tmp = tempDir(s"st7b_$name")
         df.repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp)
         val listing = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
         val part =
@@ -191,7 +191,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = stageSt7b(spark, dir)
     val schema = spark.read.parquet(s"$staged/a.parquet").schema
-    val out = java.nio.file.Files.createTempDirectory("st7b_out").toString
+    val out = tempDir("st7b_out")
     // dedup state is ~(users × types) keys at fixture SF: 8 state
     // partitions instead of the batch default's 32 — the st2/st8/st13 rule
     val q = Streams.stateSession(spark, 8).readStream.schema(schema)
@@ -202,7 +202,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st7b").toString)
+        tempDir("ck_st7b"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out)
@@ -225,7 +225,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("st8_out").toString
+    val out = tempDir("st8_out")
     // ~100 distinct users at fixture SF: 8 state partitions, not the batch
     // default (the state partition count locks in when the first batch plans)
     val q = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
@@ -241,7 +241,7 @@ object StreamingQ {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st8").toString)
+        tempDir("ck_st8"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("batch_id", lit(batchId))
@@ -288,7 +288,7 @@ object StreamingQ {
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
-    val out = java.nio.file.Files.createTempDirectory("st9_out").toString
+    val out = tempDir("st9_out")
     val q = purchases.join(clicks,
         $"user_id" === $"c_user" &&
           $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts")
@@ -296,7 +296,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st9").toString)
+        tempDir("ck_st9"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out)
@@ -316,7 +316,7 @@ object StreamingQ {
     * incrementality changes the schedule, never the data. */
   def st10Dsv2Incremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sink = java.nio.file.Files.createTempDirectory("st10_sink").toString
+    val sink = tempDir("st10_sink")
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = spark.readStream
       .format(classOf[graft.sources.KbSearchSource].getName)
@@ -325,7 +325,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st10").toString)
+        tempDir("ck_st10"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches.incrementAndGet()
@@ -348,7 +348,7 @@ object StreamingQ {
     * hold exactly one copy of every issue in the quarter. */
   def st11StreamToArchive(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("st11_archive").toString
+    val out = tempDir("st11_archive")
     val q = spark.readStream
       .format(classOf[graft.sources.KbSearchSource].getName)
       .option("maxDaysPerTrigger", 30)
@@ -361,7 +361,7 @@ object StreamingQ {
       .format(classOf[graft.sources.KbArchiveSink].getName)
       .option("path", out)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st11").toString)
+        tempDir("ck_st11"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -403,7 +403,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("st13_out").toString
+    val out = tempDir("st13_out")
     // a RocksDB instance per state partition per batch, and each instance
     // costs an open/commit cycle (~0.5 s of native setup at any data
     // size): size to the key cardinality (~100 users at fixture SF), not
@@ -421,7 +421,7 @@ object StreamingQ {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st13").toString)
+        tempDir("ck_st13"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out): Unit
@@ -445,14 +445,14 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val dim = customer(spark, dir).select($"c_custkey", $"c_mktsegment")
-    val out = java.nio.file.Files.createTempDirectory("st14_out").toString
+    val out = tempDir("st14_out")
     val q = Streams.eventsStream(spark, staged, schema, 2)
       .join(dim, $"user_id" === $"c_custkey")
       .select($"event_id", $"c_mktsegment", $"value")
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st14").toString)
+        tempDir("ck_st14"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out): Unit
@@ -488,7 +488,7 @@ object StreamingQ {
       val docs = documents(spark, dir).select($"doc_id", $"lang", $"text")
       val planted = docs.unionByName(
         docs.select(($"doc_id" + 1000000).as("doc_id"), $"lang", $"text"))
-      val out = java.nio.file.Files.createTempDirectory("st15_src").toString
+      val out = tempDir("st15_src")
       // one copy per file => one copy per micro-batch: the second batch's
       // rows are ALL content-duplicates of the first and must append 0 rows
       planted.withColumn("half", ($"doc_id" >= 1000000).cast("int"))
@@ -501,7 +501,9 @@ object StreamingQ {
     import spark.implicits._
     val toks = split($"text", " ")
     val staged = stageSt15(spark, dir)
-    val sink = java.nio.file.Files.createTempDirectory("st15_sink").toString
+    // one level down, so the writer's `<sink>.keys` sidecar is inside the
+    // temp dir and goes with it
+    val sink = s"${tempDir("st15_sink")}/sink"
     val writer = new IncrementalWriter(spark, sink, Seq("content_key"), keyIndex = true)
     val q = spark.readStream
       .schema(spark.read.parquet(staged).schema)
@@ -515,7 +517,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st15").toString)
+        tempDir("ck_st15"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         writer.append(batch): Unit
@@ -539,7 +541,7 @@ object StreamingQ {
   private[graft] def stageSt21(spark: SparkSession, dir: String): String =
     st21Staged.computeIfAbsent(dir, { _ =>
       import spark.implicits._
-      val out = java.nio.file.Files.createTempDirectory("st21_src").toString
+      val out = tempDir("st21_src")
       val ev = events(spark, dir)
         .select($"user_id", $"event_type", unix_micros($"ts").as("us"), $"event_id")
       val mm = ev.agg(min($"us"), max($"us")).head()
@@ -547,7 +549,7 @@ object StreamingQ {
       val t0 = 1700000000000L
       Seq(ev.filter($"us" < bnd), ev.filter($"us" >= bnd)).zipWithIndex.foreach {
         case (half, i) =>
-          val tmpDir = java.nio.file.Files.createTempDirectory(s"st21_h$i").toString
+          val tmpDir = tempDir(s"st21_h$i")
           half.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpDir)
           val part = new java.io.File(tmpDir).listFiles
             .filter(_.getName.endsWith(".parquet")).head
@@ -663,7 +665,7 @@ object StreamingQ {
   def st21StreamingScd2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageSt21(spark, dir)
-    val sink = java.nio.file.Files.createTempDirectory("st21_sink").toString
+    val sink = tempDir("st21_sink")
     // each batch's merge reads and joins the sink on the stream's session,
     // so its joins run at the stream's width of 8 as well
     val ss = Streams.stateSession(spark, 8)
@@ -674,7 +676,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st21").toString)
+        tempDir("ck_st21"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch(scd2MergeBatch(ss, sink, nBuckets = 8) _)
       .start()
@@ -701,14 +703,14 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val mainSink = java.nio.file.Files.createTempDirectory("st16_main").toString
-    val dlqSink = java.nio.file.Files.createTempDirectory("st16_dlq").toString
+    val mainSink = tempDir("st16_main")
+    val dlqSink = tempDir("st16_dlq")
     val bad = $"event_type" === "error" || $"value" >= 300.0
     val q = Streams.eventsStream(spark, staged, schema, 2)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st16").toString)
+        tempDir("ck_st16"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
@@ -751,7 +753,7 @@ object StreamingQ {
           expr("substring(text, instr(text, ' ') + 1)").as("text"))
         .unionByName(probes.select(($"doc_id" + 2000000).as("doc_id"), $"lang",
           array_join(reverse(split($"text", " ")), " ").as("text")))
-      val out = java.nio.file.Files.createTempDirectory("st17_src").toString
+      val out = tempDir("st17_src")
       d.unionByName(batch2)
         .withColumn("half", ($"doc_id" >= 1000000).cast("int"))
         .repartition($"half") // one file per half-directory => 2 batches
@@ -791,8 +793,8 @@ object StreamingQ {
   def st17StreamingNeardup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageSt17(spark, dir)
-    val sink = java.nio.file.Files.createTempDirectory("st17_sink").toString
-    val idx = java.nio.file.Files.createTempDirectory("st17_idx").toString
+    val sink = tempDir("st17_sink")
+    val idx = tempDir("st17_idx")
     val q = spark.readStream
       .schema(spark.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", 1)
@@ -801,7 +803,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st17").toString)
+        tempDir("ck_st17"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         st17ProcessBatch(batch, batchId, sink, idx)
@@ -874,7 +876,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("st18_out").toString
+    val out = tempDir("st18_out")
     val q = Streams.eventsStream(
         Streams.stateSession(spark, 4, rocksDb = true), staged, schema, 2)
       .select(($"user_id" % 4).cast("long").as("shard"),
@@ -888,7 +890,7 @@ object StreamingQ {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st18").toString)
+        tempDir("ck_st18"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // each batch re-emits the FULL sketch of every shard it touched,
@@ -926,7 +928,7 @@ object StreamingQ {
   def stageSt19(spark: SparkSession, dir: String): String =
     st19StagedCache.computeIfAbsent(dir, { _ =>
       import spark.implicits._
-      val out = java.nio.file.Files.createTempDirectory("st19_staged").toString
+      val out = tempDir("st19_staged")
       val ev = events(spark, dir)
       ev.repartition(2).write.mode(SaveMode.Overwrite).parquet(out)
       val dataFiles = new java.io.File(out).listFiles
@@ -994,7 +996,7 @@ object StreamingQ {
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
-    val out = java.nio.file.Files.createTempDirectory("st19_out").toString
+    val out = tempDir("st19_out")
     val q = purchases.join(clicks,
         $"user_id" === $"c_user" &&
           $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
@@ -1003,7 +1005,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st19").toString)
+        tempDir("ck_st19"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out)
@@ -1041,7 +1043,7 @@ object StreamingQ {
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
-    val out = java.nio.file.Files.createTempDirectory("st22_out").toString
+    val out = tempDir("st22_out")
     val q = purchases.join(clicks,
         $"user_id" === $"c_user" &&
           $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
@@ -1050,7 +1052,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st22").toString)
+        tempDir("ck_st22"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out)
@@ -1090,7 +1092,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("st23_out").toString
+    val out = tempDir("st23_out")
     val q = Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
       .observe("gate",
         count(lit(1)).as("n_rows"),
@@ -1099,7 +1101,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st23").toString)
+        tempDir("ck_st23"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the REAL job the metrics ride along with (o12 discipline)
@@ -1157,7 +1159,7 @@ object StreamingQ {
     import org.apache.spark.sql.streaming.OutputMode
     val staged = stageSt19(spark, dir)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("st20_out").toString
+    val out = tempDir("st20_out")
     val gapUs = 30L * 60 * 1000 * 1000
     val q = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .filter($"user_id" % 4 === 0) // sentinel user also passes → flush
@@ -1193,7 +1195,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st20").toString)
+        tempDir("ck_st20"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out)
@@ -1363,7 +1365,7 @@ object StreamingQ {
             .count() <= rowCap)
         broadcast(iv)
       else iv
-    val out = java.nio.file.Files.createTempDirectory("st26_out").toString
+    val out = tempDir("st26_out")
     val q = Streams.eventsStream(spark, staged, schema, 2)
       .filter($"event_type" === "view")
       .select($"user_id", unix_micros($"ts").as("us"), $"event_id")
@@ -1374,7 +1376,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st26").toString)
+        tempDir("ck_st26"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(out): Unit
@@ -1412,7 +1414,7 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val outRoot = java.nio.file.Files.createTempDirectory("st27").toString
+    val outRoot = tempDir("st27")
     val live = s"$outRoot/live"
     def parquetFiles(p: String): Int = {
       val d = new java.io.File(p)
@@ -1423,7 +1425,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st27").toString)
+        tempDir("ck_st27"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(SaveMode.Append).parquet(live)
@@ -1461,7 +1463,7 @@ object StreamingQ {
   private[graft] def stageSt28(spark: SparkSession, dir: String): String =
     st28Staged.computeIfAbsent(dir, { _ =>
       import spark.implicits._
-      val out = java.nio.file.Files.createTempDirectory("st28_src").toString
+      val out = tempDir("st28_src")
       documents(spark, dir).select($"doc_id", $"text")
         .withColumn("half", ($"doc_id" % 2).cast("int"))
         .repartition($"half")
@@ -1534,8 +1536,8 @@ object StreamingQ {
       spark: SparkSession, dir: String): (DataFrame, String, String) = {
     import spark.implicits._
     val staged = stageSt28(spark, dir)
-    val hitsSink = java.nio.file.Files.createTempDirectory("st28_hits").toString
-    val totalsSink = java.nio.file.Files.createTempDirectory("st28_tot").toString
+    val hitsSink = tempDir("st28_hits")
+    val totalsSink = tempDir("st28_tot")
     val q = spark.readStream
       .schema(spark.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", 1)
@@ -1544,7 +1546,7 @@ object StreamingQ {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck_st28").toString)
+        tempDir("ck_st28"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val (hitsDelta, obs) = st28BatchDeltas(batch)

@@ -56,7 +56,7 @@ object KbDim {
 
   /** Per-JVM default location (the catalog option `dimDir` overrides). */
   lazy val defaultDir: String =
-    java.nio.file.Files.createTempDirectory("kb_dim").toString
+    graft.Engine.tempDir("kb_dim")
 
   private[sources] def fs(dir: String): FileSystem =
     FileSystem.get(new java.net.URI(dir), new Configuration())

@@ -123,7 +123,7 @@ object Streams {
     * files, and so the same rows, in each micro-batch. */
   def stageEvents(spark: SparkSession, dir: String, n: Int): String =
     stagedCache.computeIfAbsent((dir, n), { _ =>
-      val out = java.nio.file.Files.createTempDirectory("events_staged").toString
+      val out = Engine.tempDir("events_staged")
       Engine.events(spark, dir).repartition(n)
         .write.mode(SaveMode.Overwrite).parquet(out)
       new java.io.File(out).listFiles.filter(_.getName.startsWith("part-"))
@@ -176,8 +176,8 @@ object Streams {
   /** Like [[runCompleteToParquet]] but also returns the checkpoint dir, for
     * callers that inspect the retained state afterwards (state source). */
   def runCompleteToParquetCk(agg: DataFrame, ckName: String): (String, String) = {
-    val out = java.nio.file.Files.createTempDirectory(s"${ckName}_sink").toString
-    val ck = java.nio.file.Files.createTempDirectory(s"ck_$ckName").toString
+    val out = Engine.tempDir(s"${ckName}_sink")
+    val ck = Engine.tempDir(s"ck_$ckName")
     val q = agg.writeStream
       .outputMode("complete")
       .option("checkpointLocation", ck)

@@ -17,6 +17,8 @@ import scala.jdk.CollectionConverters._
   *     query that needs its own settings runs on a child made by
   *     [[Engine.scoped]], which configures the child once, before anyone
   *     can see it; no other line in `src/main` writes a session's config.
+  *   - Temp directories: every checkpoint, sink and staging directory comes
+  *     from [[Engine.tempDir]], which deletes it when the JVM exits.
   */
 class SessionSurfaceSpec extends AnyFunSuite {
 
@@ -58,5 +60,16 @@ class SessionSurfaceSpec extends AnyFunSuite {
     assert(sites.forall(_._1 == "Engine.scala"), listing)
     // one `newSession()` and the one loop that configures the new child
     assert(sites.size <= 2, listing)
+  }
+
+  test("only Engine creates temp directories") {
+    val sites = sources.flatMap { case (name, text) =>
+      text.split("\n").toSeq.zipWithIndex.collect {
+        case (line, i) if line.contains("createTempDirectory(") &&
+            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
+          (name, s"$name:${i + 1}: ${line.trim}")
+      }
+    }
+    assert(sites.forall(_._1 == "Engine.scala"), sites.map(_._2).mkString("\n", "\n", ""))
   }
 }
