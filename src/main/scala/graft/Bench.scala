@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE `{"metric":…}` JSON line with the headline numbers.
   *
@@ -23,25 +21,6 @@ import org.apache.spark.sql.SparkSession
   * should read the file, not the scrape.
   */
 object Bench {
-  /** Untimed preparation of one fixture dir, shared with [[ScaleBench]]: a
-    * warm-up, so JVM/codegen/parquet-reader startup does not land on
-    * whichever query happens to sort first, then the one-time
-    * layout/staging costs. At production scale these are paid at ingest
-    * and amortized over every later query, so folding them into a single
-    * query's wall time would misstate steady-state cost. */
-  def prepare(spark: SparkSession, dir: String): Unit = {
-    spark.range(1000000).selectExpr("sum(id) AS s")
-      .write.format("noop").mode("overwrite").save()
-    queries.Relational.stageBucketedTables(spark, dir)
-    streaming.Streams.stageEvents(spark, dir, 4): Unit
-    queries.StreamingQ.stageSt7b(spark, dir): Unit
-    queries.StreamingQ.stageSt15(spark, dir): Unit
-    queries.Sources.stageDayPartitionedEvents(spark, dir): Unit
-    queries.Sources.stageFragmentedEvents(spark, dir): Unit
-    queries.StreamingQ.stageSt19(spark, dir): Unit
-    queries.Sources.stageBloomEvents(spark, dir): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     // args override env (env vars don't reach a forked runMain through the
     // sbt client): [sfDir] [comma-separated query subset]
@@ -53,7 +32,6 @@ object Bench {
     // check
     val spark = Engine.session()
     val cpus = spark.sparkContext.defaultParallelism
-    prepare(spark, sfDir)
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
     // Every query is sampled by the one policy in [[Measure]]; its headline

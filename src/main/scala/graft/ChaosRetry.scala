@@ -157,19 +157,11 @@ object ChaosRetry {
     }
     val out = Engine.tempDir("chaos_stream_archive")
     val (_, injected) = armed(3) {
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
+      val rows = spark.readStream
+        .schema(Engine.parquet(spark, src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream
-        .outputMode("append")
-        .format(classOf[graft.sources.KbArchiveSink].getName)
-        .option("path", out)
-        .option("checkpointLocation",
-          Engine.tempDir("chaos_stream_ck"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streams.runToArchive(rows, "chaos_stream", out)
     }
     require(injected >= 2,
       s"stream: expected a first-attempt death in each epoch, injected=$injected")

@@ -200,7 +200,6 @@ object Profile {
     val names = args.lift(2).filter(_.trim.nonEmpty).map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = Engine.session()
-    Bench.prepare(spark, sfDir)
     val record = profile(spark, sfDir, names)
     Jfmt.writeAtomic(outPath, record.json(sfDir, spark.sparkContext.defaultParallelism))
     println(s"profile of ${record.attempted} queries, ${record.failed} failed, written to $outPath")

@@ -64,9 +64,6 @@ object ScaleBench {
     val only = args.lift(3).filter(_.trim.nonEmpty).map(_.split(",").toSet)
     val spark = Engine.session()
     val cpus = spark.sparkContext.defaultParallelism
-    // Bench's untimed warm-up and one-time staging, paid for BOTH dirs
-    // before any measurement
-    for (dir <- Seq(baseDir, scaledDir)) Bench.prepare(spark, dir)
 
     val fns = SparkEntry.queries
     var base = Vector.empty[(String, Seq[Double])]

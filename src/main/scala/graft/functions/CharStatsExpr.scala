@@ -84,17 +84,10 @@ case class CharStatsExpr(child: Expression) extends UnaryExpression {
 
 object CharStatsExpr {
 
-  /** Register per session (idempotent, session-scoped — same rationale as
-    * [[CosineSimilarityExpr.cosineNative]]) and return a Column entry. */
-  def charStatsNative(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_stats_native",
-      exprs => {
-        require(exprs.length == 1,
-          s"char_stats_native expects exactly 1 argument, got ${exprs.length}")
-        CharStatsExpr(exprs.head)
-      },
-      "built-in")
+  /** Column entry for `char_stats_native`, which [[graft.plans.GraftExtensions]]
+    * registers once in every engine session. `spark` is unused; the
+    * parameter stays because the benchmark's curation workload calls the
+    * native helpers with it. */
+  def charStatsNative(spark: SparkSession, c: Column): Column =
     org.apache.spark.sql.functions.call_function("char_stats_native", c)
-  }
 }

@@ -89,17 +89,10 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
 
 object CosineSimilarityExpr {
 
-  /** Register as a SQL function and return a Column-level entry point via
-    * the public call_function API (no Column internals).
-    *
-    * Registration is unconditional and idempotent
-    * (createOrReplaceTempFunction) and targets THIS session's registry —
-    * a JVM-global once-flag would silently skip registration for any
-    * SparkSession created after the first one (newSession(), restart),
-    * breaking every cosine_native query in it. */
-  def cosineNative(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_native", exprs => CosineSimilarityExpr(exprs.head, exprs(1)), "built-in")
+  /** Column entry for `cosine_native`, which [[graft.plans.GraftExtensions]]
+    * registers once in every engine session. `spark` is unused; the
+    * parameter stays because the benchmark's curation workload calls the
+    * native helpers with it. */
+  def cosineNative(spark: SparkSession, a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("cosine_native", a, b)
-  }
 }

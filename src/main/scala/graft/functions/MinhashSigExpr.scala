@@ -92,17 +92,10 @@ object MinhashSigExpr {
     new GenericArrayData(mins.map(UTF8String.fromString(_): Any))
   }
 
-  /** Register per session (idempotent, session-scoped) and return a
-    * Column entry — same pattern as [[CharStatsExpr.charStatsNative]]. */
-  def minhashSigNative(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig_native",
-      exprs => {
-        require(exprs.length == 1,
-          s"minhash_sig_native expects exactly 1 argument, got ${exprs.length}")
-        MinhashSigExpr(exprs.head)
-      },
-      "built-in")
+  /** Column entry for `minhash_sig_native`, which [[graft.plans.GraftExtensions]]
+    * registers once in every engine session. `spark` is unused; the
+    * parameter stays because the benchmark's curation workload calls the
+    * native helpers with it. */
+  def minhashSigNative(spark: SparkSession, c: Column): Column =
     org.apache.spark.sql.functions.call_function("minhash_sig_native", c)
-  }
 }

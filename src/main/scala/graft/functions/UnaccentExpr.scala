@@ -73,17 +73,10 @@ object UnaccentExpr {
         Normalizer.Form.NFC))
   }
 
-  /** Register per session (idempotent, session-scoped — same rationale as
-    * [[CosineSimilarityExpr.cosineNative]]) and return a Column entry. */
-  def unaccentNative(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unaccent_native",
-      exprs => {
-        require(exprs.length == 1,
-          s"unaccent_native expects exactly 1 argument, got ${exprs.length}")
-        UnaccentExpr(exprs.head)
-      },
-      "built-in")
+  /** Column entry for `unaccent_native`, which [[graft.plans.GraftExtensions]]
+    * registers once in every engine session. `spark` is unused; the
+    * parameter stays because the benchmark's curation workload calls the
+    * native helpers with it. */
+  def unaccentNative(spark: SparkSession, c: Column): Column =
     org.apache.spark.sql.functions.call_function("unaccent_native", c)
-  }
 }

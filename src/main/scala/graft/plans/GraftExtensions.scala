@@ -1,6 +1,8 @@
 package graft.plans
 
+import graft.functions.{CharStatsExpr, CosineSimilarityExpr, MinhashSigExpr, UnaccentExpr}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -8,15 +10,38 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Session extensions — the full SURVEY §2 extension-point ladder:
   * a custom `Rule[LogicalPlan]` (predicate rewriting), a custom planner
-  * `Strategy` backing the [[TopKPerKey]] whole-operator node, AND a
-  * custom table-valued function ([[DaySpineTvf]]).
-  * Installed by every engine session ([[graft.Engine.session]]). */
+  * `Strategy` backing the [[TopKPerKey]] whole-operator node, a custom
+  * table-valued function ([[DaySpineTvf]]) and the four native scalar
+  * expressions in [[graft.functions]].
+  * Installed by every engine session ([[graft.Engine.session]]); a
+  * `newSession()` child inherits the extensions, so each session's
+  * registry holds the functions from the start and nothing registers
+  * them again per call. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => PushFilterThroughNanoNarrowing)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     ext.injectTableFunction(DaySpineTvf.description)
+    ext.injectFunction(native("unaccent_native", classOf[UnaccentExpr])(
+      a => UnaccentExpr(a.head)))
+    ext.injectFunction(native("minhash_sig_native", classOf[MinhashSigExpr])(
+      a => MinhashSigExpr(a.head)))
+    ext.injectFunction(native("char_stats_native", classOf[CharStatsExpr])(
+      a => CharStatsExpr(a.head)))
+    ext.injectFunction(native("cosine_native", classOf[CosineSimilarityExpr], arity = 2)(
+      a => CosineSimilarityExpr(a.head, a(1))))
   }
+
+  /** A function-registry entry whose builder checks the argument count
+    * before it builds the expression. */
+  private def native(name: String, cls: Class[_], arity: Int = 1)(
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), { args =>
+      require(args.length == arity, s"$name expects exactly $arity argument" +
+        (if (arity == 1) "" else "s") + s", got ${args.length}")
+      build(args)
+    })
 }
 
 /** Makes event-time predicates on the nanos→micros narrowing pushable.

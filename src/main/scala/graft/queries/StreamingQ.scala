@@ -6,15 +6,20 @@ import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types.DecimalType
 
-/** Streaming semantics (SURVEY §2.9 ST1-ST7). ST2/ST3/ST5 execute REAL
-  * Structured Streaming queries (readStream → stateful agg / foreachBatch →
-  * sink, Trigger.AvailableNow, checkpointed) whose final state is
-  * deterministic, so even the streaming path is oracle-checked. Window
-  * semantics (tumbling/sliding/session) additionally run in batch mode —
-  * same operators, same results — for the DuckDB comparison.
+/** Streaming semantics (SURVEY §2.9 ST1-ST7 and the st8-st28 extensions).
+  * The `st*` streams are REAL Structured Streaming queries (readStream →
+  * stateful agg / join / foreachBatch → sink) whose final state is
+  * deterministic, so even the streaming path is oracle-checked. Each
+  * query builds its stream (session, output mode, pacing, batch body) and
+  * hands it to [[graft.streaming.Streams.run]] or its parquet/archive-sink
+  * variants, which own the run policy: a `ck_<name>` checkpoint,
+  * `Trigger.AvailableNow`, start, and an await that rethrows a failed
+  * batch. Sinks a stream wrote are read back through [[graft.Engine.parquet]].
+  * Window semantics (tumbling/sliding/session) additionally run in batch
+  * mode — same operators, same results — for the DuckDB comparison.
   */
 object StreamingQ {
 
@@ -45,7 +50,7 @@ object StreamingQ {
       .groupBy(window($"ts", "1 day").as("w"))
       .agg(count(lit(1)).as("n"))
       .select($"w.start".as("w_start"), $"n")
-    spark.read.parquet(Streams.runCompleteToParquet(agg, "st2"))
+    parquet(spark, Streams.runToParquet(agg, "st2", "complete")._1)
   }
 
   /** ST3: exactly-once-style sink — streaming foreachBatch into the
@@ -60,17 +65,9 @@ object StreamingQ {
     val appended = new java.util.concurrent.atomic.AtomicLong(0L)
     def runOnce(): Long = {
       appended.set(0L)
-      val q = Streams.eventsStream(spark, staged, schema, 2)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          tempDir("ck_st3"))
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          appended.addAndGet(writer.append(batch)): Unit
-        }
-        .start()
-      q.awaitTermination()
+      Streams.run(Streams.eventsStream(spark, staged, schema, 2), "st3") { (batch, _) =>
+        appended.addAndGet(writer.append(batch)): Unit
+      }
       appended.get()
     }
     val first = runOnce()
@@ -99,18 +96,10 @@ object StreamingQ {
     val schema = Streams.eventsSchema(spark, dir)
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val rows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = Streams.eventsStream(spark, staged, schema, 1)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st5"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batches.incrementAndGet()
-        rows.addAndGet(batch.count()): Unit
-      }
-      .start()
-    q.awaitTermination()
+    Streams.run(Streams.eventsStream(spark, staged, schema, 1), "st5") { (batch, _) =>
+      batches.incrementAndGet()
+      rows.addAndGet(batch.count()): Unit
+    }
     Seq((batches.get(), rows.get())).toDF("n_batches", "n_rows")
   }
 
@@ -190,26 +179,15 @@ object StreamingQ {
   def st7bWatermarkDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageSt7b(spark, dir)
-    val schema = spark.read.parquet(s"$staged/a.parquet").schema
-    val out = tempDir("st7b_out")
+    val schema = parquet(spark, s"$staged/a.parquet").schema
     // dedup state is ~(users × types) keys at fixture SF: 8 state
     // partitions instead of the batch default's 32 — the st2/st8/st13 rule
-    val q = Streams.stateSession(spark, 8).readStream.schema(schema)
+    val deduped = Streams.stateSession(spark, 8).readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select($"user_id", $"event_type")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st7b"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    parquet(spark, Streams.runToParquet(deduped, "st7b")._1)
   }
 
   /** ST8: custom keyed state — mapGroupsWithState running per-user counts,
@@ -228,7 +206,7 @@ object StreamingQ {
     val out = tempDir("st8_out")
     // ~100 distinct users at fixture SF: 8 state partitions, not the batch
     // default (the state partition count locks in when the first batch plans)
-    val q = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
+    val counts = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .select($"user_id").as[Long]
       .groupByKey(identity)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
@@ -238,19 +216,12 @@ object StreamingQ {
           (user, n)
       }
       .toDF("user_id", "n_events")
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation",
-        tempDir("ck_st8"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
+    Streams.run(counts, "st8", "update") { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode(SaveMode.Append).parquet(out)
+    }
     val w = Window.partitionBy($"user_id").orderBy($"batch_id".desc)
-    spark.read.parquet(out)
+    parquet(spark, out)
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"user_id", $"n_events")
@@ -288,22 +259,11 @@ object StreamingQ {
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
-    val out = tempDir("st9_out")
-    val q = purchases.join(clicks,
+    val joined = purchases.join(clicks,
         $"user_id" === $"c_user" &&
           $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts")
       .select($"user_id", $"p_id", $"c_id")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st9"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    parquet(spark, Streams.runToParquet(joined, "st9")._1)
   }
 
   /** ST10: incremental harvest through the DSv2 connector's micro-batch
@@ -318,22 +278,15 @@ object StreamingQ {
     import spark.implicits._
     val sink = tempDir("st10_sink")
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = spark.readStream
+    val harvest = spark.readStream
       .format(classOf[graft.sources.KbSearchSource].getName)
       .option("maxDaysPerTrigger", 10)
       .load()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st10"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batches.incrementAndGet()
-        batch.write.mode(SaveMode.Append).parquet(sink): Unit
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sink)
+    Streams.run(harvest, "st10") { (batch, _) =>
+      batches.incrementAndGet()
+      batch.write.mode(SaveMode.Append).parquet(sink): Unit
+    }
+    parquet(spark, sink)
       .groupBy($"pub")
       .agg(count(lit(1)).as("n_issues"),
         sum($"n_pages".cast("long")).as("total_pages"))
@@ -349,22 +302,14 @@ object StreamingQ {
   def st11StreamToArchive(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = tempDir("st11_archive")
-    val q = spark.readStream
+    val issues = spark.readStream
       .format(classOf[graft.sources.KbSearchSource].getName)
       .option("maxDaysPerTrigger", 30)
       .load()
       .select($"issue_id".as("key"),
         concat_ws(",", $"pub", $"day".cast("string"), $"n_pages".cast("string"))
           .as("payload"))
-      .writeStream
-      .outputMode("append")
-      .format(classOf[graft.sources.KbArchiveSink].getName)
-      .option("path", out)
-      .option("checkpointLocation",
-        tempDir("ck_st11"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.runToArchive(issues, "st11", out)
     val manifestRows = graft.sources.KbArchive.readManifest(out).map(_.rows).sum
     spark.read.text(out)
       .select(split(split($"value", "\t")(1), ",")(0).as("pub"))
@@ -388,7 +333,7 @@ object StreamingQ {
     val agg = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .groupBy(window($"ts", "1 day").as("w"))
       .agg(count(lit(1)).as("n"))
-    val (_, ck) = Streams.runCompleteToParquetCk(agg, "st12")
+    val (_, ck) = Streams.runToParquet(agg, "st12", "complete")
     spark.read.format("statestore").load(ck)
       .select($"key.window.start".as("w_start"), $"value.count".as("n"))
   }
@@ -403,14 +348,13 @@ object StreamingQ {
     import spark.implicits._
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = tempDir("st13_out")
     // a RocksDB instance per state partition per batch, and each instance
     // costs an open/commit cycle (~0.5 s of native setup at any data
     // size): size to the key cardinality (~100 users at fixture SF), not
     // the batch default — 32 partitions × 2 batches = 64 cycles, 4 ⇒ 8,
     // with 25 keys per store. A 100 TB deployment inverts the math (keys
     // ≫ cycle overhead) and sizes partitions UP for state volume.
-    val q = Streams.eventsStream(
+    val running = Streams.eventsStream(
         Streams.stateSession(spark, 4, rocksDb = true), staged, schema, 2)
       .select($"user_id".as[Long], $"value".as[Double])
       .groupByKey(_._1)
@@ -418,17 +362,7 @@ object StreamingQ {
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
       .toDF("user_id", "n_events", "max_value")
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation",
-        tempDir("ck_st13"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out): Unit
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out).groupBy($"user_id")
+    parquet(spark, Streams.runToParquet(running, "st13", "update")._1).groupBy($"user_id")
       .agg(max($"n_events").as("n_events"), max($"max_value").as("max_value"))
   }
 
@@ -445,21 +379,10 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val dim = customer(spark, dir).select($"c_custkey", $"c_mktsegment")
-    val out = tempDir("st14_out")
-    val q = Streams.eventsStream(spark, staged, schema, 2)
+    val enriched = Streams.eventsStream(spark, staged, schema, 2)
       .join(dim, $"user_id" === $"c_custkey")
       .select($"event_id", $"c_mktsegment", $"value")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st14"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out): Unit
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    parquet(spark, Streams.runToParquet(enriched, "st14")._1)
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 2))).cast("double").as("sum_value"))
@@ -505,8 +428,8 @@ object StreamingQ {
     // temp dir and goes with it
     val sink = s"${tempDir("st15_sink")}/sink"
     val writer = new IncrementalWriter(spark, sink, Seq("content_key"), keyIndex = true)
-    val q = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
+    val gated = spark.readStream
+      .schema(parquet(spark, staged).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged)
       .select($"doc_id", $"lang", $"text",
@@ -514,17 +437,8 @@ object StreamingQ {
         size(array_distinct(toks)).cast("long").as("n_uniq"))
       .filter($"n_tokens" >= 20 && $"n_uniq".cast("double") / $"n_tokens" >= 0.3)
       .withColumn("content_key", md5($"text".cast("binary")))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st15"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writer.append(batch): Unit
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sink)
+    Streams.run(gated, "st15") { (batch, _) => writer.append(batch): Unit }
+    parquet(spark, sink)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_kept"), sum($"n_tokens").as("total_tokens"))
   }
@@ -590,7 +504,7 @@ object StreamingQ {
       // only the buckets this batch touches are read or rewritten; the
       // collect is ≤ nBuckets scalars, never data-sized
       val touchedPb = runsB.select($"pb").distinct().as[Long].collect().toSeq
-      val curAll = spark.read.parquet(sink).filter($"pb".isin(touchedPb: _*))
+      val curAll = parquet(spark, sink).filter($"pb".isin(touchedPb: _*))
       // bucket fence: a bucket that already saw this bid is dropped from
       // the rewrite set entirely (dynamic overwrite leaves it untouched)
       val fenced = curAll.groupBy($"pb").agg(max($"applied_bid").as("mx"))
@@ -669,19 +583,12 @@ object StreamingQ {
     // each batch's merge reads and joins the sink on the stream's session,
     // so its joins run at the stream's width of 8 as well
     val ss = Streams.stateSession(spark, 8)
-    val q = ss.readStream
-      .schema(spark.read.parquet(staged).schema)
+    val arrivals = ss.readStream
+      .schema(parquet(spark, staged).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st21"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(scd2MergeBatch(ss, sink, nBuckets = 8) _)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sink)
+    Streams.run(arrivals, "st21")(scd2MergeBatch(ss, sink, nBuckets = 8))
+    parquet(spark, sink)
       .select($"user_id", $"event_type", $"valid_from_us", $"valid_to_us",
         $"valid_to_us".isNull.as("is_current"), $"n_events")
   }
@@ -706,32 +613,24 @@ object StreamingQ {
     val mainSink = tempDir("st16_main")
     val dlqSink = tempDir("st16_dlq")
     val bad = $"event_type" === "error" || $"value" >= 300.0
-    val q = Streams.eventsStream(spark, staged, schema, 2)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st16"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.persist()
-        try {
-          cached.filter(!bad)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$mainSink/batch_id=$batchId")
-          cached.filter(bad)
-            .withColumn("reason", when($"event_type" === "error", "error_type")
-              .otherwise("outlier_value"))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$dlqSink/batch_id=$batchId")
-        } finally { cached.unpersist(); () }
-      }
-      .start()
-    q.awaitTermination()
-    val accepted = spark.read.parquet(mainSink)
+    Streams.run(Streams.eventsStream(spark, staged, schema, 2), "st16") { (batch, batchId) =>
+      val cached = batch.persist()
+      try {
+        cached.filter(!bad)
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$mainSink/batch_id=$batchId")
+        cached.filter(bad)
+          .withColumn("reason", when($"event_type" === "error", "error_type")
+            .otherwise("outlier_value"))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$dlqSink/batch_id=$batchId")
+      } finally { cached.unpersist(); () }
+    }
+    val accepted = parquet(spark, mainSink)
       .groupBy($"event_type".as("key"))
       .agg(count(lit(1)).as("n"))
       .withColumn("route", lit("accepted"))
-    val quarantined = spark.read.parquet(dlqSink)
+    val quarantined = parquet(spark, dlqSink)
       .groupBy($"reason".as("key"))
       .agg(count(lit(1)).as("n"))
       .withColumn("route", lit("quarantined"))
@@ -795,22 +694,13 @@ object StreamingQ {
     val staged = stageSt17(spark, dir)
     val sink = tempDir("st17_sink")
     val idx = tempDir("st17_idx")
-    val q = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
+    val docs = spark.readStream
+      .schema(parquet(spark, staged).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged)
       .select($"doc_id", $"lang", $"text")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st17"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        st17ProcessBatch(batch, batchId, sink, idx)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sink).select($"doc_id", $"lang")
+    Streams.run(docs, "st17")(st17ProcessBatch(_, _, sink, idx))
+    parquet(spark, sink).select($"doc_id", $"lang")
   }
 
   /** One st17 micro-batch: dedup against the PRE-batch index, append
@@ -840,7 +730,7 @@ object StreamingQ {
       }
       val dup =
         if (!hasPrior) null
-        else bands.join(sp.read.parquet(idx).filter($"batch_id" < batchId),
+        else bands.join(parquet(sp, idx).filter($"batch_id" < batchId),
           Seq("band", "bi")).select($"id").distinct()
       val kept =
         if (dup == null) cached
@@ -877,7 +767,7 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = tempDir("st18_out")
-    val q = Streams.eventsStream(
+    val sketches = Streams.eventsStream(
         Streams.stateSession(spark, 4, rocksDb = true), staged, schema, 2)
       .select(($"user_id" % 4).cast("long").as("shard"),
         $"user_id".cast("long").as("item"), $"event_id".cast("long"))
@@ -887,25 +777,18 @@ object StreamingQ {
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
       .toDF("shard", "user_id", "est_in_shard")
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation",
-        tempDir("ck_st18"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // each batch re-emits the FULL sketch of every shard it touched,
-        // so a shard's latest batch directory is its final state (the
-        // read-back ranks per shard; Overwrite fencing keeps replays
-        // idempotent, st16-style)
-        batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
-      }
-      .start()
-    q.awaitTermination()
+    Streams.run(sketches, "st18", "update") { (batch, batchId) =>
+      // each batch re-emits the FULL sketch of every shard it touched,
+      // so a shard's latest batch directory is its final state (the
+      // read-back ranks per shard; Overwrite fencing keeps replays
+      // idempotent, st16-style)
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
+    }
     // final sketch PER SHARD = that shard's latest emission: a shard with
     // no input rows in the final micro-batch emits nothing there, so
     // filtering to the global max batch_id would silently drop its entire
     // sketch — rank batches within each shard instead
-    val all = spark.read.parquet(out)
+    val all = parquet(spark, out)
     val latest = Window.partitionBy($"shard").orderBy($"batch_id".desc)
     all.withColumn("rk", dense_rank().over(latest))
       .filter($"rk" === 1)
@@ -996,23 +879,12 @@ object StreamingQ {
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
-    val out = tempDir("st19_out")
-    val q = purchases.join(clicks,
+    val joined = purchases.join(clicks,
         $"user_id" === $"c_user" &&
           $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
         "left_outer")
       .select($"user_id", $"p_id", $"c_id")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st19"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out).filter($"user_id" < 999999000L)
+    parquet(spark, Streams.runToParquet(joined, "st19")._1).filter($"user_id" < 999999000L)
   }
 
   /** ST22: stream-stream FULL OUTER join — the reconciliation semantics
@@ -1043,23 +915,12 @@ object StreamingQ {
       .filter($"event_type" === "click" && $"user_id" % 4 === 0)
       .select($"user_id".as("c_user"), $"event_id".as("c_id"), $"ts".as("c_ts"))
       .withWatermark("c_ts", "40 days")
-    val out = tempDir("st22_out")
-    val q = purchases.join(clicks,
+    val joined = purchases.join(clicks,
         $"user_id" === $"c_user" &&
           $"c_ts" >= $"p_ts" - expr("interval 1 hour") && $"c_ts" <= $"p_ts",
         "full_outer")
       .select(coalesce($"user_id", $"c_user").as("uid"), $"p_id", $"c_id")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st22"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out).filter($"uid" < 999999000L)
+    parquet(spark, Streams.runToParquet(joined, "st22")._1).filter($"uid" < 999999000L)
   }
 
   /** ST23: streaming observed metrics — the o12 data-quality gate moved
@@ -1093,22 +954,15 @@ object StreamingQ {
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
     val out = tempDir("st23_out")
-    val q = Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
+    val gated = Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
       .observe("gate",
         count(lit(1)).as("n_rows"),
         sum(floor($"value" * 100).cast("long")).as("sum_cents"),
         sum(($"value" > 100).cast("long")).as("n_big"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st23"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the REAL job the metrics ride along with (o12 discipline)
-        batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
-      }
-      .start()
-    q.awaitTermination()
+    val q = Streams.run(gated, "st23") { (batch, batchId) =>
+      // the REAL job the metrics ride along with (o12 discipline)
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$out/batch_id=$batchId")
+    }
     // recentProgress is synchronous after termination — no listener
     // race; batches with no data report no "gate" entry
     q.recentProgress.toSeq
@@ -1159,9 +1013,8 @@ object StreamingQ {
     import org.apache.spark.sql.streaming.OutputMode
     val staged = stageSt19(spark, dir)
     val schema = Streams.eventsSchema(spark, dir)
-    val out = tempDir("st20_out")
     val gapUs = 30L * 60 * 1000 * 1000
-    val q = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
+    val sessions = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .filter($"user_id" % 4 === 0) // sentinel user also passes → flush
       .select($"user_id", $"ts", unix_micros($"ts").as("us"))
       .withWatermark("ts", "0 seconds")
@@ -1192,17 +1045,7 @@ object StreamingQ {
           }
       }
       .toDF("user_id", "start_us", "end_us", "n_events")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st20"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out).filter($"user_id" < 999999000L)
+    parquet(spark, Streams.runToParquet(sessions, "st20")._1).filter($"user_id" < 999999000L)
   }
 
   /** ST24: streaming distribution-drift monitor — l53's snapshot-shift
@@ -1230,12 +1073,12 @@ object StreamingQ {
       .groupBy($"bucket").agg(count(lit(1)).as("ref_n"))
     val staged = Streams.stageEvents(spark, dir, 4)
     val schema = Streams.eventsSchema(spark, dir)
-    val candCounts = spark.read.parquet(Streams.runCompleteToParquet(
+    val candCounts = parquet(spark, Streams.runToParquet(
       Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
         .filter($"ts" >= split)
         .select(bucket($"value").as("bucket"))
         .groupBy($"bucket").agg(count(lit(1)).as("cand_n")),
-      "st24"))
+      "st24", "complete")._1)
     Llm.driftFromCounts(
       refCounts.join(candCounts, Seq("bucket"), "full_outer")
         .select($"bucket",
@@ -1271,7 +1114,7 @@ object StreamingQ {
       .groupBy($"event_type", window($"ts", "1 day").as("w"))
       .agg(count(lit(1)).as("cnt"))
       .select($"event_type", $"w.start".cast("date").as("day"), $"cnt")
-    spark.read.parquet(Streams.runCompleteToParquet(agg, "st25"))
+    parquet(spark, Streams.runToParquet(agg, "st25", "complete")._1)
       .withColumn("dow", (expr("weekday(day)") + 1).cast("long"))
       .join(broadcast(baseline), Seq("event_type", "dow"))
       .withColumn("dev2", lit(2) * $"cnt" - $"med2")
@@ -1365,25 +1208,14 @@ object StreamingQ {
             .count() <= rowCap)
         broadcast(iv)
       else iv
-    val out = tempDir("st26_out")
-    val q = Streams.eventsStream(spark, staged, schema, 2)
+    val facts = Streams.eventsStream(spark, staged, schema, 2)
       .filter($"event_type" === "view")
       .select($"user_id", unix_micros($"ts").as("us"), $"event_id")
       .join(ivDim,
         $"user_id" === $"d_user" && $"from_us" <= $"us" &&
           ($"to_us".isNull || $"us" < $"to_us"))
       .select($"event_id", $"user_id", $"us", $"feat".as("pit_feat"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st26"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(out): Unit
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    parquet(spark, Streams.runToParquet(facts, "st26")._1)
   }
 
   /** ST27: streaming auto-compaction — the maintenance half of a
@@ -1420,34 +1252,27 @@ object StreamingQ {
       val d = new java.io.File(p)
       if (!d.exists()) 0 else d.listFiles().count(_.getName.endsWith(".parquet"))
     }
-    val q = Streams.eventsStream(spark, staged, schema, 1)
+    val rows = Streams.eventsStream(spark, staged, schema, 1)
       .select($"event_id", $"event_type", $"value")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st27"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(live)
-        if (parquetFiles(live) > 3) {
-          val staging = s"$outRoot/compact_${System.nanoTime()}"
-          spark.read.parquet(live).coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(staging)
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
-          val lp = new org.apache.hadoop.fs.Path(live)
-          val old = new org.apache.hadoop.fs.Path(s"$outRoot/old_${System.nanoTime()}")
-          require(fs.rename(lp, old), s"compaction move-aside failed: $lp")
-          require(fs.rename(new org.apache.hadoop.fs.Path(staging), lp),
-            s"compaction publish failed: $staging -> $lp (live preserved at $old)")
-          fs.delete(old, true): Unit
-        }
+    Streams.run(rows, "st27") { (batch, _) =>
+      batch.write.mode(SaveMode.Append).parquet(live)
+      if (parquetFiles(live) > 3) {
+        val staging = s"$outRoot/compact_${System.nanoTime()}"
+        parquet(spark, live).coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(staging)
+        val fs = org.apache.hadoop.fs.FileSystem.get(
+          new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
+        val lp = new org.apache.hadoop.fs.Path(live)
+        val old = new org.apache.hadoop.fs.Path(s"$outRoot/old_${System.nanoTime()}")
+        require(fs.rename(lp, old), s"compaction move-aside failed: $lp")
+        require(fs.rename(new org.apache.hadoop.fs.Path(staging), lp),
+          s"compaction publish failed: $staging -> $lp (live preserved at $old)")
+        fs.delete(old, true): Unit
       }
-      .start()
-    q.awaitTermination()
+    }
     require(parquetFiles(live) <= 4,
       s"auto-compaction failed to bound the file count: ${parquetFiles(live)}")
-    spark.read.parquet(live)
+    parquet(spark, live)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 2))).cast("double").as("sum_value"))
@@ -1538,33 +1363,26 @@ object StreamingQ {
     val staged = stageSt28(spark, dir)
     val hitsSink = tempDir("st28_hits")
     val totalsSink = tempDir("st28_tot")
-    val q = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
+    val docs = spark.readStream
+      .schema(parquet(spark, staged).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged)
       .select($"doc_id", $"text")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        tempDir("ck_st28"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (hitsDelta, obs) = st28BatchDeltas(batch)
-        hitsDelta.write.mode(SaveMode.Append).parquet(hitsSink)
-        // the corpus-stat delta was observed in-flight on the write above —
-        // materializing it costs a 1-row local write, not a second pass
-        // over the batch (an all-empty batch observes sum(dl) = null,
-        // matching what the old 1-row aggregate emitted)
-        val m = obs.get
-        Seq((m("batch_docs").asInstanceOf[Long],
-            Option(m("batch_len")).map(_.asInstanceOf[Long])))
-          .toDF("batch_docs", "batch_len")
-          .write.mode(SaveMode.Append).parquet(totalsSink): Unit
-      }
-      .start()
-    q.awaitTermination()
-    val hits = spark.read.parquet(hitsSink) // (doc_id, token, tf, dl)
-    val totals = spark.read.parquet(totalsSink)
+    Streams.run(docs, "st28") { (batch, _) =>
+      val (hitsDelta, obs) = st28BatchDeltas(batch)
+      hitsDelta.write.mode(SaveMode.Append).parquet(hitsSink)
+      // the corpus-stat delta was observed in-flight on the write above —
+      // materializing it costs a 1-row local write, not a second pass
+      // over the batch (an all-empty batch observes sum(dl) = null,
+      // matching what the old 1-row aggregate emitted)
+      val m = obs.get
+      Seq((m("batch_docs").asInstanceOf[Long],
+          Option(m("batch_len")).map(_.asInstanceOf[Long])))
+        .toDF("batch_docs", "batch_len")
+        .write.mode(SaveMode.Append).parquet(totalsSink): Unit
+    }
+    val hits = parquet(spark, hitsSink) // (doc_id, token, tf, dl)
+    val totals = parquet(spark, totalsSink)
       .agg(sum($"batch_docs").as("n_docs"), sum($"batch_len").as("total_len"))
     val dfreq = hits.groupBy($"token").agg(count(lit(1)).as("df"))
     val scored = hits

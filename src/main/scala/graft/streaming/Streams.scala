@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.Engine
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Per-user running (count, max) via the NEW arbitrary-state API
@@ -165,28 +164,48 @@ object Streams {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   }
 
-  /** Run a streaming aggregation to completion, materializing each complete
-    * snapshot to parquet via foreachBatch (last batch wins = final state).
-    * Unlike a memory sink this never buffers results on the driver — the
-    * write is a distributed parquet job, so the pattern holds when the
-    * aggregate itself is large. Returns the sink path. */
-  def runCompleteToParquet(agg: DataFrame, ckName: String): String =
-    runCompleteToParquetCk(agg, ckName)._1
+  /** The one way a stream runs in the engine: `stream` is written in
+    * `mode` ("append", "update" or "complete"), checkpointed to a fresh
+    * `ck_<name>` directory from [[Engine.tempDir]], triggered with
+    * `Trigger.AvailableNow` so it drains what is there and stops, and
+    * `each` receives every micro-batch with its batch id. The call blocks
+    * until the stream has terminated, and a failed batch is rethrown as a
+    * `StreamingQueryException`, so a broken stream fails its query instead
+    * of leaving an empty sink behind. Returns the terminated query, whose
+    * `recentProgress` is complete by then. */
+  def run(stream: DataFrame, name: String, mode: String = "append")(
+      each: (DataFrame, Long) => Unit): StreamingQuery =
+    start(stream, name, mode)(_.foreachBatch(each))._1
 
-  /** Like [[runCompleteToParquet]] but also returns the checkpoint dir, for
-    * callers that inspect the retained state afterwards (state source). */
-  def runCompleteToParquetCk(agg: DataFrame, ckName: String): (String, String) = {
-    val out = Engine.tempDir(s"${ckName}_sink")
-    val ck = Engine.tempDir(s"ck_$ckName")
-    val q = agg.writeStream
-      .outputMode("complete")
+  /** [[run]] into a parquet sink made here: every micro-batch is appended,
+    * or in "complete" mode overwrites the sink, so the last snapshot (the
+    * final state) is what stays. The write is a distributed parquet job,
+    * so nothing buffers on the driver however large the result is. Returns
+    * the sink directory and the checkpoint directory (the state a caller
+    * can read back through the state data source). */
+  def runToParquet(stream: DataFrame, name: String, mode: String = "append"): (String, String) = {
+    val out = Engine.tempDir(s"${name}_sink")
+    val write = if (mode == "complete") SaveMode.Overwrite else SaveMode.Append
+    val (_, ck) = start(stream, name, mode)(
+      _.foreachBatch((batch: DataFrame, _: Long) => batch.write.mode(write).parquet(out)))
+    (out, ck)
+  }
+
+  /** [[run]] into the archive connector at `path`: each micro-batch lands
+    * as one verified, epoch-fenced archive commit
+    * ([[graft.sources.KbArchiveSink]]). */
+  def runToArchive(stream: DataFrame, name: String, path: String): StreamingQuery =
+    start(stream, name, "append")(
+      _.format(classOf[graft.sources.KbArchiveSink].getName).option("path", path))._1
+
+  private def start(stream: DataFrame, name: String, mode: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): (StreamingQuery, String) = {
+    val ck = Engine.tempDir(s"ck_$name")
+    val q = sink(stream.writeStream.outputMode(mode))
       .option("checkpointLocation", ck)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Overwrite).parquet(out)
-      }
       .start()
     q.awaitTermination()
-    (out, ck)
+    (q, ck)
   }
 }

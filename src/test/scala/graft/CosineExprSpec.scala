@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{CosineSimilarityExpr, Text}
+import graft.functions.{CharStatsExpr, CosineSimilarityExpr, MinhashSigExpr, Text, UnaccentExpr}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd cosine must agree bit-for-bit with the
@@ -68,6 +69,24 @@ class CosineExprSpec extends SparkSpec {
       .toDF("a", "b")
       .select(CosineSimilarityExpr.cosineNative(s2, col("a"), col("b")).as("c"))
     assert(math.abs(df.as[Double].head() - 1.0) < 1e-12)
+  }
+
+  test("the native functions are registered once per session, before any helper call") {
+    val s2 = spark.newSession()
+    assert(s2.sql("SELECT unaccent_native('é')").head().getString(0) == "e")
+    val registry = s2.sessionState.functionRegistry
+    def infos = Seq("unaccent_native", "minhash_sig_native", "char_stats_native",
+      "cosine_native").map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
+    val before = infos
+    val f = array(lit(1.0f), lit(0.0f))
+    (1 to 2).foreach { _ =>
+      s2.range(1).select(
+        UnaccentExpr.unaccentNative(s2, lit("é")),
+        MinhashSigExpr.minhashSigNative(s2, lit("a b c d")),
+        CharStatsExpr.charStatsNative(s2, lit("ab c")),
+        CosineSimilarityExpr.cosineNative(s2, f, f)).collect()
+    }
+    before.zip(infos).foreach { case (b, a) => assert(a eq b, a.getName) }
   }
 
   test("non-float-array inputs are rejected at analysis time") {

@@ -19,6 +19,9 @@ import scala.jdk.CollectionConverters._
   *     can see it; no other line in `src/main` writes a session's config.
   *   - Temp directories: every checkpoint, sink and staging directory comes
   *     from [[Engine.tempDir]], which deletes it when the JVM exits.
+  *   - Stream starts: every stream runs through [[graft.streaming.Streams.run]]
+  *     or its sink variants, which hold the one run policy (checkpoint,
+  *     `Trigger.AvailableNow`, start, await and error propagation).
   */
 class SessionSurfaceSpec extends AnyFunSuite {
 
@@ -71,5 +74,18 @@ class SessionSurfaceSpec extends AnyFunSuite {
       }
     }
     assert(sites.forall(_._1 == "Engine.scala"), sites.map(_._2).mkString("\n", "\n", ""))
+  }
+
+  test("only Streams starts a stream") {
+    val sites = sources.flatMap { case (name, text) =>
+      text.split("\n").toSeq.zipWithIndex.collect {
+        case (line, i) if line.contains(".writeStream") &&
+            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
+          (name, s"$name:${i + 1}: ${line.trim}")
+      }
+    }
+    val listing = sites.map(_._2).mkString("\n", "\n", "")
+    assert(sites.forall(_._1 == "Streams.scala"), listing)
+    assert(sites.size <= 2, listing)
   }
 }

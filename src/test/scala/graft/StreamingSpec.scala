@@ -240,6 +240,22 @@ class StreamingSpec extends SparkSpec {
     assert(batches.get() == 3)
   }
 
+  test("Streams.run rethrows a failed batch and keeps the stream's checkpoint") {
+    val src = tmp("fail_src")
+    writeFile(src, "b1", Seq(("2024-01-01 00:00:01", "k1", 1L)))
+    val boom = new IllegalStateException("batch failed on purpose")
+    val name = s"runfail_${System.nanoTime()}"
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      graft.streaming.Streams.run(spark.readStream.schema(schema).parquet(src), name) {
+        (_, _) => throw boom
+      }
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_ eq boom), causes.mkString("\n"))
+    val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    assert(tmpDir.listFiles.exists(f => f.isDirectory && f.getName.startsWith(s"ck_$name")))
+  }
+
   test("ST16: dead-letter routing partitions the stream exactly (no loss, no dup)") {
     import spark.implicits._
     val routed = graft.queries.StreamingQ.st16DeadLetter(spark, sfDir)
