@@ -17,13 +17,14 @@ package graft
   * `"parsed": null` because the consumer's tail cut its own input), so the
   * COMPLETE record — detail, samples, errors, canonical metric — is also
   * written atomically to `bench_out.json` in the working directory
-  * (override with SPARK_GRAFT_BENCH_OUT or arg 3). Machine consumers
-  * should read the file, not the scrape.
+  * (override with arg 3). Machine consumers should read the file, not the
+  * scrape.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // args override env (env vars don't reach a forked runMain through the
-    // sbt client): [sfDir] [comma-separated query subset]
+    // args, not env, because env vars don't reach a forked runMain through
+    // the sbt client: [sfDir] [comma-separated query subset] [out path]; a
+    // blank subset runs the whole registry
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     // the bench contract is local[32]-shaped (one executor thread per core);
@@ -40,35 +41,14 @@ object Bench {
     // are written, so a later reader can tell noise from a plan change
     // without re-running. Queries are side-effect-safe to re-run: every
     // sink query writes to a fresh temp dir per invocation.
-    var times = Vector.empty[(String, Double)]
-    var samples = Vector.empty[(String, Seq[Double])]
-    var warmups = Vector.empty[(String, Double)]
-    var errors = Vector.empty[(String, String)]
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local iteration; the
-    // driver never sets it, so the contract run always covers everything
-    val only = args.lift(1).orElse(sys.env.get("SPARK_GRAFT_ONLY"))
-      .filter(_.trim.nonEmpty) // blank arg = no filter (lets arg 3 set the out path)
-      .map(_.split(",").toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try {
-        var warmup = Option.empty[Double]
-        val runs = Measure.sample {
-          val t = Measure.once(spark, fn, sfDir)
-          if (warmup.isEmpty) warmup = Some(t)
-          t
-        }
-        warmups :+= name -> warmup.get
-        times :+= name -> runs.min
-        samples :+= name -> runs
-      } catch {
-        case e: Throwable =>
-          errors :+= name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-      }
+    val outcome = SparkEntry.run(SparkEntry.names(args.lift(1))) { (_, fn) =>
+      Measure.query(spark, fn, sfDir)(identity[Double])
     }
+    val times = outcome.done.map { case (k, s) => k -> s.runs.min }
+    val samples = outcome.done.map { case (k, s) => k -> s.runs }
+    val warmups = outcome.done.map { case (k, s) => k -> s.warmupSec }
     import Jfmt.{q, r3, jmap}
-    val errs = jmap(errors.map { case (k, v) => k -> q(v) })
+    val errs = outcome.errorsJson
     val total = times.map(_._2).sum
     // full per-query map — NOT the canonical metric line (too long for the
     // consumer's output tail); commit this as the local bench snapshot.
@@ -117,9 +97,7 @@ object Bench {
     // machine-readable record: ONE well-formed JSON object holding the
     // complete per-query map + the canonical summary, written via
     // temp-file rename so a reader never sees a half-written file
-    val outPath = args.lift(2)
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
-      .getOrElse("bench_out.json")
+    val outPath = args.lift(2).getOrElse("bench_out.json")
     val fileJson =
       s"""{"summary":$metricLine,"queries_all":$timesJson,""" +
         s""""samples":$samplesJson,"warmups":$warmupsJson}"""
@@ -129,9 +107,10 @@ object Bench {
   }
 }
 
-/** Shared JSON-emission helpers for the tool mains (Bench, ScaleBench, Profile,
-  * Verify): hand-rolled because the record format is a stable committed
-  * artifact and the build deliberately has no JSON library dependency. */
+/** Shared JSON-emission helpers for the tool mains (Bench, ScaleBench,
+  * Profile, Verify) and [[SparkEntry.Outcome]]'s failure counts:
+  * hand-rolled because the record format is a stable committed artifact and
+  * the build deliberately has no JSON library dependency. */
 private[graft] object Jfmt {
   /** JSON string literal: escapes backslash, quote and ALL control chars
     * (<0x20) — a tab or CR in an oracle SQL string would otherwise make

@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 
 /** Where a query's wall time goes, for the whole registry or a subset: each
-  * query is sampled by [[Measure]]'s policy, and every timed run records
+  * query is sampled by [[Measure]]'s policy, its untimed warm-up's wall time
+  * is kept (as `Bench` keeps it), and every timed run records
   *   - its wall time, build and noop write included (as `Bench` times it);
   *   - every Spark job it submits (eager materializations are jobs of
   *     their own), with the job's wall time;
@@ -50,49 +51,37 @@ object Profile {
     }
   }
 
-  /** Timed runs per profiled query, and the queries that failed with their
-    * messages. */
-  final case class Record(queries: Seq[(String, Seq[Run])], errors: Seq[(String, String)]) {
-    def attempted: Int = queries.size + errors.size
-    def failed: Int = errors.size
+  /** The sampled runs of every profiled query, and the queries that failed
+    * with their messages. */
+  final case class Record(outcome: SparkEntry.Outcome[Measure.Sampled[Run]]) {
+    def queries: Seq[(String, Seq[Run])] = outcome.done.map { case (k, s) => k -> s.runs }
+    def errors: Seq[(String, String)] = outcome.errors
+    def attempted: Int = outcome.attempted
+    def failed: Int = outcome.failed
 
     def json(sfDir: String, cpus: Int): String = {
-      import Jfmt.{jmap, q}
+      import Jfmt.{jmap, q, r3}
       val perQuery = queries.map { case (name, runs) =>
         s"${q(name)}:${runs.map(_.json).mkString("[\n    ", ",\n    ", "\n  ]")}"
       }.mkString("{\n  ", ",\n  ", "\n}")
+      val warmups = jmap(outcome.done.map { case (k, s) => k -> r3(s.warmupSec) })
       s"""{"sf":${q(sfDir)},"cpus":$cpus,"runs":${q(Measure.policy)},""" +
-        s""""loadavg":${Jfmt.loadavg()},"attempted":$attempted,"failed":$failed,""" +
-        s""""errors":${jmap(errors.map { case (k, v) => k -> q(v) })},""" +
-        s""""queries":$perQuery}"""
+        s""""loadavg":${Jfmt.loadavg()},${outcome.json},""" +
+        s""""warmups":$warmups,"queries":$perQuery}"""
     }
   }
 
-  /** Profiles `names` on `dir`. The recorder is on the listener bus only
-    * while this runs. */
+  /** Profiles `names` (no names: the whole registry) on `dir`. The
+    * recorder is on the listener bus only while this runs. */
   def profile(spark: SparkSession, dir: String, names: Seq[String]): Record = {
-    val registry = SparkEntry.queries
     val sc = spark.sparkContext
     val recorder = new Recorder(sc)
     sc.addSparkListener(recorder)
     try {
       recorder.drain(): Unit // whatever ran before is not a run
-      var runs = Vector.empty[(String, Seq[Run])]
-      var errors = Vector.empty[(String, String)]
-      names.foreach { name =>
-        try {
-          val fn = registry.getOrElse(name,
-            throw new NoSuchElementException(s"$name is not registered in SparkEntry.queries"))
-          runs :+= name -> Measure.sample {
-            val wall = Measure.once(spark, fn, dir)
-            recorder.drain().copy(wallSec = wall)
-          }
-        } catch {
-          case e: Throwable =>
-            errors :+= name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-      }
-      Record(runs, errors)
+      Record(SparkEntry.run(names) { (_, fn) =>
+        Measure.query(spark, fn, dir)(wall => recorder.drain().copy(wallSec = wall))
+      })
     } finally sc.removeSparkListener(recorder)
   }
 
@@ -197,10 +186,8 @@ object Profile {
     val sfDir = args.headOption.getOrElse(
       sys.error("usage: graft.Profile <sfDir> [outPath] [q1,q2,...]"))
     val outPath = args.lift(1).getOrElse("profile.json")
-    val names = args.lift(2).filter(_.trim.nonEmpty).map(_.split(",").toSeq)
-      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = Engine.session()
-    val record = profile(spark, sfDir, names)
+    val record = profile(spark, sfDir, SparkEntry.names(args.lift(2)))
     Jfmt.writeAtomic(outPath, record.json(sfDir, spark.sparkContext.defaultParallelism))
     println(s"profile of ${record.attempted} queries, ${record.failed} failed, written to $outPath")
     spark.stop()

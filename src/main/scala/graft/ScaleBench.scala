@@ -15,7 +15,8 @@ package graft
   * (note / sf0_1 / sf1 / ratio_sf1_over_sf0_1 / samples_* / errors_sf1),
   * written atomically.
   *
-  * Usage: ScaleBench [sf0.1-dir] [sf1-dir] [out.json] [subset]
+  * Usage: ScaleBench [sf0.1-dir] [sf1-dir] [out.json] [q1,q2,...]; a
+  * subset replaces [[scalingSet]].
   */
 object ScaleBench {
   /** The scaling set: the 57 queries the committed r8-r10 records track —
@@ -61,40 +62,25 @@ object ScaleBench {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scaledDir = args.lift(1).getOrElse("/tmp/sf1")
     val outPath = args.lift(2).getOrElse("bench_sf1_paired.json")
-    val only = args.lift(3).filter(_.trim.nonEmpty).map(_.split(",").toSet)
     val spark = Engine.session()
     val cpus = spark.sparkContext.defaultParallelism
 
-    val fns = SparkEntry.queries
-    var base = Vector.empty[(String, Seq[Double])]
-    var scaled = Vector.empty[(String, Seq[Double])]
-    var errors = Vector.empty[(String, String)]
-    scalingSet.filter(n => only.forall(_.contains(n))).foreach { name =>
-      fns.get(name) match {
-        case None => errors :+= name -> "not registered in SparkEntry.queries"
-        case Some(fn) =>
-          try {
-            val b = Measure.sample(Measure.once(spark, fn, baseDir))
-            val s = Measure.sample(Measure.once(spark, fn, scaledDir))
-            base :+= name -> b
-            scaled :+= name -> s
-            println(f"paired $name%-28s sf0.1 ${b.min}%7.3f  sf1 ${s.min}%7.3f  ratio ${s.min / b.min}%5.2f")
-          } catch {
-            case e: Throwable => errors :+= name ->
-              Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          }
-      }
+    val subset = SparkEntry.names(args.lift(3))
+    val outcome = SparkEntry.run(if (subset.isEmpty) scalingSet else subset) { (name, fn) =>
+      val b = Measure.query(spark, fn, baseDir)(identity[Double]).runs
+      val s = Measure.query(spark, fn, scaledDir)(identity[Double]).runs
+      println(f"paired $name%-28s sf0.1 ${b.min}%7.3f  sf1 ${s.min}%7.3f  ratio ${s.min / b.min}%5.2f")
+      (b, s)
     }
+    val base = outcome.done.map { case (k, (b, _)) => k -> b }
+    val scaled = outcome.done.map { case (k, (_, s)) => k -> s }
 
     import Jfmt.{q, r3, jmap}
-    def sampleMap(v: Vector[(String, Seq[Double])]): String =
+    def sampleMap(v: Seq[(String, Seq[Double])]): String =
       jmap(v.map { case (k, vs) => k -> vs.map(r3).mkString("[", ",", "]") })
-    def minMap(v: Vector[(String, Seq[Double])]): String =
+    def minMap(v: Seq[(String, Seq[Double])]): String =
       jmap(v.map { case (k, vs) => k -> r3(vs.min) })
-    val ratios = base.flatMap { case (k, b) =>
-      scaled.find(_._1 == k).map { case (_, s) =>
-        k -> f"${s.min / b.min}%.2f" }
-    }
+    val ratios = outcome.done.map { case (k, (b, s)) => k -> f"${s.min / b.min}%.2f" }
     val note = "paired same-session scaling run: one JVM, query-by-query " +
       s"interleave, identical per-side policy (${Measure.policy} " +
       "at BOTH sf0.1 and 10x) — replaces the r10 best-of-accumulated vs " +
@@ -105,7 +91,7 @@ object ScaleBench {
         s""""sf0_1":${minMap(base)},"sf1":${minMap(scaled)},""" +
         s""""ratio_sf1_over_sf0_1":${jmap(ratios)},""" +
         s""""samples_sf0_1":${sampleMap(base)},"samples_sf1":${sampleMap(scaled)},""" +
-        s""""errors_sf1":${jmap(errors.map { case (k, v) => k -> q(v) })}}"""
+        s""""errors_sf1":${outcome.errorsJson}}"""
     Jfmt.writeAtomic(outPath, json)
     val worst = ratios.sortBy(-_._2.toDouble).take(5)
     println(s"${ratios.size} paired queries -> $outPath; worst ratios: " +

@@ -1421,9 +1421,9 @@ object Sources {
   }
 
   /** The l5h pipeline against any staged directory of `.jp2` scans —
-    * shared with [[graft.Jp2ScaleProbe]], which measures the same code
-    * path at larger scan sizes (so the committed speedups are of THIS
-    * pipeline, not a lookalike). */
+    * `Jp2Spec` runs it on its own staged scans, and the committed
+    * `JP2_SCALE_r*` speedups were measured on this code path at larger
+    * scan sizes (so they are of THIS pipeline, not a lookalike). */
   private[graft] def jp2TiledChannelSums(spark: SparkSession, staged: String): DataFrame = {
     import spark.implicits._
     val tiles = jp2RangedSplit(

@@ -22,6 +22,9 @@ import scala.jdk.CollectionConverters._
   *   - Stream starts: every stream runs through [[graft.streaming.Streams.run]]
   *     or its sink variants, which hold the one run policy (checkpoint,
   *     `Trigger.AvailableNow`, start, await and error propagation).
+  *   - Mains and registry reads: every main that runs registered queries
+  *     picks, looks up, runs and counts them through [[SparkEntry.run]], so
+  *     the list of mains is fixed and no other file reads the registry.
   */
 class SessionSurfaceSpec extends AnyFunSuite {
 
@@ -42,12 +45,29 @@ class SessionSurfaceSpec extends AnyFunSuite {
     assert(builders == Set("Engine.scala", "SpillProbe.scala", "ChaosRetry.scala"))
   }
 
-  test("the SPARK_GRAFT_* options read are CPUS, SF_DIR, BENCH_OUT and ONLY") {
+  test("the SPARK_GRAFT_* options read are CPUS and SF_DIR") {
     val option = "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r
     val names = sources.flatMap { case (_, text) =>
       option.findAllMatchIn(text).map(_.group(1))
     }.toSet
-    assert(names == Set("CPUS", "SF_DIR", "BENCH_OUT", "ONLY"))
+    assert(names == Set("CPUS", "SF_DIR"))
+  }
+
+  test("the mains are the registry runners, the subprocess harnesses and ScaleUp") {
+    val mains = sources.collect { case (name, text) if text.contains("def main(") => name }.toSet
+    assert(mains == Set("Verify.scala", "Bench.scala", "ScaleBench.scala", "Profile.scala",
+      "PlanDump.scala", "SpillProbe.scala", "ChaosRetry.scala", "ScaleUp.scala"))
+  }
+
+  test("only SparkEntry reads SparkEntry.queries") {
+    val sites = sources.flatMap { case (name, text) =>
+      text.split("\n").toSeq.zipWithIndex.collect {
+        case (line, i) if line.contains("SparkEntry.queries") &&
+            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
+          (name, s"$name:${i + 1}: ${line.trim}")
+      }
+    }
+    assert(sites.forall(_._1 == "SparkEntry.scala"), sites.map(_._2).mkString("\n", "\n", ""))
   }
 
   test("only Engine.scoped sets a session's config or makes a child session") {
