@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.{KbArchive, WriteChaos}
+import graft.streaming.Streams
 
 /** Task-retry chaos runner for the write connectors' commit protocols
   * (round-13 durability ask).
@@ -147,21 +148,17 @@ object ChaosRetry {
   private def streamScenario(spark: SparkSession): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val src = Engine.tempDir("chaos_stream_src")
     // two single-file micro-batches (maxFilesPerTrigger=1); 40 rows each
-    (0 until 2).foreach { b =>
+    val src = Streams.stage(spark, "chaos_stream_src", "")((0 until 2).map { b =>
       spark.range(b * 40L, b * 40L + 40L)
         .select(concat(lit("k"), $"id").as("key"),
           concat(lit("p"), $"id").as("payload"))
-        .coalesce(1).write.mode("append").parquet(src)
-    }
+        .coalesce(1)
+    })
     val out = Engine.tempDir("chaos_stream_archive")
     val (_, injected) = armed(3) {
-      val rows = spark.readStream
-        .schema(Engine.parquet(spark, src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      graft.streaming.Streams.runToArchive(rows, "chaos_stream", out)
+      val rows = Streams.eventsStream(spark, src, Engine.parquet(spark, src).schema, 1)
+      Streams.runToArchive(rows, "chaos_stream", out)
     }
     require(injected >= 2,
       s"stream: expected a first-attempt death in each epoch, injected=$injected")

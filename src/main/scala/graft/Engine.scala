@@ -96,6 +96,29 @@ object Engine {
     dir.toString
   }
 
+  /** The directory staged for `(name, key)` in this JVM: made once with
+    * [[tempDir]] (prefix `name`) and filled by `write`, and returned
+    * as is, without calling `write`, on every later call. This is the one
+    * memo of staged inputs (stream sources, table layouts, synthesized
+    * media files), so staging is paid once per JVM however many queries
+    * read it. A `write` that throws leaves nothing memoized, and the next
+    * call stages again. Each entry has its own lock: a slow staging blocks
+    * only callers of the same entry, and a `write` may stage another one. */
+  def staged(name: String, key: String)(write: String => Unit): String = {
+    val slot = staging.computeIfAbsent((name, key), _ => new Staged)
+    slot.synchronized {
+      if (slot.dir == null) {
+        val dir = tempDir(name)
+        write(dir)
+        slot.dir = dir
+      }
+      slot.dir
+    }
+  }
+
+  private final class Staged { var dir: String = _ }
+  private val staging = new ConcurrentHashMap[(String, String), Staged]()
+
   /** Parquet scan for one fixture table under `dir` (see TESTDATA.md).
     *
     * Timestamp storage differs per table: lineitem/orders use parquet

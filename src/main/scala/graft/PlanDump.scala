@@ -32,6 +32,25 @@ object PlanDump {
     qe.explainString(FormattedMode)
   }
 
+  /** `plan` as PLANS.md shows it, the same on every run of the same code:
+    * expression and plan ids become `#x` and `plan_id=x`, the working
+    * directory `<cwd>`, a temp directory's random suffix `*` (a glob for
+    * the directory), a lambda's class number and address nothing, and an
+    * object's hash code `@hash`; a plan over 6000 characters is cut after
+    * its last whole line within them. */
+  def stable(plan: String): String = {
+    def path(key: String) = java.util.regex.Pattern.quote(sys.props(key).stripSuffix("/"))
+    val out = plan
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll(path("java.io.tmpdir") + "/(\\w*?)\\d{10,}(?!\\w)", "<tmp>/$1*")
+      .replaceAll(path("user.dir") + "/", "<cwd>/")
+      .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@hash")
+    if (out.length <= 6000) out
+    else out.take(out.lastIndexOf('\n', 6000)) + "\n... (cut at 6000 characters)"
+  }
+
   /** The queries PLANS.md shows, each with the note on what its plan should
     * show. */
   val headline: Seq[(String, String)] = Seq(
@@ -167,7 +186,7 @@ object PlanDump {
       sb.append(sinkProbe)
       outcome.done.foreach { case (name, txt) =>
         sb.append(s"\n## $name\n\n${notes(name)}\n\n```\n")
-        sb.append(txt.take(6000))
+        sb.append(stable(txt))
         sb.append("\n```\n")
       }
       Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -141,10 +141,8 @@ object Sources {
     * the key domain — the point-lookup layout lever: at 100 TB a reader
     * probing one key skips every row group whose bloom filter rejects it,
     * without any sort or partitioning by that key. */
-  private val bloomStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def stageBloomEvents(spark: SparkSession, dir: String): String =
-    bloomStaged.computeIfAbsent(dir, { _ =>
-      val out = tempDir("s27_bloom")
+    staged("s27_bloom", dir) { out =>
       events(spark, dir)
         .write.mode(SaveMode.Overwrite)
         .option("parquet.bloom.filter.enabled#user_id", "true")
@@ -155,8 +153,7 @@ object Sources {
         // high-cardinality key falls out of dictionary on its own
         .option("parquet.enable.dictionary#user_id", "false")
         .parquet(out)
-      out
-    })
+    }
 
   /** S27: bloom-filtered point lookup — equality probe on the bloom'd key
     * over the staged layout; ArchiveSinkSpec asserts the footers actually
@@ -173,16 +170,13 @@ object Sources {
   /** Day-partitioned events layout for [[s5PartitionPrunedRead]], memoized
     * per source dir (at scale this layout is written once at ingest; the
     * pruned read is the recurring cost worth measuring). */
-  private val dayLayoutStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def stageDayPartitionedEvents(spark: SparkSession, dir: String): String =
-    dayLayoutStaged.computeIfAbsent(dir, { _ =>
+    staged("s5b_days", dir) { out =>
       import spark.implicits._
-      val out = tempDir("s5b_days")
       events(spark, dir)
         .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
         .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(out)
-      out
-    })
+    }
 
   /** S5b: partition-pruned read — day-partitioned layout written once, then
     * a single-day read whose partition predicate prunes directories (the
@@ -208,22 +202,18 @@ object Sources {
     * and after; CompactionSpec asserts the file count actually shrank. */
   /** Write the fragmented layout and its compacted rewrite; returns both
     * roots (split out so CompactionSpec can count the physical files). */
-  private val fragStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The fragmented many-small-files layout is the PRECONDITION (steady-
     * state ingest debris), not the operator — staged once per JVM like the
     * other ingest layouts, so the timed path is only the compaction
     * rewrite itself. */
   private[graft] def stageFragmentedEvents(spark: SparkSession, dir: String): String =
-    fragStaged.computeIfAbsent(dir, { _ =>
+    staged("s20_frag", dir) { frag =>
       import spark.implicits._
-      val frag = tempDir("s20_frag")
       events(spark, dir)
         .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
         .repartition(8) // simulate 8 ingest writers => ~8 files per day dir
         .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(frag)
-      frag
-    })
+    }
 
   private[graft] def compactLayout(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
@@ -1014,14 +1004,11 @@ object Sources {
     }.toDF("file_name", "mime", "n_bytes", "width", "height")
   }
 
-  private val jpegStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Synthesize 8 REAL JPEGs with index-determined dimensions (staged once
     * per JVM): deterministic pixel pattern, encoded by the JDK's ImageIO —
     * no byte literal fixtures, no external codec. */
   private[graft] def stageJpegs(): String =
-    jpegStaged.computeIfAbsent("jpegs", { _ =>
-      val dir = tempDir("l5c_jpegs")
+    staged("l5c_jpegs", "") { dir =>
       (0 until 8).foreach { i =>
         val w = 40 + (17 * i) % 113
         val h = 30 + (23 * i) % 89
@@ -1031,8 +1018,7 @@ object Sources {
           img.setRGB(x, y, (x * 31 + y * 7 + i * 131) % 0xffffff)
         javax.imageio.ImageIO.write(img, "jpg", new java.io.File(s"$dir/img_$i.jpg"))
       }
-      dir
-    })
+    }
 
   /** L5c: thumbnail pipeline — the full decode → TRANSFORM → encode chain
     * over real images, all JDK (the step the reference performs by
@@ -1072,8 +1058,6 @@ object Sources {
       .toDF("file_name", "width", "height", "thumb_w", "thumb_h")
   }
 
-  private val jp2Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Synthesize 10 REAL JPEG 2000 files (staged once per JVM): RGB planes
     * with index-determined per-channel patterns, compressed by the engine's
     * own spec-complete encoder ([[graft.sources.jp2.Jp2Codec]]: 5/3 DWT +
@@ -1084,8 +1068,7 @@ object Sources {
     * sums are pure index arithmetic, so the DECODED output is fully
     * DuckDB-oracle-checkable. */
   private[graft] def stageJp2s(): String =
-    jp2Staged.computeIfAbsent("jp2s", { _ =>
-      val dir = tempDir("l5g_jp2")
+    staged("l5g_jp2", "") { dir =>
       (0 until 11).foreach { i =>
         val w = 40 + (17 * i) % 113
         val h = 30 + (23 * i) % 89
@@ -1148,8 +1131,7 @@ object Sources {
           java.nio.file.Paths.get(s"$dir/scan_$i.jp2"),
           graft.sources.Jp2Box.buildContainer(w, h, cs))
       }
-      dir
-    })
+    }
 
   /** Per-channel pixel sum for the JP2 queries' oracle columns. */
   private def sumChannel(a: Array[Int]): Long = {
@@ -1237,8 +1219,6 @@ object Sources {
       .toDF("file_name", "width", "height", "thumb_w", "thumb_h")
   }
 
-  private val bigJp2Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Synthesize ONE larger tiled JPEG 2000 scan (staged once per JVM):
     * 384x192 RGB on a 64-px tile grid — 6x3 = 18 tiles, each split across
     * TWO tile-parts (TNsot = 2, cut at a resolution boundary) for a
@@ -1249,8 +1229,7 @@ object Sources {
     * every ranged query exercises the grouping machinery end-to-end.
     * Pixel values are pure coordinate arithmetic for the DuckDB oracle. */
   private[graft] def stageBigJp2(): String =
-    bigJp2Staged.computeIfAbsent("big", { _ =>
-      val dir = tempDir("l5h_jp2")
+    staged("l5h_jp2", "") { dir =>
       // h = 192, NOT 256: with a full 256-row sweep the per-row offsets
       // complete the mod-256 cycle and every channel's pixel sum comes out
       // identical no matter the multipliers — a channel-swap bug would
@@ -1265,8 +1244,7 @@ object Sources {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/page_0.jp2"),
         graft.sources.Jp2Box.buildContainer(w, h, cs))
-      dir
-    })
+    }
 
   /** Synthesize the POC variant of the big tiled scan (staged once per
     * JVM, r20): same 384x192 / 64-px-tile / 2-layer shape as
@@ -1281,8 +1259,7 @@ object Sources {
     * compacted-slice decode), with the volumes threaded through the
     * query's header carrier instead of guarded away. */
   private[graft] def stagePocBigJp2(): String =
-    bigJp2Staged.computeIfAbsent("poc", { _ =>
-      val dir = tempDir("l5k_poc_jp2")
+    staged("l5k_poc_jp2", "") { dir =>
       val (w, h) = (384, 192)
       val comps = Array.tabulate(3) { c =>
         Array.tabulate(w * h)(j => ((j % w) * (9 + 4 * c) + (j / w) * 17 + c * 37) % 256)
@@ -1299,8 +1276,7 @@ object Sources {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/page_poc.jp2"),
         graft.sources.Jp2Box.buildContainer(w, h, cs))
-      dir
-    })
+    }
 
   /** Reference per-channel pixel sums of the staged big scan's d=2
     * thumbnail, computed ONCE per JVM through the in-memory WHOLE-FILE
@@ -1308,14 +1284,12 @@ object Sources {
     * different code path from the distributed ranged walk l5j runs, so
     * an in-query require against these sums cannot cancel out a
     * ranged-walk regression. */
-  private val bigJp2ReducedRef = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-  private[graft] def bigJp2ReducedSums(): Array[Long] =
-    bigJp2ReducedRef.computeIfAbsent("d2", { _ =>
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${stageBigJp2()}/page_0.jp2"))
-      val img = graft.sources.jp2.Jp2Codec.decodeReduced(bytes, 2)
-      img.comps.map(sumChannel)
-    })
+  private[graft] lazy val bigJp2ReducedSums: Array[Long] = {
+    val bytes = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"${stageBigJp2()}/page_0.jp2"))
+    val img = graft.sources.jp2.Jp2Codec.decodeReduced(bytes, 2)
+    img.comps.map(sumChannel)
+  }
 
   /** L5h: decode ONE tiled scan ACROSS the cluster — the intra-file
     * parallelism a 100 TB page-scan corpus needs when single files are
@@ -1498,7 +1472,7 @@ object Sources {
     // a different code path from the ranged walk below, captured at plan
     // time so every run REQUIRES the two paths agree pixel-for-pixel
     // (sum-for-sum); the oracle additionally pins the values as constants
-    val refSums = bigJp2ReducedSums()
+    val refSums = bigJp2ReducedSums
     val tiles = jp2RangedSplit(
       spark.read.format("binaryFile").load(staged)
         .select($"path", $"length").as[(String, Long)] // listing only: content never read
@@ -1730,8 +1704,6 @@ object Sources {
         $"n_tiles_fetched", $"sum_c0", $"sum_c1", $"sum_c2")
   }
 
-  private val precinctJp2Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Synthesize three PRECINCT-PARTITIONED scans (staged once per JVM):
     * 768x384 RGB, two 384-tiles each split in 2 tile-parts, 2 quality
     * layers, 32x32 precincts on every resolution (Scod bit 0, the
@@ -1741,8 +1713,7 @@ object Sources {
     * page_2 (r20) under a POC resolution handoff (RPCL -> RLCP).
     * Pixel formulas are the l5h/l5j family so the oracle is closed-form. */
   private[graft] def stagePrecinctJp2(): String =
-    precinctJp2Staged.computeIfAbsent("prec", { _ =>
-      val dir = tempDir("l5n_jp2")
+    staged("l5n_jp2", "") { dir =>
       val (w, h) = (768, 384)
       // page_0: the r17 profile (auto RLCP); page_1 (r18): the SAME
       // random-access shape in RPCL — the resolution-major position
@@ -1776,8 +1747,7 @@ object Sources {
           java.nio.file.Paths.get(s"$dir/page_$idx.jp2"),
           graft.sources.Jp2Box.buildContainer(w, h, cs))
       }
-      dir
-    })
+    }
 
   /** L5n: PRECINCT-granular region fetch — the reason precincts exist
     * (B.6): l5l fetches whole TILE-parts intersecting the crop; on a
@@ -1864,8 +1834,6 @@ object Sources {
         $"n_tiles_fetched", $"sum_c0", $"sum_c1", $"sum_c2")
   }
 
-  private val lossyJp2Staged = new java.util.concurrent.ConcurrentHashMap[String, (String, Map[String, Long])]()
-
   /** Synthesize 11 LOSSY (9/7 + ICT + scalar quantization) JPEG 2000
     * scans (staged once per JVM) — the dominant profile of real archival
     * masters (visually-lossless derivatives) — mixing untiled/tiled,
@@ -1878,7 +1846,7 @@ object Sources {
     * classic archival rate split). Pixel values are the
     * same coordinate arithmetic family as l5g, so a task can regenerate
     * the EXACT original for error measurement. Alongside the directory,
-    * the staged map carries each scan's LOSSLESS (reversible 5/3)
+    * the memo carries each scan's LOSSLESS (reversible 5/3)
     * encoding size, the in-query compression baseline. r18b appends
     * file 7 (2x2 64-px tiles, PER-TILE QCD retunes — tile 0 at the
     * main step 4, tiles 1-3 re-signaled via tile-part-0 QCD to steps
@@ -1895,41 +1863,40 @@ object Sources {
     * part count resolves by observation off the EOC-terminated Psot
     * chain and completeness rides Tier-2's exact packet accounting
     * (hand fixture Y pins the missing-tail boundary). */
-  private[graft] def stageLossyJp2s(): (String, Map[String, Long]) =
-    lossyJp2Staged.computeIfAbsent("lossy", { _ =>
-      val dir = tempDir("l5m_jp2")
-      val sizes = (0 until 11).map { i =>
-        val (w, h) = (64 + (17 * i) % 97, 48 + (23 * i) % 89)
-        val comps = lossyJp2Comps(w, h, i)
-        val cs0 = graft.sources.jp2.Jp2Codec.encode(w, h, comps,
-          tileSize = if (i % 2 == 1) 64 else 0,
-          layers = if (i == 2 || i == 9) 2 else 1,
-          partsPerTile = if (i == 3 || i == 10) 2 else 1,
-          irreversible = true, qShift = if (i == 5) 0 else -2,
-          quantMode = i match { case 4 => "norms"; case 5 => "derived"; case _ => "uniform" },
-          chromaQShift = if (i == 6) -3 else 99,
-          tileQShifts = if (i == 7) Seq(-2, -1, 0, -3) else null,
-          chromaLevels = if (i == 8) 1 else -1,
-          poc = if (i == 9) Seq(
-            graft.sources.jp2.Jp2Codec.PocEntry(0, 0, 1, 4, 3, graft.sources.jp2.Jp2Codec.RLCP),
-            graft.sources.jp2.Jp2Codec.PocEntry(0, 0, 2, 4, 3, graft.sources.jp2.Jp2Codec.LRCP))
-          else Nil)
-        // file 10: author the foreign streaming-writer shape — every
-        // SOT's TNsot byte erased to 0 (pixels and lengths unchanged)
-        val cs = if (i == 10) graft.sources.jp2.Jp2Codec.eraseTnsot(cs0) else cs0
-        val name = s"lossy_$i.jp2"
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/$name"),
-          graft.sources.Jp2Box.buildContainer(w, h, cs))
-        // container-to-container: binaryFile's length below is the lossy
-        // CONTAINER's, so the baseline must carry the same box framing
-        val lossless = graft.sources.Jp2Box.buildContainer(w, h,
-          graft.sources.jp2.Jp2Codec.encode(w, h, comps,
-            tileSize = if (i % 2 == 1) 64 else 0))
-        name -> lossless.length.toLong
-      }.toMap
-      (dir, sizes)
-    })
+  private[graft] lazy val lossyJp2s: (String, Map[String, Long]) = {
+    val dir = tempDir("l5m_jp2")
+    val sizes = (0 until 11).map { i =>
+      val (w, h) = (64 + (17 * i) % 97, 48 + (23 * i) % 89)
+      val comps = lossyJp2Comps(w, h, i)
+      val cs0 = graft.sources.jp2.Jp2Codec.encode(w, h, comps,
+        tileSize = if (i % 2 == 1) 64 else 0,
+        layers = if (i == 2 || i == 9) 2 else 1,
+        partsPerTile = if (i == 3 || i == 10) 2 else 1,
+        irreversible = true, qShift = if (i == 5) 0 else -2,
+        quantMode = i match { case 4 => "norms"; case 5 => "derived"; case _ => "uniform" },
+        chromaQShift = if (i == 6) -3 else 99,
+        tileQShifts = if (i == 7) Seq(-2, -1, 0, -3) else null,
+        chromaLevels = if (i == 8) 1 else -1,
+        poc = if (i == 9) Seq(
+          graft.sources.jp2.Jp2Codec.PocEntry(0, 0, 1, 4, 3, graft.sources.jp2.Jp2Codec.RLCP),
+          graft.sources.jp2.Jp2Codec.PocEntry(0, 0, 2, 4, 3, graft.sources.jp2.Jp2Codec.LRCP))
+        else Nil)
+      // file 10: author the foreign streaming-writer shape — every
+      // SOT's TNsot byte erased to 0 (pixels and lengths unchanged)
+      val cs = if (i == 10) graft.sources.jp2.Jp2Codec.eraseTnsot(cs0) else cs0
+      val name = s"lossy_$i.jp2"
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$dir/$name"),
+        graft.sources.Jp2Box.buildContainer(w, h, cs))
+      // container-to-container: binaryFile's length below is the lossy
+      // CONTAINER's, so the baseline must carry the same box framing
+      val lossless = graft.sources.Jp2Box.buildContainer(w, h,
+        graft.sources.jp2.Jp2Codec.encode(w, h, comps,
+          tileSize = if (i % 2 == 1) 64 else 0))
+      name -> lossless.length.toLong
+    }.toMap
+    (dir, sizes)
+  }
 
   /** The l5m staging arithmetic, regenerable from the file index alone. */
   private def lossyJp2Comps(w: Int, h: Int, i: Int): Array[Array[Int]] =
@@ -1953,7 +1920,7 @@ object Sources {
     * encoding of the same pixels. */
   def l5mJp2LossyDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (staged, losslessBytes) = stageLossyJp2s()
+    val (staged, losslessBytes) = lossyJp2s
     spark.read.format("binaryFile").load(staged)
       .select(element_at(split($"path", "/"), -1).as("file_name"), $"content", $"length")
       .as[(String, Array[Byte], Long)]
@@ -2029,14 +1996,11 @@ object Sources {
         "smaller_than_lossless")
   }
 
-  private val wavStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Synthesize 4 REAL 16-bit mono PCM WAVs (staged once per JVM): sample
     * k of file i is `((k * 37 + i * 11) % 2048) - 1024` — integer-exact
     * and index-determined, so decoded features are oracle arithmetic. */
   private[graft] def stageWavs(): String =
-    wavStaged.computeIfAbsent("wavs", { _ =>
-      val dir = tempDir("l5d_wavs")
+    staged("l5d_wavs", "") { dir =>
       (0 until 4).foreach { i =>
         val n = 4000 + i * 1000
         val pcm = new Array[Byte](n * 2)
@@ -2052,8 +2016,7 @@ object Sources {
           javax.sound.sampled.AudioFileFormat.Type.WAVE,
           new java.io.File(s"$dir/clip_$i.wav"))
       }
-      dir
-    })
+    }
 
   /** L5d: audio feature extraction — the audio leg of the multimodal tier:
     * REAL WAV decode through `javax.sound.sampled` (PCM is lossless, so
@@ -2141,8 +2104,6 @@ object Sources {
       .select($"file_name", $"seg_start", $"seg_end", $"n_active_frames")
   }
 
-  private val phashStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Synthesize REAL JPEGs for the perceptual-hash dedup (staged once per
     * JVM): each base image is an 8×8 block pattern scaled up (block
     * brightness a per-image integer formula — coarse structure survives
@@ -2151,8 +2112,7 @@ object Sources {
     * byte-identical, which is exactly what exact-hash dedup (l1) misses
     * and perceptual hashing must catch. */
   private[graft] def stagePhashJpegs(): String =
-    phashStaged.computeIfAbsent("phash", { _ =>
-      val dir = tempDir("l5e_phash")
+    staged("l5e_phash", "") { dir =>
       (0 until 8).foreach { i =>
         val (w, h) = (96 + 8 * i, 80 + 8 * ((i * 3) % 5))
         val img = new java.awt.image.BufferedImage(
@@ -2167,8 +2127,7 @@ object Sources {
         val back = javax.imageio.ImageIO.read(new java.io.File(s"$dir/img_$i.jpg"))
         javax.imageio.ImageIO.write(back, "jpg", new java.io.File(s"$dir/dup_$i.jpg"))
       }
-      dir
-    })
+    }
 
   /** L5e: image near-dedup by perceptual hash — the image leg of the
     * dedup families (exact l1, text-MinHash l2, SimHash l24, embedding
@@ -2249,25 +2208,20 @@ object Sources {
       .toDF("file_name", "frame_idx", "byte_offset")
   }
 
-  private val evoStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage two document snapshots whose schemas DIFFER: v1 (even doc_ids)
     * was written before the `source`/`n_chars` columns existed, v2 (odd
     * doc_ids) carries the widened schema. One directory, two generations —
     * the layout every long-lived 100 TB corpus converges to. */
   private[graft] def stageEvolvedDocs(spark: SparkSession, dir: String): String =
-    evoStaged.computeIfAbsent(dir, { _ =>
+    staged("s33_evo", dir) { out =>
       import spark.implicits._
-      val out = tempDir("s33_evo")
       val d = documents(spark, dir)
       d.filter($"doc_id" % 2 === 0).select($"doc_id", $"text", $"lang")
         .write.mode(SaveMode.Overwrite).parquet(s"$out/gen=v1")
       d.filter($"doc_id" % 2 =!= 0)
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .write.mode(SaveMode.Overwrite).parquet(s"$out/gen=v2")
-      out
-    })
+    }
 
   /** S33: schema-evolution read — a single mergeSchema scan unifies both
     * generations (old files surface the new columns as NULL), and the

@@ -40,8 +40,8 @@ object StreamingQ {
     * large at 100 TB scale. */
   def st2CheckpointedAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     // 2 files per trigger → 2 micro-batches: enough to prove checkpointed
     // cross-batch aggregation while halving state-store commit rounds.
     // ~30 day windows of state: 8 state partitions (= 16 store commits over
@@ -58,8 +58,8 @@ object StreamingQ {
     * (mirrors skip-if-exists + state, :462-465, scraper_state.json). */
   def st3ForeachBatchIdempotent(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val sink = tempDir("st3_sink")
     val writer = new IncrementalWriter(spark, sink, Seq("event_id"))
     val appended = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -92,8 +92,8 @@ object StreamingQ {
     * must yield exactly 4 micro-batches (pacing, :495 + main.yml:94). */
   def st5RatePaced(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val rows = new java.util.concurrent.atomic.AtomicLong(0L)
     Streams.run(Streams.eventsStream(spark, staged, schema, 1), "st5") { (batch, _) =>
@@ -131,16 +131,15 @@ object StreamingQ {
       .dropDuplicates("user_id", "event_type")
   }
 
-  /** Staged two-file stream for [[st7bWatermarkDedup]]. File `a.parquet` =
-    * all event keys plus a planted probe key (-1,'dup') at a timestamp past
-    * the data range; file `b.parquet` = two duplicates: the probe key again
-    * (lands INSIDE the watermark → must be deduped by state) and the
+  /** Staged two-file stream for [[st7bWatermarkDedup]]. File 0 = all
+    * event keys plus a planted probe key (-1,'dup') at a timestamp past
+    * the data range; file 1 = two duplicates: the probe key again (lands
+    * INSIDE the watermark → must be deduped by state) and the
     * lexicographically-first real key at the data's start (far BELOW the
-    * watermark after batch A → must be dropped as late). Modification
-    * times force deterministic batch order A→B under maxFilesPerTrigger=1. */
-  private val st7bStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * watermark after file 0 → must be dropped as late). One file per
+    * micro-batch under maxFilesPerTrigger=1, in that order. */
   private[graft] def stageSt7b(spark: SparkSession, dir: String): String =
-    st7bStaged.computeIfAbsent(dir, { _ =>
+    Streams.stage(spark, "st7b_src", dir) {
       import spark.implicits._
       val keyed = events(spark, dir).select($"user_id", $"event_type", $"ts")
       val probe = Seq(Tuple1(-1L)).toDF("user_id")
@@ -149,23 +148,8 @@ object StreamingQ {
       val lateDup = keyed.orderBy($"user_id", $"event_type").limit(1)
         .select($"user_id", $"event_type",
           to_timestamp(lit("2024-01-01 00:00:00")).as("ts"))
-      val out = java.nio.file.Paths.get(tempDir("st7b_src"))
-      def stageOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = tempDir(s"st7b_$name")
-        df.repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-        val listing = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        val part =
-          try listing.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst.get
-          finally listing.close()
-        val dst = out.resolve(s"$name.parquet")
-        java.nio.file.Files.copy(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(mtimeMs)): Unit
-      }
-      stageOne(keyed.union(probe), "a", 1700000000000L)
-      stageOne(lateDup.union(probe), "b", 1700000060000L)
-      out.toString
-    })
+      Seq(keyed.union(probe).repartition(1), lateDup.union(probe).repartition(1))
+    }
 
   /** ST7b: watermarked streaming dedup — the real §2 ST7 shape:
     * withWatermark + dropDuplicatesWithinWatermark over a 2-batch file
@@ -179,11 +163,10 @@ object StreamingQ {
   def st7bWatermarkDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageSt7b(spark, dir)
-    val schema = parquet(spark, s"$staged/a.parquet").schema
     // dedup state is ~(users × types) keys at fixture SF: 8 state
     // partitions instead of the batch default's 32 — the st2/st8/st13 rule
-    val deduped = Streams.stateSession(spark, 8).readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    val deduped = Streams.eventsStream(
+        Streams.stateSession(spark, 8), staged, parquet(spark, staged).schema, 1)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select($"user_id", $"event_type")
@@ -201,8 +184,8 @@ object StreamingQ {
     * the driver at any key cardinality. */
   def st8StatefulCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val out = tempDir("st8_out")
     // ~100 distinct users at fixture SF: 8 state partitions, not the batch
     // default (the state partition count locks in when the first batch plans)
@@ -237,8 +220,8 @@ object StreamingQ {
     * widens retention, not semantics. */
   def st9StreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     // 2 state partitions — MEASURED optimum, not a guess (r10 sweep at
     // sf0.1, min of 2 samples: 2→2.83-2.88 s, 4→3.13-3.25, 8→3.84,
     // 16→4.35; 2 still wins at the 10x sf1 dataset, 2.63 vs 2.86): each
@@ -326,8 +309,8 @@ object StreamingQ {
     * queryable data. */
   def st12StateStoreRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     // ~90 distinct day windows: 8 state partitions, not the batch default
     // (each partition is a state-store instance committed per batch)
     val agg = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
@@ -346,8 +329,8 @@ object StreamingQ {
     * total, which must equal the batch truth. */
   def st13TransformWithState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     // a RocksDB instance per state partition per batch, and each instance
     // costs an open/commit cycle (~0.5 s of native setup at any data
     // size): size to the key cardinality (~100 users at fixture SF), not
@@ -376,8 +359,8 @@ object StreamingQ {
     * which is the oracle. */
   def st14StreamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val dim = customer(spark, dir).select($"c_custkey", $"c_mktsegment")
     val enriched = Streams.eventsStream(spark, staged, schema, 2)
       .join(dim, $"user_id" === $"c_custkey")
@@ -404,21 +387,15 @@ object StreamingQ {
     * shifted ids, split deterministically so each batch carries one copy;
     * kept-per-language counts and token totals are copy-invariant, hence
     * oracle-checkable. */
-  private val st15Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def stageSt15(spark: SparkSession, dir: String): String =
-    st15Staged.computeIfAbsent(dir, { _ =>
+    Streams.stage(spark, "st15_src", dir) {
       import spark.implicits._
       val docs = documents(spark, dir).select($"doc_id", $"lang", $"text")
-      val planted = docs.unionByName(
-        docs.select(($"doc_id" + 1000000).as("doc_id"), $"lang", $"text"))
-      val out = tempDir("st15_src")
       // one copy per file => one copy per micro-batch: the second batch's
       // rows are ALL content-duplicates of the first and must append 0 rows
-      planted.withColumn("half", ($"doc_id" >= 1000000).cast("int"))
-        .repartition($"half") // one file per half-directory => 2 batches
-        .write.mode(SaveMode.Overwrite).partitionBy("half").parquet(out)
-      out
-    })
+      Seq(docs.repartition(1),
+        docs.select(($"doc_id" + 1000000).as("doc_id"), $"lang", $"text").repartition(1))
+    }
 
   def st15StreamingCuration(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -428,10 +405,7 @@ object StreamingQ {
     // temp dir and goes with it
     val sink = s"${tempDir("st15_sink")}/sink"
     val writer = new IncrementalWriter(spark, sink, Seq("content_key"), keyIndex = true)
-    val gated = spark.readStream
-      .schema(parquet(spark, staged).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged)
+    val gated = Streams.eventsStream(spark, staged, parquet(spark, staged).schema, 1)
       .select($"doc_id", $"lang", $"text",
         size(toks).cast("long").as("n_tokens"),
         size(array_distinct(toks)).cast("long").as("n_uniq"))
@@ -443,37 +417,21 @@ object StreamingQ {
       .agg(count(lit(1)).as("n_kept"), sum($"n_tokens").as("total_tokens"))
   }
 
-  private val st21Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Time-split 2-batch staging for st21: batch 0 = events strictly before
     * the (min+max)/2 micro midpoint, batch 1 = the rest — the
     * append-in-event-time arrival every warehouse CDC/ingest feed
     * guarantees, which is the precondition for merge-style SCD2 (an
     * out-of-order split like st19's would demand retraction, a different
-    * op). File mtimes are pinned fail-loud so FileStreamSource replays the
-    * halves in time order (the r7 staging trap). */
+    * op). One file per half, replayed in time order. */
   private[graft] def stageSt21(spark: SparkSession, dir: String): String =
-    st21Staged.computeIfAbsent(dir, { _ =>
+    Streams.stage(spark, "st21_src", dir) {
       import spark.implicits._
-      val out = tempDir("st21_src")
       val ev = events(spark, dir)
         .select($"user_id", $"event_type", unix_micros($"ts").as("us"), $"event_id")
       val mm = ev.agg(min($"us"), max($"us")).head()
       val bnd = (mm.getLong(0) + mm.getLong(1)) / 2
-      val t0 = 1700000000000L
-      Seq(ev.filter($"us" < bnd), ev.filter($"us" >= bnd)).zipWithIndex.foreach {
-        case (half, i) =>
-          val tmpDir = tempDir(s"st21_h$i")
-          half.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpDir)
-          val part = new java.io.File(tmpDir).listFiles
-            .filter(_.getName.endsWith(".parquet")).head
-          val target = new java.io.File(out, s"batch_$i.parquet")
-          require(part.renameTo(target), s"staging rename failed for $target")
-          require(target.setLastModified(t0 + i * 60000L),
-            s"mtime pin failed for $target — batch order would be luck")
-      }
-      out
-    })
+      Seq(ev.filter($"us" < bnd).coalesce(1), ev.filter($"us" >= bnd).coalesce(1))
+    }
 
   /** st21's per-batch merge, extracted so StreamingSpec can REPLAY a batch
     * and assert the sink is unchanged. Bucket-granular fencing: every row
@@ -583,10 +541,7 @@ object StreamingQ {
     // each batch's merge reads and joins the sink on the stream's session,
     // so its joins run at the stream's width of 8 as well
     val ss = Streams.stateSession(spark, 8)
-    val arrivals = ss.readStream
-      .schema(parquet(spark, staged).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged)
+    val arrivals = Streams.eventsStream(ss, staged, parquet(spark, staged).schema, 1)
     Streams.run(arrivals, "st21")(scd2MergeBatch(ss, sink, nBuckets = 8))
     parquet(spark, sink)
       .select($"user_id", $"event_type", $"valid_from_us", $"valid_to_us",
@@ -608,8 +563,8 @@ object StreamingQ {
     * no second source scan, no state. */
   def st16DeadLetter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val mainSink = tempDir("st16_main")
     val dlqSink = tempDir("st16_dlq")
     val bad = $"event_type" === "error" || $"value" >= 300.0
@@ -637,14 +592,13 @@ object StreamingQ {
     accepted.unionByName(quarantined).select($"route", $"key", $"n")
   }
 
-  /** Staged source for ST17: the full corpus first (half 0), then a
-    * re-crawl batch (half 1) of near-dup perturbations (first token
+  /** Staged source for ST17: the full corpus first (batch 0), then a
+    * re-crawl batch (batch 1) of near-dup perturbations (first token
     * dropped, +1M ids) plus token-reversed rewrites (+2M ids — disjoint
-    * shingle sets, so they must SURVIVE the dedup). One file per half =
-    * one micro-batch per half under maxFilesPerTrigger=1. */
-  private val st17Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * shingle sets, so they must SURVIVE the dedup). One file per batch =
+    * one micro-batch per batch under maxFilesPerTrigger=1. */
   private[graft] def stageSt17(spark: SparkSession, dir: String): String =
-    st17Staged.computeIfAbsent(dir, { _ =>
+    Streams.stage(spark, "st17_src", dir) {
       import spark.implicits._
       val d = documents(spark, dir).select($"doc_id", $"lang", $"text")
       val probes = d.filter($"doc_id" % 5 === 0)
@@ -652,21 +606,8 @@ object StreamingQ {
           expr("substring(text, instr(text, ' ') + 1)").as("text"))
         .unionByName(probes.select(($"doc_id" + 2000000).as("doc_id"), $"lang",
           array_join(reverse(split($"text", " ")), " ").as("text")))
-      val out = tempDir("st17_src")
-      d.unionByName(batch2)
-        .withColumn("half", ($"doc_id" >= 1000000).cast("int"))
-        .repartition($"half") // one file per half-directory => 2 batches
-        .write.mode(SaveMode.Overwrite).partitionBy("half").parquet(out)
-      // FileStreamSource orders files by MODIFICATION TIME, not path — pin
-      // mtimes explicitly (half 0 strictly older) or batch order is at the
-      // mercy of task completion order (same discipline as stageSt7b)
-      Seq(0, 1).foreach { h =>
-        new java.io.File(s"$out/half=$h").listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach(f => { f.setLastModified(1600000000000L + h * 60000L): Unit })
-      }
-      out
-    })
+      Seq(d.repartition(1), batch2.repartition(1))
+    }
 
   /** ST17: streaming near-dedup against a persistent signature index —
     * the streaming twin of l36 and the fuzzy upgrade of st15's exact
@@ -694,10 +635,7 @@ object StreamingQ {
     val staged = stageSt17(spark, dir)
     val sink = tempDir("st17_sink")
     val idx = tempDir("st17_idx")
-    val docs = spark.readStream
-      .schema(parquet(spark, staged).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged)
+    val docs = Streams.eventsStream(spark, staged, parquet(spark, staged).schema, 1)
       .select($"doc_id", $"lang", $"text")
     Streams.run(docs, "st17")(st17ProcessBatch(_, _, sink, idx))
     parquet(spark, sink).select($"doc_id", $"lang")
@@ -764,8 +702,8 @@ object StreamingQ {
     * directory. */
   def st18StreamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val out = tempDir("st18_out")
     val sketches = Streams.eventsStream(
         Streams.stateSession(spark, 4, rocksDb = true), staged, schema, 2)
@@ -796,26 +734,18 @@ object StreamingQ {
       .agg(sum($"est_in_shard").as("est_n"))
   }
 
-  private val st19StagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage the events table as 3 parquet files plus a strictly-later
+  /** Stage the events table as 2 parquet files plus a strictly-later
     * "sentinel" file holding one far-future purchase + click. The sentinel
     * is what makes an OUTER stream-stream join deterministic under
     * AvailableNow: once it is processed, both sides' watermarks jump past
     * every real row's join window, so ALL unmatched rows are flushed in
     * the trailing no-data micro-batch instead of being stranded in state.
-    * FileStreamSource orders files by modification time, so the mtimes are
-    * pinned explicitly — the sentinel must never be read before the data
+    * The sentinel is the last file, so it is never read before the data
     * (rows behind the watermark would be dropped as late). */
   def stageSt19(spark: SparkSession, dir: String): String =
-    st19StagedCache.computeIfAbsent(dir, { _ =>
+    Streams.stage(spark, "st19_staged", dir) {
       import spark.implicits._
-      val out = tempDir("st19_staged")
       val ev = events(spark, dir)
-      ev.repartition(2).write.mode(SaveMode.Overwrite).parquet(out)
-      val dataFiles = new java.io.File(out).listFiles
-        .filter(_.getName.endsWith(".parquet"))
       // read the max event time as raw micros (getLong), not getTimestamp:
       // robust to the ts column's externalized class, whatever the fixture
       // encoding was before Engine.table normalized it
@@ -832,22 +762,9 @@ object StreamingQ {
           case "event_type" => lit(tpe).as("event_type")
           case c => col(c)
         }: _*)
-      sentinel("purchase", -901L).unionByName(sentinel("click", -902L))
-        .coalesce(1).write.mode(SaveMode.Append).parquet(out)
-      val dataNames = dataFiles.map(_.getName).toSet
-      val t0 = 1700000000000L
-      // fail-loud mtime pinning (setLastModified only returns false): if
-      // the sentinel were ever read FIRST, the watermark jump would drop
-      // every real row as late — ordering is correctness here
-      new java.io.File(out).listFiles
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach { f =>
-          java.nio.file.Files.setLastModifiedTime(f.toPath,
-            java.nio.file.attribute.FileTime.fromMillis(
-              if (dataNames(f.getName)) t0 else t0 + 600000L)): Unit
-        }
-      out
-    })
+      Seq(ev.repartition(2),
+        sentinel("purchase", -901L).unionByName(sentinel("click", -902L)).coalesce(1))
+    }
 
   /** ST19: stream-stream LEFT OUTER join with watermarked state eviction —
     * the semantics st9's inner join cannot express: a purchase with NO
@@ -863,7 +780,7 @@ object StreamingQ {
   def st19OuterJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageSt19(spark, dir)
-    val schema = Streams.eventsSchema(spark, dir)
+    val schema = parquet(spark, staged).schema
     // 4 state partitions: an interval join commits FOUR stores per
     // partition per micro-batch (keyToNumValues + keyWithIndexToValue on
     // each side), so partition count is the dominant fixture-scale cost.
@@ -903,7 +820,7 @@ object StreamingQ {
   def st22StreamFullOuter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageSt19(spark, dir)
-    val schema = Streams.eventsSchema(spark, dir)
+    val schema = parquet(spark, staged).schema
     // 4 state partitions — the st19 sizing rationale (four store commits
     // per partition per micro-batch on an interval join)
     val ss = Streams.stateSession(spark, 4)
@@ -951,8 +868,8 @@ object StreamingQ {
   private[graft] def st23BatchMetrics(
       spark: SparkSession, dir: String): Seq[(Long, Long, Long)] = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val out = tempDir("st23_out")
     val gated = Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
       .observe("gate",
@@ -1012,7 +929,7 @@ object StreamingQ {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     val staged = stageSt19(spark, dir)
-    val schema = Streams.eventsSchema(spark, dir)
+    val schema = parquet(spark, staged).schema
     val gapUs = 30L * 60 * 1000 * 1000
     val sessions = Streams.eventsStream(Streams.stateSession(spark, 8), staged, schema, 2)
       .filter($"user_id" % 4 === 0) // sentinel user also passes → flush
@@ -1071,8 +988,8 @@ object StreamingQ {
     val refCounts = events(spark, dir).filter($"ts" < split)
       .select(bucket($"value").as("bucket"))
       .groupBy($"bucket").agg(count(lit(1)).as("ref_n"))
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val candCounts = parquet(spark, Streams.runToParquet(
       Streams.eventsStream(Streams.stateSession(spark, 4), staged, schema, 2)
         .filter($"ts" >= split)
@@ -1102,8 +1019,8 @@ object StreamingQ {
     * the st2/st12 sizing rule. */
   def st25StreamingBaselineGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     // baseline trained by the SAME code path as w21 (dailyCounts +
     // seasonalCore), so the stream-vs-batch equivalence holds by
     // construction, not by parallel re-implementation
@@ -1169,8 +1086,8 @@ object StreamingQ {
   def st26StreamingPitEnrich(
       spark: SparkSession, dir: String, broadcastMaxBytes: Long): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val base = events(spark, dir).filter($"event_type" === "purchase")
       .select($"user_id", unix_micros($"ts").as("us"), $"event_id",
         $"value".as("feat"))
@@ -1244,8 +1161,8 @@ object StreamingQ {
     * not whole-sink); the trigger check is one directory listing. */
   def st27AutoCompaction(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = Streams.stageEvents(spark, dir, 4)
-    val schema = Streams.eventsSchema(spark, dir)
+    val staged = Streams.stageEvents(spark, dir)
+    val schema = parquet(spark, staged).schema
     val outRoot = tempDir("st27")
     val live = s"$outRoot/live"
     def parquetFiles(p: String): Int = {
@@ -1278,23 +1195,18 @@ object StreamingQ {
         sum($"value".cast(DecimalType(18, 2))).cast("double").as("sum_value"))
   }
 
-  private val st28Staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Two-batch doc-arrival staging for st28: docs split by id parity, one
-    * file per half so FileStreamSource delivers two micro-batches. Every
-    * doc arrives complete in exactly one batch — the precondition for
-    * append-only index maintenance (a doc EDIT would be a retraction,
-    * st21's merge territory, a different op). */
+  /** Two-batch doc-arrival staging for st28: docs split by id parity
+    * (even first), one file per half so FileStreamSource delivers two
+    * micro-batches. Every doc arrives complete in exactly one batch — the
+    * precondition for append-only index maintenance (a doc EDIT would be a
+    * retraction, st21's merge territory, a different op). */
   private[graft] def stageSt28(spark: SparkSession, dir: String): String =
-    st28Staged.computeIfAbsent(dir, { _ =>
+    Streams.stage(spark, "st28_src", dir) {
       import spark.implicits._
-      val out = tempDir("st28_src")
-      documents(spark, dir).select($"doc_id", $"text")
-        .withColumn("half", ($"doc_id" % 2).cast("int"))
-        .repartition($"half")
-        .write.mode(SaveMode.Overwrite).partitionBy("half").parquet(out)
-      out
-    })
+      val docs = documents(spark, dir).select($"doc_id", $"text")
+      Seq(docs.filter($"doc_id" % 2 === 0).repartition(1),
+        docs.filter($"doc_id" % 2 =!= 0).repartition(1))
+    }
 
   /** ST28: streaming inverted-index maintenance — the retrieval family's
     * streaming pillar: documents arrive in micro-batches and the BM25
@@ -1363,11 +1275,7 @@ object StreamingQ {
     val staged = stageSt28(spark, dir)
     val hitsSink = tempDir("st28_hits")
     val totalsSink = tempDir("st28_tot")
-    val docs = spark.readStream
-      .schema(parquet(spark, staged).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged)
-      .select($"doc_id", $"text")
+    val docs = Streams.eventsStream(spark, staged, parquet(spark, staged).schema, 1)
     Streams.run(docs, "st28") { (batch, _) =>
       val (hitsDelta, obs) = st28BatchDeltas(batch)
       hitsDelta.write.mode(SaveMode.Append).parquet(hitsSink)

@@ -110,33 +110,51 @@ class MisraGriesProcessor(k: Int)
   */
 object Streams {
 
-  private val stagedCache = new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+  /** Stage a file-stream source: the partitions of `batches`, frame after
+    * frame and partition after partition, become the flat files
+    * `part-<i>.parquet` of one directory, staged once per (`name`, `dir`)
+    * per JVM through [[Engine.staged]]. The file source admits files in
+    * modification-time order, and files written by parallel tasks get their
+    * times in whatever order the tasks finish, so the times are pinned to
+    * strictly increasing values in file order, and a pin that does not take
+    * fails the staging: under `maxFilesPerTrigger` every run puts the same
+    * files, and so the same rows, in each micro-batch. `batches` is built
+    * only when the source is staged. Read the directory with
+    * [[eventsStream]] and its own footer schema (`Engine.parquet`). */
+  def stage(spark: SparkSession, name: String, dir: String)(batches: => Seq[DataFrame]): String =
+    Engine.staged(name, dir) { out =>
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(out).getFileSystem(spark.sessionState.newHadoopConf())
+      val written = batches.zipWithIndex.map { case (frame, b) =>
+        val tmp = new Path(out, s"_batch$b")
+        frame.write.parquet(tmp.toString)
+        tmp
+      }
+      written.flatMap { tmp =>
+        fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      }.zipWithIndex.foreach { case (part, i) =>
+        val file = new Path(out, s"part-$i.parquet")
+        val time = 1700000000000L + i * 1000L
+        require(fs.rename(part, file), s"staging rename failed for $file")
+        fs.setTimes(file, time, -1L)
+        require(fs.getFileStatus(file).getModificationTime == time,
+          s"mtime pin failed for $file: batch order would be luck")
+      }
+      written.foreach(fs.delete(_, true))
+    }
 
-  /** Stage the events table as `n` parquet files so maxFilesPerTrigger can
-    * drive a deterministic number of micro-batches (the per-day batch
-    * pacing of main.yml:77-95). Staged once per (source, n) per JVM — the
-    * streaming queries share the copy instead of re-writing it. The file
-    * source admits files in modification-time order, and files written by
-    * parallel tasks get their times in whatever order the tasks finish, so
-    * the times are pinned in part-number order: every run puts the same
-    * files, and so the same rows, in each micro-batch. */
-  def stageEvents(spark: SparkSession, dir: String, n: Int): String =
-    stagedCache.computeIfAbsent((dir, n), { _ =>
-      val out = Engine.tempDir("events_staged")
-      Engine.events(spark, dir).repartition(n)
-        .write.mode(SaveMode.Overwrite).parquet(out)
-      new java.io.File(out).listFiles.filter(_.getName.startsWith("part-"))
-        .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-          java.nio.file.Files.setLastModifiedTime(f.toPath,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L)): Unit
-        }
-      out
-    })
+  /** The events table staged as 4 files, one per partition of
+    * `repartition(4)`, so `maxFilesPerTrigger` drives a deterministic
+    * number of micro-batches (the per-day batch pacing of
+    * main.yml:77-95). Every events stream shares this one copy. */
+  def stageEvents(spark: SparkSession, dir: String): String =
+    stage(spark, "events_staged", dir)(Seq(Engine.events(spark, dir).repartition(4)))
 
   def eventsSchema(spark: SparkSession, dir: String): StructType =
     Engine.events(spark, dir).schema
 
-  /** Streaming source over the staged events files. */
+  /** File stream over a staged directory ([[stage]]), admitting at most
+    * `maxFilesPerTrigger` files per micro-batch. */
   def eventsStream(spark: SparkSession, staged: String, schema: StructType,
       maxFilesPerTrigger: Int): DataFrame =
     spark.readStream

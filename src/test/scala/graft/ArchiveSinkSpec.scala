@@ -10,9 +10,6 @@ import graft.sources.{KbArchive, KbArchiveBatchWrite, KbArchiveCommitMessage}
 class ArchiveSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft_$tag").toString
-
   private def writeArchive(rows: Seq[(String, String)], path: String, mode: String): Unit =
     rows.toDF("key", "payload")
       .write.format(classOf[graft.sources.KbArchiveSink].getName)
@@ -27,7 +24,7 @@ class ArchiveSinkSpec extends SparkSpec {
   }
 
   test("archive write publishes a manifest whose md5s match the stored files") {
-    val dir = freshDir("arch")
+    val dir = tempDir("arch")
     writeArchive(Seq("a" -> "1,x", "b" -> "2,y", "c" -> "3,z"), dir, "append")
     val manifest = KbArchive.readManifest(dir)
     assert(manifest.nonEmpty && manifest.map(_.rows).sum == 3)
@@ -48,7 +45,7 @@ class ArchiveSinkSpec extends SparkSpec {
   }
 
   test("commit verifies staged md5s and refuses to publish a corrupt file") {
-    val dir = freshDir("arch_bad")
+    val dir = tempDir("arch_bad")
     val queryId = "q-corrupt"
     val staged = Paths.get(dir, s"_staging-$queryId", "part-00000-1.kbar")
     Files.createDirectories(staged.getParent)
@@ -65,7 +62,7 @@ class ArchiveSinkSpec extends SparkSpec {
   }
 
   test("streaming commit is epoch-fenced: a replayed epoch publishes nothing twice") {
-    val dir = freshDir("arch_epoch")
+    val dir = tempDir("arch_epoch")
     val qid = "q-replay"
     val sw = new graft.sources.KbArchiveStreamingWrite(dir, qid)
     def stage(epoch: Long, content: String): KbArchiveCommitMessage = {
@@ -91,7 +88,7 @@ class ArchiveSinkSpec extends SparkSpec {
   }
 
   test("abort removes staged files and leaves the committed archive untouched") {
-    val dir = freshDir("arch_abort")
+    val dir = tempDir("arch_abort")
     writeArchive(Seq("a" -> "1,x"), dir, "append")
     val before = KbArchive.readManifest(dir)
     // an in-flight write that fails: staged file exists, then the driver aborts
@@ -106,7 +103,7 @@ class ArchiveSinkSpec extends SparkSpec {
   }
 
   test("empty partitions leave no files behind") {
-    val dir = freshDir("arch_empty")
+    val dir = tempDir("arch_empty")
     // 4-thread session + 1 row => at least 3 empty writers
     spark.range(1).select(lit("only").as("key"), lit("row").as("payload"))
       .repartition(4)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkConf
@@ -96,7 +94,7 @@ object ChaosSpeculation {
     try {
       import spark.implicits._
       import org.apache.spark.sql.functions._
-      val out = Files.createTempDirectory("chaos_spec_archive").toString
+      val out = Engine.tempDir("chaos_spec_archive")
       val n = 200L
       spark.range(n)
         .select(concat(lit("k"), $"id").as("key"),

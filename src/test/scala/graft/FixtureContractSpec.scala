@@ -87,7 +87,7 @@ class FixtureContractSpec extends SparkSpec with EventsTsEncodings {
 
   test("missing ts column fails with the fixture-contract message, not a generic error") {
     import spark.implicits._
-    val d = writeDir("nots")
+    val d = tempDir("fixture_nots")
     Seq((1L, 10L)).toDF("event_id", "user_id")
       .write.parquet(s"$d/events.parquet")
     val e = intercept[IllegalStateException](
@@ -137,7 +137,7 @@ class FixtureContractSpec extends SparkSpec with EventsTsEncodings {
 
   test("an unknown ts encoding fails loudly, not silently") {
     import spark.implicits._
-    val d = writeDir("bogus")
+    val d = tempDir("fixture_bogus")
     Seq((1L, "2024-01-10", 10L)).toDF("event_id", "ts", "user_id")
       .write.parquet(s"$d/events.parquet")
     val e = intercept[IllegalStateException](loaded(d).schema)
@@ -155,16 +155,11 @@ trait EventsTsEncodings { this: SparkSpec =>
   val us1 = 1704844800000000L
   val us2 = 1704954600123456L
 
-  def writeDir(suffix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"fixture_$suffix").toString
-    d
-  }
-
   /** events.parquet with ts as TIMESTAMP_NTZ (the current testdata encoding:
     * parquet TIMESTAMP(MICROS), isAdjustedToUTC=false). */
   def ntzDir: String = {
     import spark.implicits._
-    val d = writeDir("ntz")
+    val d = tempDir("fixture_ntz")
     Seq((1L, us1, 10L), (2L, us2, 20L)).toDF("event_id", "us", "user_id")
       .select($"event_id", timestamp_micros($"us").cast("timestamp_ntz").as("ts"), $"user_id")
       .write.parquet(s"$d/events.parquet")
@@ -174,7 +169,7 @@ trait EventsTsEncodings { this: SparkSpec =>
   /** events.parquet with ts as TIMESTAMP (micros, adjusted to UTC). */
   def ltzDir: String = {
     import spark.implicits._
-    val d = writeDir("ltz")
+    val d = tempDir("fixture_ltz")
     withConfs("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       Seq((1L, us1, 10L), (2L, us2, 20L)).toDF("event_id", "us", "user_id")
         .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id")
@@ -190,7 +185,7 @@ trait EventsTsEncodings { this: SparkSpec =>
     * loader path the legacy encoding hits. */
   def nanosDir: String = {
     import spark.implicits._
-    val d = writeDir("nanos")
+    val d = tempDir("fixture_nanos")
     Seq((1L, us1 * 1000L, 10L), (2L, us2 * 1000L, 20L))
       .toDF("event_id", "ts", "user_id")
       .write.parquet(s"$d/events.parquet")

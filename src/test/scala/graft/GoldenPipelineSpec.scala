@@ -13,7 +13,7 @@ class GoldenPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("scrape-shaped pipeline lands complete, idempotent, partitioned output") {
-    val sink = java.nio.file.Files.createTempDirectory("golden").toString
+    val sink = tempDir("golden")
 
     // 1. extraction: issues with a manifest id and a publication date
     val issues = Extraction.p1RegexFallback(spark, sfDir)

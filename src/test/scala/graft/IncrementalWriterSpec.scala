@@ -9,12 +9,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * scalacheck directly (no scalatest bridge needed offline). */
 class IncrementalWriterSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
   test("append then identical re-append is a no-op (idempotence)") {
     import spark.implicits._
-    val dir = freshDir("iw1")
+    val dir = tempDir("iw1")
     val w = new IncrementalWriter(spark, dir, Seq("k"))
     val batch = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     assert(w.append(batch) == 100)
@@ -24,7 +21,7 @@ class IncrementalWriterSpec extends SparkSpec {
 
   test("overlapping batches append only the new keys, union is exact") {
     import spark.implicits._
-    val dir = freshDir("iw2")
+    val dir = tempDir("iw2")
     val w = new IncrementalWriter(spark, dir, Seq("k"))
     val b1 = (1 to 60).map(i => (i.toLong, "a")).toDF("k", "v")
     val b2 = (41 to 100).map(i => (i.toLong, "b")).toDF("k", "v")
@@ -37,7 +34,7 @@ class IncrementalWriterSpec extends SparkSpec {
 
   test("a sink holding a duplicated key still replays as a no-op") {
     import spark.implicits._
-    val dir = freshDir("iwd")
+    val dir = tempDir("iwd")
     // the probe's sink-key scan is not de-duplicated: duplicates on the
     // build side of the anti-join must not change what a replay appends
     val dup = Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("k", "v")
@@ -51,7 +48,7 @@ class IncrementalWriterSpec extends SparkSpec {
   test("property: for random key sets, re-running any batch adds nothing") {
     import spark.implicits._
     val prop = Prop.forAll(Gen.nonEmptyListOf(Gen.choose(1L, 500L))) { keys =>
-      val dir = freshDir("iwp")
+      val dir = tempDir("iwp")
       val w = new IncrementalWriter(spark, dir, Seq("k"))
       val batch = keys.distinct.map(k => (k, s"v$k")).toDF("k", "v")
       val first = w.append(batch)
@@ -67,7 +64,8 @@ class IncrementalWriterSpec extends SparkSpec {
 
   test("key-indexed writer: idempotent, probes the sidecar, survives a torn append") {
     import spark.implicits._
-    val dir = freshDir("iwk")
+    // one level down, so the `<dir>.keys` sidecar goes with the temp dir
+    val dir = s"${tempDir("iwk")}/sink"
     val w = new IncrementalWriter(spark, dir, Seq("k"), keyIndex = true)
     val b1 = (1 to 60).map(i => (i.toLong, "a")).toDF("k", "v")
     val b2 = (41 to 100).map(i => (i.toLong, "b")).toDF("k", "v")
@@ -101,7 +99,7 @@ class IncrementalWriterSpec extends SparkSpec {
   test("verified write reports zero mismatches for a faithful sink") {
     val docs = Engine.documents(spark, sfDir)
     val (n, ok, bad) = VerifiedWriter.writeVerified(
-      spark, docs, freshDir("vw"), "doc_id", "text")
+      spark, docs, tempDir("vw"), "doc_id", "text")
     assert(n == docs.count())
     assert(ok == n)
     assert(bad == 0)

@@ -66,7 +66,7 @@ class Jp2Spec extends SparkSpec {
     val cs = Jp2Codec.encode(w, h, comps, levels = 3, tileSize = 64, layers = 2,
       partsPerTile = 2, irreversible = true, qShift = -2)
     val container = Jp2Box.buildContainer(w, h, cs)
-    val dir = java.nio.file.Files.createTempDirectory("jp2_lossy_ranged").toString
+    val dir = tempDir("jp2_lossy_ranged")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/lossy.jp2"), container)
     val whole = Jp2Codec.decode(container)
     val expected = whole.comps.map(_.map(_.toLong).sum)

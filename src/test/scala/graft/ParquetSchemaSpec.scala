@@ -45,11 +45,13 @@ class ParquetSchemaSpec extends SparkSpec with EventsTsEncodings {
 
   test("every events.ts encoding: Spark's schema, no job") {
     for (d <- Seq(ntzDir, ltzDir, nanosDir)) assertSameAsSpark(s"$d/events.parquet")
+    // the events as the file streams read them, re-encoded by Streams.stage
+    assertSameAsSpark(graft.streaming.Streams.stageEvents(spark, sfDir))
   }
 
   test("an IncrementalWriter sink and its key index: Spark's schema, no job") {
     import spark.implicits._
-    val dir = writeDir("sink")
+    val dir = tempDir("fixture_sink")
     val w = new IncrementalWriter(spark, s"$dir/files", Seq("k"), keyIndex = true)
     assert(w.append((1 to 20).map(i => (i.toLong, s"v$i")).toDF("k", "v")) == 20)
     assert(w.append((11 to 30).map(i => (i.toLong, s"w$i")).toDF("k", "v")) == 10)
@@ -59,7 +61,7 @@ class ParquetSchemaSpec extends SparkSpec with EventsTsEncodings {
 
   test("an empty directory still fails with Spark's own error") {
     val e = intercept[org.apache.spark.sql.AnalysisException](
-      Engine.parquet(spark, writeDir("empty")))
+      Engine.parquet(spark, tempDir("fixture_empty")))
     assert(e.getMessage.contains("Unable to infer schema"), e.getMessage)
   }
 }

@@ -84,7 +84,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("S22: dynamic overwrite rewrites only the restated day partitions") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val out = java.nio.file.Files.createTempDirectory("s22_test").toString
+    val out = tempDir("s22_test")
     val base = Engine.events(spark, sfDir)
       .select($"event_id", $"value", date_format($"ts", "yyyy-MM-dd").as("day"))
     base.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(out)
@@ -425,7 +425,7 @@ class PipelineOpsSpec extends SparkSpec {
     // deterministic seeds (the k lowest vec_ids) are IDENTICAL to the
     // fixture-scale run while the corpus is 10x — the cross-scale
     // assertion the fixture-scale bounds above can't make.
-    val dir = java.nio.file.Files.createTempDirectory("sf10x_emb").toString
+    val dir = tempDir("sf10x_emb")
     val raw = Engine.embeddings(spark, sfDir)
     (0 until 10).map { i =>
       val emb = if (i == 0) $"embedding"

@@ -117,7 +117,7 @@ class PlanShapeSpec extends SparkSpec {
   test("S5b: day-partitioned read prunes partitions at the scan") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("prune").toString
+    val out = tempDir("prune")
     Engine.events(spark, sfDir)
       .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
       .write.mode("overwrite").partitionBy("day").parquet(out)
@@ -316,7 +316,7 @@ class PlanShapeSpec extends SparkSpec {
   test("S26: REBALANCE sizes output files to the advisory in both directions") {
     import org.apache.spark.sql.SaveMode
     def writeAndCount(): Int = {
-      val out = java.nio.file.Files.createTempDirectory("s26_test").toString
+      val out = tempDir("s26_test")
       Engine.events(spark, sfDir)
         .select(org.apache.spark.sql.functions.col("event_id"),
           org.apache.spark.sql.functions.col("event_type"),

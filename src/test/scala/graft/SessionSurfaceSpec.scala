@@ -22,6 +22,10 @@ import scala.jdk.CollectionConverters._
   *   - Stream starts: every stream runs through [[graft.streaming.Streams.run]]
   *     or its sink variants, which hold the one run policy (checkpoint,
   *     `Trigger.AvailableNow`, start, await and error propagation).
+  *   - Staging: [[Engine.staged]] is the one memo of staged inputs, and every
+  *     file-stream source is staged by [[graft.streaming.Streams.stage]],
+  *     which pins the file times, and read by `Streams.eventsStream`; only
+  *     the search connector's streams read through `readStream` elsewhere.
   *   - Mains and registry reads: every main that runs registered queries
   *     picks, looks up, runs and counts them through [[SparkEntry.run]], so
   *     the list of mains is fixed and no other file reads the registry.
@@ -36,6 +40,18 @@ class SessionSurfaceSpec extends AnyFunSuite {
         new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
     finally walk.close()
   }
+
+  /** Non-comment lines of `src/main/scala` that `hit` matches, as
+    * (file name, "file:line: text"). */
+  private def sites(hit: String => Boolean): Seq[(String, String)] =
+    sources.flatMap { case (name, text) =>
+      text.split("\n").toSeq.zipWithIndex.collect {
+        case (line, i) if hit(line) && !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
+          (name, s"$name:${i + 1}: ${line.trim}")
+      }
+    }
+
+  private def listing(found: Seq[(String, String)]): String = found.map(_._2).mkString("\n", "\n", "")
 
   test("only Engine, SpillProbe and ChaosRetry build a SparkSession") {
     val builder = """SparkSession\s*\.builder""".r
@@ -60,52 +76,44 @@ class SessionSurfaceSpec extends AnyFunSuite {
   }
 
   test("only SparkEntry reads SparkEntry.queries") {
-    val sites = sources.flatMap { case (name, text) =>
-      text.split("\n").toSeq.zipWithIndex.collect {
-        case (line, i) if line.contains("SparkEntry.queries") &&
-            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
-          (name, s"$name:${i + 1}: ${line.trim}")
-      }
-    }
-    assert(sites.forall(_._1 == "SparkEntry.scala"), sites.map(_._2).mkString("\n", "\n", ""))
+    val found = sites(_.contains("SparkEntry.queries"))
+    assert(found.forall(_._1 == "SparkEntry.scala"), listing(found))
   }
 
   test("only Engine.scoped sets a session's config or makes a child session") {
     val site = """\bconf\.(set|unset)\(|\bnewSession\(""".r
-    val sites = sources.flatMap { case (name, text) =>
-      text.split("\n").toSeq.zipWithIndex.collect {
-        case (line, i) if site.findFirstIn(line).isDefined &&
-            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
-          (name, s"$name:${i + 1}: ${line.trim}")
-      }
-    }
-    val listing = sites.map(_._2).mkString("\n", "\n", "")
-    assert(sites.forall(_._1 == "Engine.scala"), listing)
+    val found = sites(site.findFirstIn(_).isDefined)
+    assert(found.forall(_._1 == "Engine.scala"), listing(found))
     // one `newSession()` and the one loop that configures the new child
-    assert(sites.size <= 2, listing)
+    assert(found.size <= 2, listing(found))
   }
 
   test("only Engine creates temp directories") {
-    val sites = sources.flatMap { case (name, text) =>
-      text.split("\n").toSeq.zipWithIndex.collect {
-        case (line, i) if line.contains("createTempDirectory(") &&
-            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
-          (name, s"$name:${i + 1}: ${line.trim}")
-      }
-    }
-    assert(sites.forall(_._1 == "Engine.scala"), sites.map(_._2).mkString("\n", "\n", ""))
+    val found = sites(_.contains("createTempDirectory("))
+    assert(found.forall(_._1 == "Engine.scala"), listing(found))
   }
 
   test("only Streams starts a stream") {
-    val sites = sources.flatMap { case (name, text) =>
-      text.split("\n").toSeq.zipWithIndex.collect {
-        case (line, i) if line.contains(".writeStream") &&
-            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
-          (name, s"$name:${i + 1}: ${line.trim}")
-      }
-    }
-    val listing = sites.map(_._2).mkString("\n", "\n", "")
-    assert(sites.forall(_._1 == "Streams.scala"), listing)
-    assert(sites.size <= 2, listing)
+    val found = sites(_.contains(".writeStream"))
+    assert(found.forall(_._1 == "Streams.scala"), listing(found))
+    assert(found.size <= 2, listing(found))
+  }
+
+  test("only Engine memoizes staged inputs") {
+    // Jp2Codec's map caches the codec's synthesis-norm constants, not a
+    // staged input
+    val found = sites(_.contains("ConcurrentHashMap"))
+      .filterNot(f => f._1 == "Engine.scala" || f._1 == "Jp2Codec.scala")
+    assert(found.isEmpty, listing(found))
+  }
+
+  test("only Streams stages a file-stream source") {
+    val pins = sites(l => l.contains("setLastModified") || l.contains("setTimes("))
+    assert(pins.forall(_._1 == "Streams.scala"), listing(pins))
+    // every other stream reads the search connector's day cursor (st10, st11)
+    val search = """\.readStream\s*\.format\(classOf\[graft\.sources\.KbSearchSource\]""".r
+    val searchStreams = sources.map { case (_, text) => search.findAllIn(text).size }.sum
+    val reads = sites(_.contains(".readStream")).filterNot(_._1 == "Streams.scala")
+    assert(reads.size == searchStreams && searchStreams <= 2, listing(reads))
   }
 }

@@ -9,6 +9,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A new directory under `java.io.tmpdir` whose name starts with `tag`,
+    * deleted with everything in it when the suite ends. */
+  def tempDir(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).toFile
+    made.add(dir)
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try made.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d): Unit)
+    finally super.afterAll()
+
   /** Run `body` with SQL confs overridden on the shared session,
     * restoring previous values (or unsetting) afterwards. */
   def withConfs[T](kvs: (String, String)*)(body: => T): T = {

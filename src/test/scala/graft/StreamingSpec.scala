@@ -11,9 +11,6 @@ import org.apache.spark.sql.types.StructType
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
   private val schema = StructType.fromDDL("ts TIMESTAMP, k STRING, v BIGINT")
 
   private def writeFile(dir: String, name: String, rows: Seq[(String, String, Long)]): Unit =
@@ -22,11 +19,11 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(dir)
 
   test("ST1/ST4: append-mode windowed agg drops events behind the watermark") {
-    val src = tmp("wm_src")
+    val src = tempDir("wm_src")
     // batch 1: one event in the 10:00 window, one at 12:00 (advances watermark to 11:00)
     writeFile(src, "b1", Seq(("2024-01-01 10:00:10", "a", 1L), ("2024-01-01 12:00:00", "b", 1L)))
-    val out = tmp("wm_out")
-    val ck = tmp("wm_ck")
+    val out = tempDir("wm_out")
+    val ck = tempDir("wm_ck")
     def runOnce(): Unit = {
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -62,10 +59,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST2: restart from checkpoint does not reprocess absorbed files") {
-    val src = tmp("ck_src")
+    val src = tempDir("ck_src")
     writeFile(src, "b1", Seq(("2024-01-01 00:00:00", "x", 1L), ("2024-01-01 00:00:01", "y", 2L)))
-    val ck = tmp("ck_ck")
-    val out = tmp("ck_out")
+    val ck = tempDir("ck_ck")
+    val out = tempDir("ck_out")
     def total(): Long = {
       val q = spark.readStream.schema(schema).parquet(src)
         .writeStream.outputMode("append")
@@ -83,16 +80,16 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST7: dropDuplicatesWithinWatermark keeps one row per key in-window") {
-    val src = tmp("dd_src")
+    val src = tempDir("dd_src")
     writeFile(src, "b1", Seq(
       ("2024-01-01 10:00:00", "k1", 1L), ("2024-01-01 10:00:05", "k1", 2L),
       ("2024-01-01 10:00:07", "k2", 3L)))
-    val out = tmp("dd_out")
+    val out = tempDir("dd_out")
     val q = spark.readStream.schema(schema).parquet(src)
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("k")
       .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("dd_ck"))
+      .option("checkpointLocation", tempDir("dd_ck"))
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", out)
       .start()
@@ -103,7 +100,7 @@ class StreamingSpec extends SparkSpec {
 
   test("custom state: mapGroupsWithState keeps running per-key counts across batches") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = tmp("mgs_src")
+    val src = tempDir("mgs_src")
     writeFile(src, "b1", Seq(
       ("2024-01-01 00:00:01", "u1", 1L), ("2024-01-01 00:00:02", "u1", 1L),
       ("2024-01-01 00:00:03", "u2", 1L)))
@@ -125,7 +122,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("k", "n")
       .writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName(name)
-      .option("checkpointLocation", tmp("mgs_ck"))
+      .option("checkpointLocation", tempDir("mgs_ck"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -136,7 +133,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST6: session windows merge in a real stream run to completion") {
-    val src = tmp("sess_src")
+    val src = tempDir("sess_src")
     writeFile(src, "b1", Seq(
       ("2024-01-01 10:00:00", "u1", 1L), ("2024-01-01 10:10:00", "u1", 1L), // one session
       ("2024-01-01 12:00:00", "u1", 1L))) // gap > 30 min: second session
@@ -147,7 +144,7 @@ class StreamingSpec extends SparkSpec {
       .select($"k", $"w.start".as("s_start"), $"n")
       .writeStream.outputMode("complete")
       .format("memory").queryName(name)
-      .option("checkpointLocation", tmp("sess_ck"))
+      .option("checkpointLocation", tempDir("sess_ck"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -158,8 +155,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream join: matches land across micro-batch boundaries") {
-    val clicksDir = tmp("ssj_clicks")
-    val buysDir = tmp("ssj_buys")
+    val clicksDir = tempDir("ssj_clicks")
+    val buysDir = tempDir("ssj_buys")
     // click and purchase arrive in DIFFERENT batches for u2: the join state
     // must hold the click until the purchase shows up
     writeFile(clicksDir, "b1", Seq(
@@ -174,12 +171,12 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).parquet(buysDir)
       .withWatermark("ts", "1 hour")
       .select($"k".as("b_k"), $"ts".as("b_ts"), $"v".as("amount"))
-    val out = tmp("ssj_out")
+    val out = tempDir("ssj_out")
     val q = clicks.join(buys,
         $"c_k" === $"b_k" && $"b_ts" >= $"c_ts" &&
           $"b_ts" <= $"c_ts" + org.apache.spark.sql.functions.expr("interval 30 minutes"))
       .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("ssj_ck"))
+      .option("checkpointLocation", tempDir("ssj_ck"))
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", out)
       .start()
@@ -190,8 +187,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST10: DSv2 micro-batch stream paces by days and resumes from checkpoint") {
-    val sink = tmp("st10s_sink")
-    val ckpt = tmp("st10s_ck")
+    val sink = tempDir("st10s_sink")
+    val ckpt = tempDir("st10s_ck")
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     def drain(): Long = {
       batches.set(0L)
@@ -223,14 +220,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST5: maxFilesPerTrigger paces ingestion into one batch per file") {
-    val src = tmp("rate_src")
+    val src = tempDir("rate_src")
     (1 to 3).foreach(i =>
       writeFile(src, s"b$i", Seq((s"2024-01-01 00:00:0$i", s"k$i", i.toLong))))
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
       .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("rate_ck"))
+      .option("checkpointLocation", tempDir("rate_ck"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!b.isEmpty) batches.incrementAndGet(): Unit
@@ -241,7 +238,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("Streams.run rethrows a failed batch and keeps the stream's checkpoint") {
-    val src = tmp("fail_src")
+    val src = tempDir("fail_src")
     writeFile(src, "b1", Seq(("2024-01-01 00:00:01", "k1", 1L)))
     val boom = new IllegalStateException("batch failed on purpose")
     val name = s"runfail_${System.nanoTime()}"
@@ -290,8 +287,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Engine.documents(spark, sfDir).select($"doc_id", $"lang", $"text")
     val b0 = docs.filter($"doc_id" < 50)
     val b1 = docs.filter($"doc_id" >= 50 && $"doc_id" < 100)
-    val sink = java.nio.file.Files.createTempDirectory("st17r_sink").toString
-    val idx = java.nio.file.Files.createTempDirectory("st17r_idx").toString
+    val sink = tempDir("st17r_sink")
+    val idx = tempDir("st17r_idx")
     graft.queries.StreamingQ.st17ProcessBatch(b0, 0L, sink, idx)
     graft.queries.StreamingQ.st17ProcessBatch(b1, 1L, sink, idx)
     def batchRows(n: Int): Set[Long] =
@@ -434,12 +431,27 @@ class StreamingSpec extends SparkSpec {
 
   test("staged event files are admitted in part order, one per time") {
     // the file source admits files by modification time; pinned times make
-    // every run split the staged rows into the same micro-batches
-    val files = new java.io.File(graft.streaming.Streams.stageEvents(spark, sfDir, 4))
-      .listFiles.filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val times = files.map(_.lastModified).toSeq
-    assert(files.length == 4)
-    assert(times == times.distinct.sorted, times.toString)
+    // every run split the staged rows into the same micro-batches. Every
+    // file-stream source is staged by Streams.stage: a flat directory of
+    // part-<i>.parquet files whose times rise with i
+    import graft.queries.StreamingQ._
+    val staged = Seq(
+      "events" -> (graft.streaming.Streams.stageEvents(spark, sfDir), 4),
+      "st7b" -> (stageSt7b(spark, sfDir), 2),
+      "st15" -> (stageSt15(spark, sfDir), 2),
+      "st17" -> (stageSt17(spark, sfDir), 2),
+      "st19" -> (stageSt19(spark, sfDir), 3),
+      "st21" -> (stageSt21(spark, sfDir), 2),
+      "st28" -> (stageSt28(spark, sfDir), 2))
+    for ((name, (dir, n)) <- staged) {
+      val entries = new java.io.File(dir).listFiles.toSeq
+      assert(entries.forall(_.isFile), s"$name: not flat: ${entries.map(_.getName)}")
+      val files = (0 until n).map(i => new java.io.File(dir, s"part-$i.parquet"))
+      assert(entries.filterNot(_.getName.startsWith(".")).map(_.getName).sorted ==
+        files.map(_.getName).sorted, name)
+      val times = files.map(_.lastModified)
+      assert(times.zip(times.tail).forall { case (a, b) => a < b }, s"$name: $times")
+    }
   }
 
   test("ST18: two runs on fresh checkpoints return the same sketch") {
@@ -457,7 +469,7 @@ class StreamingSpec extends SparkSpec {
 
   test("ST21: SCD2 merge extends/closes correctly and a replayed batch is a no-op") {
     import spark.implicits._
-    val sink = java.nio.file.Files.createTempDirectory("st21_test").toString
+    val sink = tempDir("st21_test")
     val merge = graft.queries.StreamingQ.scd2MergeBatch(spark, sink, nBuckets = 4) _
     // batch 0: u1 has a run of 'a' then 'b' (open); u2 a single open 'a'
     val b0 = Seq(

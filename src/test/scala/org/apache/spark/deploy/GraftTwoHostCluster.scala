@@ -49,7 +49,7 @@ object GraftTwoHostCluster {
       case (host, i) =>
         Worker.startRpcEnvAndEndpoint(
           host, 0, 0, coresPerWorker, memPerWorkerMb, Array(masterUrl),
-          java.nio.file.Files.createTempDirectory(s"graft_worker$i").toString,
+          graft.Engine.tempDir(s"graft_worker$i"),
           Some(i + 1), new SparkConf(false).setAll(conf.getAll), None)
     }
     Handle(masterUrl, masterEnv +: workerEnvs)
