@@ -51,8 +51,7 @@ object ChaosRetry {
 
   /** Non-hidden entries of `dir` (what a reader can see). */
   private def visible(dir: String): Set[String] =
-    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName).filterNot(Engine.hidden).toSet
 
   /** kb.dim's live `_files` manifest body (data files only, `#v=` header
     * dropped) — read directly; the connector keeps its parser private. */

@@ -150,6 +150,11 @@ object Engine {
     if (name == "events") normalizeEventTs(raw) else raw
   }
 
+  /** Whether a reader skips the file or directory called `n`: Spark's
+    * rule (`_` without `=`, `.`, `._COPYING_`), the engine's only one. */
+  def hidden(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+
   /** `spark.read.parquet(paths)` with the schema taken from one footer read
     * on the Spark driver, so building the DataFrame schedules no Spark job.
     *
@@ -157,52 +162,51 @@ object Engine {
     * footer inside a one-task job (`SchemaMergeUtils.mergeSchemasInParallel`
     * always runs `parallelize(...).collect()`), a fixed cost of tens of
     * milliseconds per read that short queries and per-batch sinks pay on
-    * every call. This reads the footer Spark's non-merging inference would
-    * pick (`_common_metadata`, else `_metadata`, else the first data file in
-    * path order), converts it with Spark's own `readSchemaFromFooter` and a
-    * converter built from the session conf (so `nanosAsLong`, NTZ inference
-    * and binary-as-string apply as they would), and hands the result to
-    * `spark.read.schema`. Anything else is left to Spark unchanged: a
-    * missing path, a directory without a data file at its top level (empty,
-    * or partitioned into subdirectories) or `mergeSchema` all fall back to
+    * every call. This lists the files Spark reads (those of each path and
+    * of its `key=value` subdirectories that are not [[hidden]]), reads the
+    * footer Spark's non-merging inference would pick over them
+    * (`_common_metadata`, else `_metadata`, else the first data file in
+    * full-path order), converts it with Spark's own `readSchemaFromFooter`
+    * and a converter built from the session conf (so `nanosAsLong`, NTZ
+    * inference and binary-as-string apply as they would), and hands the
+    * result to `spark.read.schema`. Spark still types the partition columns
+    * from the directory names, on the driver. Anything else is left to
+    * Spark unchanged: a missing path, no data file, a data column named
+    * like a partition directory, or `mergeSchema` all fall back to
     * `spark.read.parquet`, with Spark's own errors. */
   def parquet(spark: SparkSession, paths: String*): DataFrame = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
     import org.apache.spark.sql.execution.datasources.parquet._
     val conf = spark.sessionState.newHadoopConf()
-    def hidden(st: FileStatus): Boolean = {
-      val n = st.getPath.getName
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
-    }
-    // a path's top-level files, or None where Spark must decide alone
-    def leaves(p: String): Option[Seq[FileStatus]] = {
+    def walk(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.flatMap { e =>
+        val n = e.getPath.getName
+        if (e.isFile) Seq(e) else if (n.contains("=") && !hidden(n)) e +: walk(fs, e) else Nil
+      }
+    val perPath = paths.map { p => // None where the path is missing
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
-      if (!fs.exists(hp)) None
-      else {
-        val st = fs.getFileStatus(hp)
-        val entries = if (st.isFile) Seq(st) else fs.listStatus(hp).toSeq
-        if (entries.exists(e => e.isDirectory && !hidden(e))) None
-        else Some(entries.filter(_.isFile))
-      }
+      try Some(walk(fs, fs.getFileStatus(hp))) catch { case _: java.io.FileNotFoundException => None }
     }
-    val perPath = paths.map(leaves)
-    val sorted =
-      if (perPath.contains(None)) Nil else perPath.flatten.flatten.sortBy(_.getPath.toString)
-    def named(n: String) = sorted.find(_.getPath.getName == n)
-    val data = sorted.filterNot(hidden)
-    if (data.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled)
-      spark.read.parquet(paths: _*)
-    else {
+    val found = if (perPath.contains(None)) Nil else perPath.flatten.flatten
+    val files = found.filter(_.isFile).sortBy(_.getPath.toString)
+    val data = files.filterNot(f => hidden(f.getPath.getName))
+    lazy val schema = {
+      def named(n: String) = files.find(_.getPath.getName == n)
       val src = named("_common_metadata").orElse(named("_metadata")).getOrElse(data.head)
       val footer = ParquetFooterReader.readFooter(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(src, conf),
         org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      val schema = ParquetFileFormat.readSchemaFromFooter(
+      ParquetFileFormat.readSchemaFromFooter(
         new org.apache.parquet.hadoop.Footer(src.getPath, footer),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      spark.read.schema(schema).parquet(paths: _*)
     }
+    val partitionKeys = found.filter(_.isDirectory).map(_.getPath.getName.takeWhile(_ != '='))
+    if (data.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        schema.fieldNames.exists(f => partitionKeys.exists(spark.sessionState.conf.resolver(f, _))))
+      spark.read.parquet(paths: _*)
+    else spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Refuses a session whose timezone is not UTC, and leaves the session

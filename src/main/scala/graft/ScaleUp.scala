@@ -56,8 +56,7 @@ object ScaleUp {
       println(s"scaled $name -> $dst/$name.parquet")
     }
 
-    def raw(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+    def raw(name: String): DataFrame = Engine.parquet(spark, s"$src/$name.parquet")
 
     // dims stay fixed (TPC-H scaling rule: region/nation never scale)
     write("region", raw("region"), files = 1)

@@ -77,7 +77,7 @@ object Sources {
     val out = tempDir("s5_part")
     orders(spark, dir).write.mode(SaveMode.Overwrite)
       .partitionBy("o_orderstatus").parquet(out)
-    spark.read.parquet(out)
+    parquet(spark, out)
       .groupBy($"o_orderstatus").agg(count(lit(1)).as("n_orders"))
   }
 
@@ -110,7 +110,7 @@ object Sources {
     val docs = documents(spark, dir)
     docs.write.mode(SaveMode.Append).partitionBy("lang").parquet(out)
     docs.write.mode(SaveMode.Append).partitionBy("lang").parquet(out)
-    spark.read.parquet(out).groupBy($"lang").agg(count(lit(1)).as("n_rows"))
+    parquet(spark, out).groupBy($"lang").agg(count(lit(1)).as("n_rows"))
   }
 
   /** S9: atomic overwrite via the staging-rename commit protocol — the second
@@ -121,7 +121,7 @@ object Sources {
     val docs = documents(spark, dir)
     docs.write.mode(SaveMode.Overwrite).parquet(out)
     docs.filter($"n_chars" > 500).write.mode(SaveMode.Overwrite).parquet(out)
-    spark.read.parquet(out).agg(count(lit(1)).as("n_rows"))
+    parquet(spark, out).agg(count(lit(1)).as("n_rows"))
   }
 
   /** S11: resumable load — a partial first run plus an anti-join resume pass
@@ -161,7 +161,7 @@ object Sources {
     * so the skip machinery is real, not just an accepted option. */
   def s27BloomFilterScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(stageBloomEvents(spark, dir))
+    parquet(spark, stageBloomEvents(spark, dir))
       .filter($"user_id" === 17L)
       .groupBy($"user_id", $"event_type")
       .agg(count(lit(1)).as("n"))
@@ -185,7 +185,7 @@ object Sources {
   def s5PartitionPrunedRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = stageDayPartitionedEvents(spark, dir)
-    spark.read.parquet(out)
+    parquet(spark, out)
       .filter($"day" === "2024-01-15")
       .groupBy($"event_type").agg(count(lit(1)).as("n"))
   }
@@ -219,7 +219,7 @@ object Sources {
     import spark.implicits._
     val frag = stageFragmentedEvents(spark, dir)
     val compacted = tempDir("s20_compact")
-    spark.read.parquet(frag)
+    parquet(spark, frag)
       .repartition($"day")
       .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(compacted)
     (frag, compacted)
@@ -228,7 +228,7 @@ object Sources {
   def s20Compaction(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (_, compacted) = compactLayout(spark, dir)
-    spark.read.parquet(compacted)
+    parquet(spark, compacted)
       // partition-column type inference reads `day` back as DATE; pin the
       // string form so the summary schema is layout-independent
       .groupBy($"day".cast("string").as("day"))
@@ -309,7 +309,7 @@ object Sources {
   def s28RangeLayout(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = rangeLayoutWrite(spark, dir)
-    spark.read.parquet(out)
+    parquet(spark, out)
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n"),
         min($"event_id").as("min_id"), max($"event_id").as("max_id"))
@@ -339,7 +339,7 @@ object Sources {
     restated.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("day").parquet(out)
-    spark.read.parquet(out)
+    parquet(spark, out)
       .groupBy($"day".cast("string").as("day"))
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(org.apache.spark.sql.types.DecimalType(18, 2)))
@@ -364,7 +364,7 @@ object Sources {
       .select($"event_id", $"event_type", $"value")
       .hint("rebalance")
       .write.mode(SaveMode.Overwrite).parquet(out)
-    spark.read.parquet(out)
+    parquet(spark, out)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(org.apache.spark.sql.types.DecimalType(18, 2)))
@@ -433,7 +433,7 @@ object Sources {
     * them — without hand-writing the day list into the query. */
   def s13DppGatedRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fact = spark.read.parquet(stageDayPartitionedEvents(spark, dir))
+    val fact = parquet(spark, stageDayPartitionedEvents(spark, dir))
     val doneDays = s4StateSource(spark, dir)
       .filter($"status" === "done")
       .select(to_date($"day").as("day"))
@@ -2265,7 +2265,7 @@ object Sources {
     import spark.implicits._
     val root = codecLayout(spark, dir, Seq("zstd", "snappy"))
     Seq("zstd", "snappy").map { codec =>
-      spark.read.parquet(s"$root/$codec")
+      parquet(spark, s"$root/$codec")
         .agg(count(lit(1)).as("n_rows"),
           sum($"l_orderkey").as("key_sum"),
           sum($"l_quantity".cast(org.apache.spark.sql.types.DecimalType(18, 2)))

@@ -43,15 +43,15 @@ class IncrementalWriter(spark: SparkSession, path: String, keys: Seq[String],
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
+  private def visibleFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    st.isFile && !Engine.hidden(st.getPath.getName)
+
   /** Number of data files in the sink — the cheap metadata fingerprint the
     * `_synced` marker pins. Appends only add files, so marker == count
     * proves the index saw every committed append. */
   private def dataFileCount: Long = {
     val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).count { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-    }
+    if (!fs.exists(p)) 0L else fs.listStatus(p).count(visibleFile)
   }
 
   private def readMarker(): Option[Long] =
@@ -132,10 +132,7 @@ class IncrementalWriter(spark: SparkSession, path: String, keys: Seq[String],
       if (n > 0) {
         val sinkP = new org.apache.hadoop.fs.Path(path)
         if (!fs.exists(sinkP)) fs.mkdirs(sinkP): Unit
-        val moved = fs.listStatus(stagePath).filter { st =>
-          st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith(".")
-        }.map { st =>
+        val moved = fs.listStatus(stagePath).filter(visibleFile).map { st =>
           val dst = new org.apache.hadoop.fs.Path(sinkP, st.getPath.getName)
           if (!fs.rename(st.getPath, dst))
             sys.error(s"could not move staged append file ${st.getPath} -> $dst")

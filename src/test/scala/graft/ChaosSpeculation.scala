@@ -42,8 +42,7 @@ object ChaosSpeculation {
     FileSystem.get(new java.net.URI(dir), new Configuration())
 
   private def visible(dir: String): Set[String] =
-    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName).filterNot(Engine.hidden).toSet
 
   private def stagingLeft(dir: String): Seq[String] =
     fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName)

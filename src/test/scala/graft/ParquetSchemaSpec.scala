@@ -16,9 +16,11 @@ class ParquetSchemaSpec extends SparkSpec with EventsTsEncodings {
   private def jobsDuring[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // the queue holds no nulls: a job without the sentinel property is "job"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties).map(_.getProperty("graft.sentinel")).orNull)
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.sentinel")))
+          .getOrElse("job"))
     }
     sc.addSparkListener(listener)
     try {
@@ -28,7 +30,7 @@ class ParquetSchemaSpec extends SparkSpec with EventsTsEncodings {
       val deadline = System.nanoTime() + 10000000000L
       while (!started.contains("1") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(started.contains("1"), "listener bus did not deliver the sentinel job")
-      (out, started.toArray.count(_ == null))
+      (out, started.toArray.count(_ == "job"))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -57,6 +59,36 @@ class ParquetSchemaSpec extends SparkSpec with EventsTsEncodings {
     assert(w.append((11 to 30).map(i => (i.toLong, s"w$i")).toDF("k", "v")) == 10)
     assertSameAsSpark(s"$dir/files")
     assertSameAsSpark(s"$dir/files.keys")
+  }
+
+  test("partitioned directories: Spark's schema and partition types, no job") {
+    import spark.implicits._
+    val rows = (1 to 12)
+      .map(i => (i.toLong, s"v$i", java.sql.Date.valueOf(s"2024-01-0${i % 3 + 1}")))
+      .toDF("k", "v", "day")
+    // int batch ids, each batch written into its own directory (st16's sinks)
+    val batches = tempDir("fixture_batch")
+    for (b <- 0 until 2)
+      rows.filter($"k" % 2 === b).drop("day").write.parquet(s"$batches/batch_id=$b")
+    val days = tempDir("fixture_days")
+    rows.write.mode("overwrite").partitionBy("day").parquet(days)
+    val strings = tempDir("fixture_strings")
+    rows.write.mode("overwrite").partitionBy("v").parquet(strings)
+    // a writer's leftovers sort before the data and hold another schema;
+    // a reader must skip both directories
+    val debris = tempDir("fixture_debris")
+    rows.drop("day").write.parquet(s"$debris/b=1")
+    for (hiddenDir <- Seq("_temporary/0", ".staging"))
+      Seq(("x", 1.5)).toDF("other", "cols").write.parquet(s"$debris/$hiddenDir")
+    for (p <- Seq(batches, days, strings, debris)) assertSameAsSpark(p)
+    assert(Engine.parquet(spark, days).schema("day").dataType ==
+      org.apache.spark.sql.types.DateType)
+    assert(Engine.parquet(spark, debris).schema.fieldNames.toSeq == Seq("k", "v", "b"))
+    // a data column named like its partition directory keeps Spark's
+    // position and partition type
+    val overlap = tempDir("fixture_overlap")
+    rows.drop("day").write.parquet(s"$overlap/k=0")
+    assert(Engine.parquet(spark, overlap).schema == spark.read.parquet(overlap).schema)
   }
 
   test("an empty directory still fails with Spark's own error") {

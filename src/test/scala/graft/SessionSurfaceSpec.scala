@@ -26,6 +26,10 @@ import scala.jdk.CollectionConverters._
   *     file-stream source is staged by [[graft.streaming.Streams.stage]],
   *     which pins the file times, and read by `Streams.eventsStream`; only
   *     the search connector's streams read through `readStream` elsewhere.
+  *   - Parquet reads: every parquet read goes through [[Engine.parquet]],
+  *     which takes the schema from one footer instead of Spark's one-task
+  *     inference job; only the two `mergeSchema` reads (o13, s33) keep
+  *     Spark's reader, because the footer merge is what they demonstrate.
   *   - Mains and registry reads: every main that runs registered queries
   *     picks, looks up, runs and counts them through [[SparkEntry.run]], so
   *     the list of mains is fixed and no other file reads the registry.
@@ -115,5 +119,13 @@ class SessionSurfaceSpec extends AnyFunSuite {
     val searchStreams = sources.map { case (_, text) => search.findAllIn(text).size }.sum
     val reads = sites(_.contains(".readStream")).filterNot(_._1 == "Streams.scala")
     assert(reads.size == searchStreams && searchStreams <= 2, listing(reads))
+  }
+
+  test("only Engine reads parquet") {
+    val read = """\.read\b.*\.parquet\(""".r
+    val (merging, found) = sites(read.findFirstIn(_).isDefined)
+      .filterNot(_._1 == "Engine.scala").partition(_._2.contains("\"mergeSchema\""))
+    assert(found.isEmpty, listing(found))
+    assert(merging.size <= 2, listing(merging))
   }
 }

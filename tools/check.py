@@ -4,7 +4,10 @@ run each oracle SQL in DuckDB over the sf tables, read the engine's
 Verify parquet dump, sort columns by name, sort rows, compare values.
 
 Queries that Verify lists as failed in failures.json count as FAIL,
-with or without an oracle entry.
+with or without an oracle entry. A dumped query with no oracle entry is
+rows-only: it counts as SKIP with its row count. A query named on the
+command line that is in none of the oracle, failures.json or the dump
+counts as FAIL.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
@@ -55,7 +58,12 @@ def main():
     errors = {}
     if os.path.exists(failures_path):
         errors = json.load(open(failures_path))["errors"]
+    dumped = {d for d in os.listdir(out_dir)
+              if os.path.isdir(os.path.join(out_dir, d))}
     n_pass = n_fail = n_skip = 0
+    for name in sorted(only - set(oracle) - set(errors) - dumped):
+        print(f"FAIL {name}: not in the oracle, failures.json or the dump")
+        n_fail += 1
     for name in sorted(errors):
         if only and name not in only:
             continue
@@ -101,6 +109,18 @@ def main():
         else:
             print(f"PASS {name} ({len(exp)} rows)")
             n_pass += 1
+    for name in sorted(dumped - set(oracle) - set(errors)):
+        if only and name not in only:
+            continue
+        try:
+            (n,) = con.execute(
+                f"SELECT count(*) FROM '{out_dir}/{name}/*.parquet'").fetchone()
+        except Exception as e:
+            print(f"FAIL {name}: engine output unreadable: {str(e)[:200]}")
+            n_fail += 1
+            continue
+        print(f"SKIP {name} ({n} rows)")
+        n_skip += 1
     print(f"== {n_pass} pass / {n_fail} fail / {n_skip} skip ==")
     sys.exit(1 if n_fail else 0)
 
