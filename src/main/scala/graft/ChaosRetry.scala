@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.{KbArchive, WriteChaos}
+import graft.sinks.Commit
+import graft.sources.{KbArchive, KbDim, WriteChaos}
 import graft.streaming.Streams
 
 /** Task-retry chaos runner for the write connectors' commit protocols
@@ -46,25 +46,12 @@ import graft.streaming.Streams
   */
 object ChaosRetry {
 
-  private def fsOf(dir: String): FileSystem =
-    FileSystem.get(new java.net.URI(dir), new Configuration())
-
   /** Non-hidden entries of `dir` (what a reader can see). */
   private def visible(dir: String): Set[String] =
-    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName).filterNot(Engine.hidden).toSet
-
-  /** kb.dim's live `_files` manifest body (data files only, `#v=` header
-    * dropped) — read directly; the connector keeps its parser private. */
-  private def liveManifestFiles(dir: String): Seq[String] = {
-    val in = fsOf(dir).open(new Path(dir, graft.sources.KbDim.ManifestName))
-    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toSeq.filter(l => l.nonEmpty && !l.startsWith("#"))
-    finally in.close()
-  }
+    Commit.fs(dir).listStatus(new Path(dir)).map(_.getPath.getName).filterNot(Engine.hidden).toSet
 
   private def stagingLeft(dir: String): Seq[String] =
-    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName)
+    Commit.fs(dir).listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.startsWith("_staging")).toSeq
 
   def main(args: Array[String]): Unit = {
@@ -122,13 +109,13 @@ object ChaosRetry {
     val manifest = KbArchive.readManifest(out)
     require(manifest.map(_.rows).sum == n,
       s"archive: manifest rows ${manifest.map(_.rows).sum} != $n")
-    val fs = fsOf(out)
+    val fs = Commit.fs(out)
     manifest.foreach { e =>
       val p = new Path(out, e.name)
       require(fs.exists(p), s"archive: manifest lists missing file ${e.name}")
       require(fs.getFileStatus(p).getLen == e.bytes,
         s"archive: ${e.name} size ${fs.getFileStatus(p).getLen} != manifest ${e.bytes}")
-      val stored = KbArchive.md5Of(fs, p)
+      val stored = Commit.md5Of(fs, p)
       require(stored == e.md5, s"archive: ${e.name} md5 $stored != manifest ${e.md5}")
     }
     // the dead attempts' partial files must not leak into the target:
@@ -165,11 +152,11 @@ object ChaosRetry {
     val manifest = KbArchive.readManifest(out)
     require(manifest.map(_.rows).sum == 80L,
       s"stream: manifest rows ${manifest.map(_.rows).sum} != 80")
-    val fs = fsOf(out)
+    val fs = Commit.fs(out)
     manifest.foreach { e =>
       val p = new Path(out, e.name)
       require(fs.exists(p), s"stream: manifest lists missing file ${e.name}")
-      require(KbArchive.md5Of(fs, p) == e.md5, s"stream: md5 mismatch on ${e.name}")
+      require(Commit.md5Of(fs, p) == e.md5, s"stream: md5 mismatch on ${e.name}")
     }
     require(visible(out) == manifest.map(_.name).toSet,
       s"stream: dir holds ${visible(out)} vs manifest ${manifest.map(_.name).toSet}")
@@ -193,7 +180,7 @@ object ChaosRetry {
     spark.sql(
       """INSERT OVERWRITE kb.dim
         |SELECT id AS k, id * 2 AS v, 'seed' AS tag FROM range(0, 100)""".stripMargin)
-    val seedVersion = graft.sources.KbDim.latestVersion(dimDir)
+    val seedVersion = KbDim.latestVersion(dimDir)
     require(seedVersion == 1L, s"merge: seed version $seedVersion != 1")
 
     // source 50..149 — half update, half insert; 0..49 not-matched-by-source
@@ -216,14 +203,14 @@ object ChaosRetry {
     require(got == want, s"merge: state diverged, e.g. ${(got -- want).take(3)} / ${(want -- got).take(3)}")
 
     // exactly ONE version committed by the MERGE — dead attempts burn none
-    val v = graft.sources.KbDim.latestVersion(dimDir)
+    val v = KbDim.latestVersion(dimDir)
     require(v == seedVersion + 1, s"merge: version $v != ${seedVersion + 1}")
     val before = spark.sql(s"SELECT k, v, tag FROM kb.dim VERSION AS OF $seedVersion")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     require(before == (0L until 100L).map(k => (k, 2 * k, "seed")).toSet,
       "merge: time travel to the seed snapshot no longer reads the old state")
-    liveManifestFiles(dimDir).foreach { f =>
-      require(fsOf(dimDir).exists(new Path(dimDir, f)),
+    KbDim.manifest(dimDir).foreach { f =>
+      require(Commit.fs(dimDir).exists(new Path(dimDir, f)),
         s"merge: live manifest lists missing file $f")
     }
     require(stagingLeft(dimDir).isEmpty, s"merge: staging left ${stagingLeft(dimDir)}")

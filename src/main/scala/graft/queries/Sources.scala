@@ -1358,6 +1358,15 @@ object Sources {
     * per tile-part, for [[graft.sources.jp2.Jp2Codec.decodeTileParts]]),
     * through ONE open stream per file. Forced to a Vector before the
     * stream closes. */
+  /** The tile-descriptor exchange of the ranged-decode family (l5h, l5j,
+    * l5k, l5l, l5n), one task slot per core: hashed on the scan's file name
+    * within its staged directory and the tile, never on the full path,
+    * which sits under a temp directory named anew by every JVM, so the
+    * same rows land in the same partitions on every run. */
+  private def jp2ByTile(tiles: DataFrame): DataFrame =
+    tiles.repartition(tiles.sparkSession.sparkContext.defaultParallelism,
+      substring_index(col("path"), "/", -1), col("tile"))
+
   private def jp2FetchSlices(conf: org.apache.hadoop.conf.Configuration, p: String,
       ranges: Seq[(Long, Long)]): Seq[Array[Byte]] = {
     val hp = new org.apache.hadoop.fs.Path(p)
@@ -1420,7 +1429,7 @@ object Sources {
       }
       .toDF("path", "tile", "parts", "w", "h", "nc", "xt", "yt", "rct", "levels",
         "nlayers", "irrev", "qshift")
-      .repartition(spark.sparkContext.defaultParallelism, col("path"), col("tile"))
+      .transform(jp2ByTile)
       .as[(String, Int, Seq[Long], Int, Int, Int, Int, Int, Boolean, Int, Int, Boolean, Int)]
     val perTile = tiles.mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()
@@ -1493,7 +1502,7 @@ object Sources {
       }
       .toDF("path", "tile", "parts", "w", "h", "nc", "xt", "yt", "rct", "levels",
         "nlayers", "irrev", "qshift")
-      .repartition(spark.sparkContext.defaultParallelism, col("path"), col("tile"))
+      .transform(jp2ByTile)
       .as[(String, Int, Seq[Long], Int, Int, Int, Int, Int, Boolean, Int, Int, Boolean, Int)]
     val perTile = tiles.mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()
@@ -1592,7 +1601,7 @@ object Sources {
       }
       .toDF("path", "tile", "ranges", "w", "h", "nc", "xt", "yt", "rct", "levels",
         "nlayers", "irrev", "qshift", "poc")
-      .repartition(spark.sparkContext.defaultParallelism, col("path"), col("tile"))
+      .transform(jp2ByTile)
       .as[(String, Int, Seq[Long], Int, Int, Int, Int, Int, Boolean, Int, Int, Boolean, Int, Seq[Int])]
     val perTile = tiles.mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()
@@ -1666,7 +1675,7 @@ object Sources {
       }
       .toDF("path", "tile", "parts", "w", "h", "nc", "xt", "yt", "rct", "levels",
         "nlayers", "irrev", "qshift")
-      .repartition(spark.sparkContext.defaultParallelism, col("path"), col("tile"))
+      .transform(jp2ByTile)
       .as[(String, Int, Seq[Long], Int, Int, Int, Int, Int, Boolean, Int, Int, Boolean, Int)]
     val perTile = tiles.mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()
@@ -1792,7 +1801,7 @@ object Sources {
       }
       .toDF("path", "tile", "ranges", "w", "h", "nc", "xt", "yt", "rct", "levels",
         "nlayers", "pp", "prog", "poc")
-      .repartition(spark.sparkContext.defaultParallelism, col("path"), col("tile"))
+      .transform(jp2ByTile)
       .as[(String, Int, Seq[Long], Int, Int, Int, Int, Int, Boolean, Int, Int, Int, Int, Seq[Int])]
     val perTile = tiles.mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()

@@ -1140,18 +1140,19 @@ object StreamingQ {
     * and whenever the sink's small-file count crosses a threshold the
     * batch hook compacts the WHOLE sink into one file via the s9
     * staged-write + rename-swap pattern: compacted output lands in a
-    * staging dir, the live dir is moved aside, staging renamed into
+    * staging dir, the live dir is moved aside, staging moved into
     * place, and only then is the old data deleted. Swap guarantees,
     * stated precisely: within this query there is ONE writer (the batch
     * hook) and no concurrent reader, so no execution observes a
-    * half-compacted state; each rename is checked (Hadoop signals
-    * failure by RETURNING false — unchecked, a failed move-aside would
-    * make the second rename nest staging INSIDE live and double-count);
-    * and a crash between the renames is fail-stop, not silent — the data
-    * survives intact under the moved-aside dir, never deleted before the
-    * new live is published. A production multi-reader sink would publish
-    * the swap through a manifest pointer (the KbDim commit pattern,
-    * which IS atomic) rather than directory renames. Correctness is the
+    * half-compacted state; each move is a checked `Commit.move`
+    * (unchecked, a failed move-aside would make the second move nest
+    * staging INSIDE live and double-count); and a crash between the moves
+    * is fail-stop, not silent — the data survives intact under the
+    * moved-aside dir, never deleted before the new live is published. The
+    * swap is two directory renames, so it is NOT atomic: a production
+    * multi-reader sink would publish it through a manifest pointer
+    * replaced with `Commit.replace` (the KbDim commit pattern) instead.
+    * Correctness is the
     * dangerous part — compaction must neither lose nor duplicate rows —
     * and the oracle pins exactly that by hash-comparing the final
     * content against the full events aggregate.
@@ -1177,13 +1178,11 @@ object StreamingQ {
         val staging = s"$outRoot/compact_${System.nanoTime()}"
         parquet(spark, live).coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(staging)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
+        val fs = graft.sinks.Commit.fs(live)
         val lp = new org.apache.hadoop.fs.Path(live)
         val old = new org.apache.hadoop.fs.Path(s"$outRoot/old_${System.nanoTime()}")
-        require(fs.rename(lp, old), s"compaction move-aside failed: $lp")
-        require(fs.rename(new org.apache.hadoop.fs.Path(staging), lp),
-          s"compaction publish failed: $staging -> $lp (live preserved at $old)")
+        graft.sinks.Commit.move(fs, lp, old)
+        graft.sinks.Commit.move(fs, new org.apache.hadoop.fs.Path(staging), lp)
         fs.delete(old, true): Unit
       }
     }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * per-batch probe reads a structure sized by |keys|, never |sink|, and
   * row-group pruning (min/max + bloom) cuts it further toward O(|batch|).
   * Crash consistency: data is written BEFORE the index, and a `_synced`
-  * marker recording the sink's data-file count commits the pair (written
-  * via temp-file rename). A crash between the two leaves marker ≠ actual
+  * marker recording the sink's data-file count commits the pair (published
+  * with [[Commit.replace]]). A crash between the two leaves marker ≠ actual
   * file count, and the next append detects that and REBUILDS the index
   * from the sink's keys before probing — the probe may pay one full
   * key-scan after a crash, but can never read a stale index and
@@ -54,25 +54,10 @@ class IncrementalWriter(spark: SparkSession, path: String, keys: Seq[String],
     if (!fs.exists(p)) 0L else fs.listStatus(p).count(visibleFile)
   }
 
-  private def readMarker(): Option[Long] =
-    if (!fs.exists(markerFile)) None
-    else {
-      val in = fs.open(markerFile)
-      val buf = new java.io.ByteArrayOutputStream()
-      try {
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, "UTF-8").trim.toLong)
-      } finally in.close()
-    }
+  private def readMarker(): Option[Long] = Commit.read(fs, markerFile).map(_.trim.toLong)
 
-  private def writeMarker(n: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(indexPath, s"._synced.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(markerFile, false)
-    if (!fs.rename(tmp, markerFile))
-      sys.error(s"could not commit key-index marker $markerFile")
-  }
+  private def writeMarker(n: Long): Unit =
+    Commit.replace(fs, markerFile)(_.write(n.toString.getBytes("UTF-8")))
 
   /** Sink keys read the cheapest way available: the sidecar when it is
     * provably in sync, else the key-projected sink scan (rebuilding the
@@ -133,10 +118,8 @@ class IncrementalWriter(spark: SparkSession, path: String, keys: Seq[String],
         val sinkP = new org.apache.hadoop.fs.Path(path)
         if (!fs.exists(sinkP)) fs.mkdirs(sinkP): Unit
         val moved = fs.listStatus(stagePath).filter(visibleFile).map { st =>
-          val dst = new org.apache.hadoop.fs.Path(sinkP, st.getPath.getName)
-          if (!fs.rename(st.getPath, dst))
-            sys.error(s"could not move staged append file ${st.getPath} -> $dst")
-          dst.toString
+          Commit.move(fs, st.getPath, new org.apache.hadoop.fs.Path(sinkP, st.getPath.getName))
+            .toString
         }
         // data first, index second: a crash in between leaves the marker
         // behind the file count and the next probe rebuilds (see class

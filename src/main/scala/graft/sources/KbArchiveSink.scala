@@ -1,9 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -12,6 +10,8 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sinks.Commit
+
 /** DataSource V2 WRITE connector modeling the reference's verified archive
   * upload (SURVEY §2.1 S7/S9: per-file md5 verify after upload,
   * /root/reference/src/01-scrape-images.py:126-129, and staging-rename
@@ -19,15 +19,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * driver-side loop:
   *
   *  - each task writes its partition to a STAGING file, digesting md5 as
-  *    it streams (no second pass), and reports (file, md5, rows, bytes) in
-  *    its [[WriterCommitMessage]];
-  *  - the driver commits by re-verifying each staged file's md5 against
-  *    the task's digest, renaming into the target, and writing a
+  *    it streams (no second pass), and reports (file, md5, rows, bytes);
+  *  - the job commit re-verifies each staged file's md5 against the task's
+  *    digest, moves the files into the target, and publishes a
   *    `_manifest.json` of committed files — so readers (and reruns) see
   *    either the whole write or none of it;
   *  - speculative/retried task attempts are naturally fenced: the commit
   *    coordinator admits one attempt per partition, only files named in
-  *    admitted messages are renamed, and `abort` deletes the staging dir.
+  *    admitted messages move, and `abort` deletes the staging dir.
+  *
+  * The protocol (staged writer, verify, checked move, atomic manifest
+  * replace, delete-after-publish) is [[graft.sinks.Commit]]'s; this file
+  * keeps the record encoding and the manifest format.
   *
   * Scale notes: the verify pass re-reads what was just written (the
   * reference's download-and-check, done here with one streaming read per
@@ -72,60 +75,29 @@ object KbArchive {
       .toSeq
 
   /** Committed manifest of `dir`, empty if none. */
-  def readManifest(dir: String): Seq[Entry] = {
-    val fs = FileSystem.get(new java.net.URI(dir), new Configuration())
-    val p = new Path(dir, ManifestName)
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      try parseManifest(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
+  def readManifest(dir: String): Seq[Entry] =
+    Commit.read(Commit.fs(dir), new Path(dir, ManifestName)).fold(Seq.empty[Entry])(parseManifest)
 
-  private[graft] def md5Of(fs: FileSystem, p: Path): String = {
-    val digest = MessageDigest.getInstance("MD5")
-    val in = fs.open(p)
-    try {
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { if (n > 0) digest.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    digest.digest().map("%02x".format(_)).mkString
-  }
+  /** The record encoding: one `key\tpayload\n` line per row. */
+  private[sources] def encode(row: InternalRow): Array[Byte] =
+    s"${row.getUTF8String(0)}\t${row.getUTF8String(1)}\n".getBytes(StandardCharsets.UTF_8)
 
-  /** Shared commit path for batch and per-epoch streaming commits: verify
-    * every admitted file's md5 against its task digest (all-or-nothing,
-    * BEFORE any rename), optionally clear the previous archive (truncate),
-    * rename admitted files in, publish the merged manifest, drop staging. */
-  private[sources] def publish(
-      fs: FileSystem,
-      path: String,
-      staging: Path,
-      admitted: Seq[KbArchiveCommitMessage],
-      truncate: Boolean): Unit = {
-    admitted.foreach { m =>
-      val actual = md5Of(fs, new Path(staging, m.file))
-      if (actual != m.md5)
-        throw new java.io.IOException(
-          s"kb_archive verify failed for ${m.file}: task digest ${m.md5}, stored $actual")
+  /** Batch and per-epoch streaming commits: [[Commit.publish]] with the
+    * merged manifest (an admitted name that repeats replaces its old
+    * entry, as the move replaced its file), or on truncate one naming
+    * only the new files, after which the old files are deleted. */
+  private[sources] def commit(path: String, staging: Path,
+      messages: Array[WriterCommitMessage], truncate: Boolean): Unit = {
+    val fs = Commit.fs(path)
+    Commit.publish(fs, staging, new Path(path), messages) { admitted =>
+      val old = readManifest(path)
+      val names = admitted.map(_.file).toSet
+      val kept = if (truncate) Nil else old.filterNot(e => names(e.name))
+      val entries = kept ++ admitted.map(m => Entry(m.file, m.md5, m.rows, m.bytes))
+      Commit.replace(fs, new Path(path, ManifestName))(
+        _.write(renderManifest(entries).getBytes(StandardCharsets.UTF_8)))
+      if (truncate) old.map(_.name).filterNot(names) else Nil
     }
-    val existing = if (truncate) {
-      readManifest(path).foreach(e => fs.delete(new Path(path, e.name), false))
-      Nil
-    } else readManifest(path)
-    admitted.foreach(m => fs.rename(new Path(staging, m.file), new Path(path, m.file)))
-    // names are collision-free by construction (queryId fragment); if one
-    // ever repeats anyway, the rename above replaced the file, so the new
-    // entry must replace the old one rather than double-count
-    val admittedNames = admitted.map(_.file).toSet
-    val entries = existing.filterNot(e => admittedNames(e.name)) ++
-      admitted.map(m => Entry(m.file, m.md5, m.rows, m.bytes))
-    val out = fs.create(new Path(path, ManifestName), true)
-    try out.write(renderManifest(entries).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(staging, true): Unit
   }
 }
 
@@ -160,28 +132,14 @@ class KbArchiveWriteBuilder(path: String, queryId: String, truncate: Boolean)
 class KbArchiveBatchWrite(path: String, queryId: String, truncate: Boolean)
     extends BatchWrite {
 
-  private def stagingDir = new Path(path, s"_staging-$queryId")
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KbArchiveWriterFactory(path, queryId)
+    Commit.Writers(path, queryId, "kbar", KbArchive.encode)
 
-  /** Driver-side commit: verify each admitted file's md5 against the
-    * digest its writer computed while streaming, then rename into the
-    * target and publish the merged manifest. Any mismatch fails the whole
-    * job BEFORE anything is renamed — the archive never holds a corrupt
-    * file (reference :126-129 deletes and retries on mismatch). */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
-    val admitted = messages.collect {
-      case m: KbArchiveCommitMessage if m.rows > 0 => m
-    }
-    KbArchive.publish(fs, path, stagingDir, admitted.toSeq, truncate)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    KbArchive.commit(path, Commit.staging(path, queryId), messages, truncate)
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
-    fs.delete(stagingDir, true): Unit
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    Commit.fs(path).delete(Commit.staging(path, queryId), true): Unit
 }
 
 /** Streaming (per-epoch) writes into the archive — the reference pipeline's
@@ -195,16 +153,13 @@ class KbArchiveBatchWrite(path: String, queryId: String, truncate: Boolean)
 class KbArchiveStreamingWrite(path: String, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private def fs = FileSystem.get(new java.net.URI(path), new Configuration())
-  private def stagingParent = new Path(path, s"_staging-$queryId")
-  private def epochStaging(epochId: Long) =
-    new Path(stagingParent, s"epoch-$epochId")
+  private def stagingParent = Commit.staging(path, queryId)
   private def epochMarker(epochId: Long) =
     new Path(path, s"_epochs/$queryId/$epochId")
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new KbArchiveStreamingWriterFactory(path, queryId)
+    Commit.Writers(path, queryId, "kbar", KbArchive.encode)
 
   /** Drop the per-query `_staging-<queryId>` parent (the same dir for
     * every epoch) once it is empty: a long-lived archive must not
@@ -220,88 +175,21 @@ class KbArchiveStreamingWrite(path: String, queryId: String)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val f = fs
+    val f = Commit.fs(path)
     if (f.exists(epochMarker(epochId))) {
       // replayed epoch (failure after commit, before checkpoint advance):
       // already published — drop the duplicate staging, change nothing
-      f.delete(epochStaging(epochId), true)
+      f.delete(Commit.epochStaging(path, queryId, epochId), true)
       dropEmptyStagingParent(f)
       return
     }
-    val admitted = messages.collect {
-      case m: KbArchiveCommitMessage if m.rows > 0 => m
-    }
-    KbArchive.publish(f, path, epochStaging(epochId), admitted.toSeq, truncate = false)
-    f.mkdirs(epochMarker(epochId).getParent)
-    f.create(epochMarker(epochId), true).close()
-    // publish dropped this epoch's staging subdir
+    KbArchive.commit(path, Commit.epochStaging(path, queryId, epochId), messages,
+      truncate = false)
+    Commit.replace(f, epochMarker(epochId))(_ => ())
+    // the commit dropped this epoch's staging subdir
     dropEmptyStagingParent(f)
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    fs.delete(epochStaging(epochId), true): Unit
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    Commit.fs(path).delete(Commit.epochStaging(path, queryId, epochId), true): Unit
 }
-
-class KbArchiveStreamingWriterFactory(path: String, queryId: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new KbArchiveWriter(path, s"_staging-$queryId/epoch-$epochId",
-      f"part-${queryId.take(8)}-$epochId-$partitionId%05d-$taskId.kbar")
-}
-
-class KbArchiveWriterFactory(path: String, queryId: String) extends DataWriterFactory {
-  // the queryId fragment makes names collision-free across writes from
-  // DIFFERENT drivers appending to one archive: task ids are only unique
-  // within a SparkContext, so without it a later append could rename over
-  // an earlier file while the manifest lists the name twice
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KbArchiveWriter(path, s"_staging-$queryId",
-      f"part-${queryId.take(8)}-$partitionId%05d-$taskId.kbar")
-}
-
-/** Task-side writer: streams `key\tpayload\n` lines into one staging file,
-  * updating the md5 digest per buffer — the digest the driver verifies at
-  * commit. The attempt-unique taskId in the file name fences concurrent
-  * speculative attempts writing the same partition. */
-class KbArchiveWriter(path: String, stagingSubdir: String, fileName: String)
-    extends DataWriter[InternalRow] {
-
-  private val filePath = new Path(new Path(path, stagingSubdir), fileName)
-  private val fs = FileSystem.get(new java.net.URI(path), new Configuration())
-  private val out = fs.create(filePath, true)
-  private val digest = MessageDigest.getInstance("MD5")
-  private val chaosAfter = WriteChaos.thresholdNow() // -1 unless chaos-armed
-  private val chaosSlowMs = WriteChaos.slowPerRowNow() // -1 unless armed
-  private var rows = 0L
-  private var bytes = 0L
-
-  override def write(row: InternalRow): Unit = {
-    val line = s"${row.getUTF8String(0)}\t${row.getUTF8String(1)}\n"
-      .getBytes(StandardCharsets.UTF_8)
-    digest.update(line)
-    out.write(line)
-    rows += 1
-    bytes += line.length
-    WriteChaos.maybeFail(chaosAfter, rows)
-    WriteChaos.maybeSlow(chaosSlowMs)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    if (rows == 0) fs.delete(filePath, false) // empty partitions leave no file
-    KbArchiveCommitMessage(fileName, digest.digest().map("%02x".format(_)).mkString,
-      rows, bytes)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    fs.delete(filePath, false): Unit
-  }
-
-  override def close(): Unit = ()
-}
-
-case class KbArchiveCommitMessage(file: String, md5: String, rows: Long, bytes: Long)
-    extends WriterCommitMessage

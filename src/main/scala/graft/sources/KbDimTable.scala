@@ -2,8 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -13,6 +12,8 @@ import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sinks.Commit
 
 /** `kb.dim` — a WRITABLE keyed dimension table on the V2 catalog, the
   * counterpart to the read-only `kb.search`: it exists to give the SQL
@@ -28,10 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * correct degenerate case of group-based copy-on-write; a partitioned
   * production table would report file/partition groups and runtime-filter
   * the scan so only touched groups rewrite, exactly st21's bucket
-  * confinement — same contract, finer groups). Commit is staging-rename +
-  * an atomically republished `_files` manifest, so readers see the old
+  * confinement — same contract, finer groups). A commit is
+  * [[graft.sinks.Commit]]'s protocol: verified staged files move in, then
+  * the `_files` manifest is republished with `Commit.replace` (write a
+  * temporary file, rename it over the live one), so readers see the old
   * table or the new one, never a mix; aborted/failed jobs leave only
-  * unreferenced staging files.
+  * unreferenced staging files. This file keeps the record encoding and
+  * the manifest format.
   *
   * Storage is `k\tv\ttag` lines — deliberately trivial: the point of the
   * class is the COMMIT PROTOCOL and the row-level plumbing, not a file
@@ -58,25 +62,14 @@ object KbDim {
   lazy val defaultDir: String =
     graft.Engine.tempDir("kb_dim")
 
-  private[sources] def fs(dir: String): FileSystem =
-    FileSystem.get(new java.net.URI(dir), new Configuration())
-
-  private def readLines(dir: String, name: String): Option[Seq[String]] = {
-    val f = fs(dir)
-    val p = new Path(dir, name)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8).split("\n").toSeq.filter(_.nonEmpty))
-      finally in.close()
-    }
-  }
+  private def readLines(dir: String, name: String): Option[Seq[String]] =
+    Commit.read(Commit.fs(dir), new Path(dir, name))
+      .map(_.split("\n").toSeq.filter(_.nonEmpty))
 
   /** Committed file list; empty table if no manifest yet. `name` selects
     * a historical snapshot (`_files.v<N>`) for time travel. The `#v=`
     * header line is metadata, not a file. */
-  private[sources] def manifest(dir: String, name: String = ManifestName): Seq[String] =
+  private[graft] def manifest(dir: String, name: String = ManifestName): Seq[String] =
     readLines(dir, name) match {
       case Some(lines) => lines.filterNot(_.startsWith("#"))
       case None if name == ManifestName => Nil
@@ -101,22 +94,32 @@ object KbDim {
 
   /** Commit protocol: stage the immutable `_files.v<N+1>` snapshot FIRST
     * (an orphan if we crash — harmless, because versions are counted from
-    * the live header, and the next commit overwrites it), then atomically
-    * republish the live manifest carrying `#v=N+1`. Replaced data files
+    * the live header, and the next commit replaces it), then republish the
+    * live manifest carrying `#v=N+1`; both through `Commit.replace`. Replaced data files
     * are never deleted, so every committed snapshot stays readable (time
     * travel); expiry is a retention policy, not a commit side effect —
     * the VACUUM trade-off every versioned table format makes. */
   private[sources] def writeManifest(dir: String, files: Seq[String]): Unit = {
-    val f = fs(dir)
+    val f = Commit.fs(dir)
     val next = latestVersion(dir) + 1
     val body = (s"#v=$next" +: files.sorted).mkString("\n")
       .getBytes(StandardCharsets.UTF_8)
-    // overwrite = true: a crashed predecessor may have left an orphan
-    // snapshot under this (uncommitted) number
-    val snap = f.create(new Path(dir, s"$ManifestName.v$next"), true)
-    try snap.write(body) finally snap.close()
-    val out = f.create(new Path(dir, ManifestName), true)
-    try out.write(body) finally out.close()
+    Commit.replace(f, new Path(dir, s"$ManifestName.v$next"))(_.write(body))
+    Commit.replace(f, new Path(dir, ManifestName))(_.write(body))
+  }
+
+  /** The record encoding: one `k\tv\ttag\n` line per row. Line-framed
+    * storage cannot represent NULLs or tab/newline in `tag`, so those are
+    * rejected loudly rather than stored as a silently different value
+    * (getLong on a null slot would store 0, a null string the literal
+    * "null", and an embedded '\n' would corrupt every later read). */
+  private[sources] def encode(row: InternalRow): Array[Byte] = {
+    require(!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(2),
+      "kb.dim: NULL values are not storable in the line-framed format")
+    val tag = row.getUTF8String(2).toString
+    require(!tag.exists(c => c == '\t' || c == '\n' || c == '\r'),
+      s"kb.dim: tag value contains line-framing characters: ${tag.take(40)}")
+    s"${row.getLong(0)}\t${row.getLong(1)}\t$tag\n".getBytes(StandardCharsets.UTF_8)
   }
 
   /** ROLLBACK: restore the table to committed version `v` by publishing a
@@ -150,7 +153,7 @@ object KbDim {
     * deleted. */
   def vacuum(dir: String, retain: Int): (Long, Long) = {
     require(retain >= 1, "kb.dim vacuum: must retain at least the live snapshot")
-    val f = fs(dir)
+    val f = Commit.fs(dir)
     val latest = latestVersion(dir)
     val floor = math.max(1L, latest - retain + 1)
     if (latest == 0L) return (0L, 0L)
@@ -281,7 +284,7 @@ class KbDimReaderFactory(fields: Array[String]) extends PartitionReaderFactory {
     val fileName = UTF8String.fromString(file.substring(file.lastIndexOf('/') + 1))
     new PartitionReader[InternalRow] {
       private val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        KbDim.fs(file).open(new Path(file)), StandardCharsets.UTF_8))
+        Commit.fs(file).open(new Path(file)), StandardCharsets.UTF_8))
       private var line: String = _
       override def next(): Boolean = { line = in.readLine(); line != null }
       override def get(): InternalRow = {
@@ -320,80 +323,23 @@ class KbDimWriteBuilder(dir: String, queryId: String, replace: Boolean)
 
 class KbDimBatchWrite(dir: String, queryId: String, replace: Boolean)
     extends BatchWrite {
-  private def staging = new Path(dir, s"_staging-$queryId")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KbDimWriterFactory(dir, queryId)
+    Commit.Writers(dir, queryId, "kbd", KbDim.encode)
 
-  /** Staged files rename in, then ONE manifest write publishes the new
+  /** [[Commit.publish]] with ONE manifest write that publishes the new
     * table state — replace swaps the file list wholesale, append unions
-    * it. Readers resolve through the manifest only, so a crash before the
-    * manifest write changes nothing. Files a replace drops from the live
-    * manifest are NOT deleted: older `_files.v<N>` snapshots still
-    * reference them (time travel); expiry is a retention policy, not a
-    * commit side effect. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val f = KbDim.fs(dir)
-    val admitted = messages.collect { case m: KbDimCommitMessage if m.rows > 0 => m }
-    val old = KbDim.manifest(dir)
-    admitted.foreach { m =>
-      // a silent rename failure here would publish a manifest pointing at
-      // files that never landed — fail the commit instead
-      if (!f.rename(new Path(staging, m.file), new Path(dir, m.file)))
-        throw new java.io.IOException(
-          s"kb.dim commit: could not move staged file ${m.file} into $dir")
+    * it. Files a replace drops from the live manifest are NOT deleted:
+    * older `_files.v<N>` snapshots still reference them (time travel);
+    * expiry is a retention policy, not a commit side effect. */
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    Commit.publish(Commit.fs(dir), Commit.staging(dir, queryId), new Path(dir), messages) {
+      admitted =>
+        val added = admitted.map(_.file)
+        KbDim.writeManifest(dir, if (replace) added else KbDim.manifest(dir) ++ added)
+        Nil
     }
-    val files =
-      if (replace) admitted.map(_.file).toSeq
-      else old ++ admitted.map(_.file)
-    KbDim.writeManifest(dir, files)
-    f.delete(staging, true): Unit
-  }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    KbDim.fs(dir).delete(staging, true): Unit
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    Commit.fs(dir).delete(Commit.staging(dir, queryId), true): Unit
 }
-
-class KbDimWriterFactory(dir: String, queryId: String) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KbDimWriter(dir, s"_staging-$queryId",
-      f"part-${queryId.take(8)}-$partitionId%05d-$taskId.kbd")
-}
-
-class KbDimWriter(dir: String, stagingSubdir: String, fileName: String)
-    extends DataWriter[InternalRow] {
-  private val filePath = new Path(new Path(dir, stagingSubdir), fileName)
-  private val out = KbDim.fs(dir).create(filePath, true)
-  private val chaosAfter = WriteChaos.thresholdNow() // -1 unless chaos-armed
-  private var rows = 0L
-
-  override def write(row: InternalRow): Unit = {
-    // line-framed storage cannot represent NULLs or tab/newline in `tag`;
-    // reject loudly rather than storing a silently different value
-    // (getLong on a null slot would store 0, a null string would store
-    // the literal "null", and an embedded '\n' would corrupt every later
-    // read of the file)
-    require(!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(2),
-      "kb.dim: NULL values are not storable in the line-framed format")
-    val tag = row.getUTF8String(2).toString
-    require(!tag.exists(c => c == '\t' || c == '\n' || c == '\r'),
-      s"kb.dim: tag value contains line-framing characters: ${tag.take(40)}")
-    val line = s"${row.getLong(0)}\t${row.getLong(1)}\t$tag\n"
-    out.write(line.getBytes(StandardCharsets.UTF_8))
-    rows += 1
-    WriteChaos.maybeFail(chaosAfter, rows)
-  }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    if (rows == 0) KbDim.fs(dir).delete(filePath, false)
-    KbDimCommitMessage(fileName, rows)
-  }
-  override def abort(): Unit = {
-    out.close()
-    KbDim.fs(dir).delete(filePath, false): Unit
-  }
-  override def close(): Unit = ()
-}
-
-case class KbDimCommitMessage(file: String, rows: Long) extends WriterCommitMessage

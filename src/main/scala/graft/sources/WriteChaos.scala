@@ -42,7 +42,7 @@ object WriteChaos {
   val slowedRows = new AtomicLong(0)
 
   /** Read once per writer (task-side) — see class doc. */
-  private[sources] def thresholdNow(): Long =
+  private[graft] def thresholdNow(): Long =
     sys.props.get(Prop).map(_.toLong).getOrElse(-1L)
 
   /** Env-var form of [[SlowProp]]: the speculation scenario
@@ -52,11 +52,11 @@ object WriteChaos {
   val SlowEnv = "GRAFT_CHAOS_SLOW_MS_PER_ROW"
 
   /** Read once per writer (task-side) — see class doc. */
-  private[sources] def slowPerRowNow(): Long =
+  private[graft] def slowPerRowNow(): Long =
     sys.props.get(SlowProp).orElse(sys.env.get(SlowEnv))
       .map(_.toLong).getOrElse(-1L)
 
-  private[sources] def maybeSlow(perRowMs: Long): Unit =
+  private[graft] def maybeSlow(perRowMs: Long): Unit =
     if (perRowMs > 0) {
       val tc = org.apache.spark.TaskContext.get()
       if (tc != null && tc.attemptNumber() == 0 && tc.partitionId() == 0) {
@@ -65,7 +65,7 @@ object WriteChaos {
       }
     }
 
-  private[sources] def maybeFail(threshold: Long, rowsStaged: Long): Unit =
+  private[graft] def maybeFail(threshold: Long, rowsStaged: Long): Unit =
     if (threshold > 0 && rowsStaged == threshold) {
       val tc = org.apache.spark.TaskContext.get()
       if (tc != null && tc.attemptNumber() == 0) {

@@ -135,7 +135,7 @@ object Streams {
       }.zipWithIndex.foreach { case (part, i) =>
         val file = new Path(out, s"part-$i.parquet")
         val time = 1700000000000L + i * 1000L
-        require(fs.rename(part, file), s"staging rename failed for $file")
+        graft.sinks.Commit.move(fs, part, file)
         fs.setTimes(file, time, -1L)
         require(fs.getFileStatus(file).getModificationTime == time,
           s"mtime pin failed for $file: batch order would be luck")

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{KbArchive, KbArchiveBatchWrite, KbArchiveCommitMessage}
+import graft.sinks.Commit
+import graft.sources.{KbArchive, KbArchiveBatchWrite}
 
 class ArchiveSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -28,10 +29,9 @@ class ArchiveSinkSpec extends SparkSpec {
     writeArchive(Seq("a" -> "1,x", "b" -> "2,y", "c" -> "3,z"), dir, "append")
     val manifest = KbArchive.readManifest(dir)
     assert(manifest.nonEmpty && manifest.map(_.rows).sum == 3)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), new org.apache.hadoop.conf.Configuration())
+    val fs = Commit.fs(dir)
     manifest.foreach { e =>
-      val stored = KbArchive.md5Of(fs, new org.apache.hadoop.fs.Path(dir, e.name))
+      val stored = Commit.md5Of(fs, new org.apache.hadoop.fs.Path(dir, e.name))
       assert(stored == e.md5, s"${e.name}: manifest ${e.md5}, stored $stored")
     }
     // appends merge; overwrite (V2 truncate) replaces
@@ -50,7 +50,7 @@ class ArchiveSinkSpec extends SparkSpec {
     val staged = Paths.get(dir, s"_staging-$queryId", "part-00000-1.kbar")
     Files.createDirectories(staged.getParent)
     Files.write(staged, "k\tv\n".getBytes(StandardCharsets.UTF_8))
-    val lying = KbArchiveCommitMessage("part-00000-1.kbar", "f" * 32, 1L, 4L)
+    val lying = Commit.Staged("part-00000-1.kbar", "f" * 32, 1L, 4L)
     val ex = intercept[java.io.IOException] {
       new KbArchiveBatchWrite(dir, queryId, truncate = false)
         .commit(Array(lying))
@@ -61,11 +61,63 @@ class ArchiveSinkSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dir, "part-00000-1.kbar")))
   }
 
+  /** Every file directly under `dir`, hidden ones too, with its bytes. */
+  private def contents(dir: String): Map[String, Seq[Byte]] =
+    Files.list(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+
+  /** `content` staged as `name` for query `qid`, with its honest message. */
+  private def staged(dir: String, qid: String, name: String, content: String): Commit.Staged = {
+    val bytes = content.getBytes(StandardCharsets.UTF_8)
+    val p = Paths.get(dir, s"_staging-$qid", name)
+    Files.createDirectories(p.getParent)
+    Files.write(p, bytes)
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+      .map("%02x".format(_)).mkString
+    Commit.Staged(name, md5, content.linesIterator.size.toLong, bytes.length.toLong)
+  }
+
+  test("a move whose source is missing throws and leaves the archive byte-identical") {
+    val dir = tempDir("arch_move")
+    writeArchive(Seq("a" -> "1,x", "b" -> "2,y"), dir, "append")
+    val before = contents(dir)
+    val from = new org.apache.hadoop.fs.Path(dir, "_staging-gone/part-x.kbar")
+    val to = new org.apache.hadoop.fs.Path(dir, "part-x.kbar")
+    val ex = intercept[java.io.IOException](Commit.move(Commit.fs(dir), from, to))
+    assert(ex.getMessage.contains(from.toString) && ex.getMessage.contains(to.toString))
+    assert(contents(dir) == before)
+    // through the commit: two admitted messages name one staged file, so
+    // both verify, the first move takes it and the second finds no source
+    val m = staged(dir, "q-move", "part-dup.kbar", "c\t3\n")
+    val failed = intercept[java.io.IOException] {
+      new KbArchiveBatchWrite(dir, "q-move", truncate = false).commit(Array(m, m))
+    }
+    assert(failed.getMessage.contains("could not move"))
+    assert(contents(dir) == before)
+    assert(spark.read.text(dir).count() == 2)
+  }
+
+  test("a truncate commit that fails after verification leaves the old manifest and its files") {
+    val dir = tempDir("arch_trunc")
+    writeArchive(Seq("a" -> "1,x", "b" -> "2,y"), dir, "append")
+    val manifest = KbArchive.readManifest(dir)
+    val m = staged(dir, "q-trunc", "part-new.kbar", "z\t9\n")
+    intercept[java.io.IOException] {
+      new KbArchiveBatchWrite(dir, "q-trunc", truncate = true).commit(Array(m, m))
+    }
+    assert(KbArchive.readManifest(dir) == manifest)
+    val fs = Commit.fs(dir)
+    manifest.foreach { e =>
+      assert(Commit.md5Of(fs, new org.apache.hadoop.fs.Path(dir, e.name)) == e.md5, e.name)
+    }
+    assert(spark.read.text(dir).count() == 2)
+  }
+
   test("streaming commit is epoch-fenced: a replayed epoch publishes nothing twice") {
     val dir = tempDir("arch_epoch")
     val qid = "q-replay"
     val sw = new graft.sources.KbArchiveStreamingWrite(dir, qid)
-    def stage(epoch: Long, content: String): KbArchiveCommitMessage = {
+    def stage(epoch: Long, content: String): Commit.Staged = {
       val name = s"part-$epoch-00000-1.kbar"
       val p = Paths.get(dir, s"_staging-$qid", s"epoch-$epoch", name)
       Files.createDirectories(p.getParent)
@@ -73,7 +125,7 @@ class ArchiveSinkSpec extends SparkSpec {
       Files.write(p, bytes)
       val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
         .map("%02x".format(_)).mkString
-      KbArchiveCommitMessage(name, md5, content.linesIterator.size.toLong, bytes.length.toLong)
+      Commit.Staged(name, md5, content.linesIterator.size.toLong, bytes.length.toLong)
     }
     sw.commit(0L, Array(stage(0L, "a\t1\n")))
     sw.commit(1L, Array(stage(1L, "b\t2\nc\t3\n")))

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkConf
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
+import graft.sinks.Commit
 import graft.sources.{KbArchive, WriteChaos}
 
 /** Speculative-execution chaos for the archive sink's commit protocol
@@ -38,14 +38,11 @@ import graft.sources.{KbArchive, WriteChaos}
   */
 object ChaosSpeculation {
 
-  private def fsOf(dir: String): FileSystem =
-    FileSystem.get(new java.net.URI(dir), new Configuration())
-
   private def visible(dir: String): Set[String] =
-    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName).filterNot(Engine.hidden).toSet
+    Commit.fs(dir).listStatus(new Path(dir)).map(_.getPath.getName).filterNot(Engine.hidden).toSet
 
   private def stagingLeft(dir: String): Seq[String] =
-    fsOf(dir).listStatus(new Path(dir)).map(_.getPath.getName)
+    Commit.fs(dir).listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.startsWith("_staging")).toSeq
 
   def main(args: Array[String]): Unit = {
@@ -123,13 +120,13 @@ object ChaosSpeculation {
       }.view.mapValues(_.size).toMap
       require(partCounts == Map(0 -> 1, 1 -> 1, 2 -> 1, 3 -> 1),
         s"speculation: committed files per partition $partCounts != one each")
-      val fs = fsOf(out)
+      val fs = Commit.fs(out)
       manifest.foreach { e =>
         val p = new Path(out, e.name)
         require(fs.exists(p), s"speculation: manifest lists missing ${e.name}")
         require(fs.getFileStatus(p).getLen == e.bytes,
           s"speculation: ${e.name} size != manifest bytes")
-        require(KbArchive.md5Of(fs, p) == e.md5,
+        require(Commit.md5Of(fs, p) == e.md5,
           s"speculation: ${e.name} md5 mismatch")
       }
       require(visible(out) == manifest.map(_.name).toSet,

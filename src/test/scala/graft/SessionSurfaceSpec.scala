@@ -30,6 +30,10 @@ import scala.jdk.CollectionConverters._
   *     which takes the schema from one footer instead of Spark's one-task
   *     inference job; only the two `mergeSchema` reads (o13, s33) keep
   *     Spark's reader, because the footer merge is what they demonstrate.
+  *   - Commits: every staged file moves into place, and every manifest or
+  *     marker is published, through [[graft.sinks.Commit]], which checks
+  *     each rename and replaces small files atomically; it is also the one
+  *     place a `FileSystem` is opened from a bare `Configuration`.
   *   - Mains and registry reads: every main that runs registered queries
   *     picks, looks up, runs and counts them through [[SparkEntry.run]], so
   *     the list of mains is fixed and no other file reads the registry.
@@ -127,5 +131,10 @@ class SessionSurfaceSpec extends AnyFunSuite {
       .filterNot(_._1 == "Engine.scala").partition(_._2.contains("\"mergeSchema\""))
     assert(found.isEmpty, listing(found))
     assert(merging.size <= 2, listing(merging))
+  }
+
+  test("only Commit renames files or opens a FileSystem from a bare Configuration") {
+    val found = sites(l => l.contains(".rename(") || l.contains("FileSystem.get(new java.net.URI"))
+    assert(found.forall(_._1 == "Commit.scala"), listing(found))
   }
 }
